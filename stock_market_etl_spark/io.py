@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from stock_market_etl_spark.session import prepare_session
+from stock_market_etl_spark.session import prepare_session, shuffle_width
 
 TABLE_NAMES = (
     "region",
@@ -253,11 +253,10 @@ def write_clustered(
     balanced, no skew pin like hash-on-few-values); reads need no new
     API — the pruning is the ordinary scan's PushedFilters against
     better stats. Footer-band disjointness is asserted directly from
-    the files in tests/test_sinks.py.
+    the files in tests/test_sinks.py. ``num_files`` defaults to the
+    session's shuffle width (one file per core).
     """
-    n = num_files or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n = num_files or shuffle_width(df.sparkSession)
     (
         df.repartitionByRange(n, *[F.col(c) for c in cluster_cols])
         .sortWithinPartitions(*cluster_cols)
@@ -393,9 +392,7 @@ def write_zordered(
     key = zorder_key(
         F.col(col_a), F.col(col_b), a_min, a_max, b_min, b_max, bits
     )
-    n = num_files or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n = num_files or shuffle_width(df.sparkSession)
     (
         df.withColumn("__zkey", key)
         .repartitionByRange(n, F.col("__zkey"))

@@ -14,7 +14,10 @@ reads (the caller applies it after column pruning).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
+
+from stock_market_etl_spark.session import shuffle_width
 
 
 def fanout_width(df: DataFrame) -> int:
@@ -35,29 +38,20 @@ def fanout_width(df: DataFrame) -> int:
     this width to `repartition(width, key)`, whose REPARTITION_BY_NUM
     shuffle AQE never coalesces (user-pinned partition count).
 
-    Width = max(shuffle partitions, defaultParallelism): follows the
-    session's own scale knobs (cluster deployments raise both), never
-    a local constant. The trade documented at each call site: a
-    pinned width also opts the exchange out of AQE skew splitting,
+    Width = the session's shuffle width (``session.shuffle_width``,
+    sized to the cluster's cores unless the caller pinned it), never a
+    local constant. The trade documented at each call site: a pinned
+    width also opts the exchange out of AQE skew splitting,
     acceptable exactly where per-key work is bounded by construction
     (doc-grain keys, bin-grain keys with the bin_s skew knob).
     """
-    spark = df.sparkSession
-    try:
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:
-        sp = 200
-    try:
-        dp = int(spark.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect: no driver-side context
-        dp = 0
-    return max(sp, dp, 1)
+    return shuffle_width(df.sparkSession)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition up to ``min_partitions`` (default:
-    ``spark.sql.shuffle.partitions``) — only when the input is
-    narrower than that; wide inputs pass through untouched.
+    """Round-robin repartition up to ``min_partitions`` (default: the
+    session's shuffle width) — only when the input is narrower than
+    that; wide inputs pass through untouched.
 
     Width is estimated from ``df.inputFiles()`` (public API, works
     under Spark Connect — unlike ``df.rdd``, which forces a plan→RDD
@@ -69,14 +63,14 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     a guaranteed no-op. Non-file sources (in-memory test frames,
     streaming micro-batches) report zero files and always spread.
     """
-    spark = df.sparkSession
-    if min_partitions is not None:
-        target = min_partitions
-    else:
-        target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    target = (
+        shuffle_width(df.sparkSession)
+        if min_partitions is None
+        else min_partitions
+    )
     try:
         width = len(df.inputFiles())
-    except Exception:  # non-file source / analysis barrier
+    except AnalysisException:  # streaming source: no file listing
         width = 0
     if width >= target:
         return df

@@ -117,9 +117,12 @@ def interval_overlap_pairs(
     # floor achieved the same width but regressed 52/65 other bench
     # rows and is reverted; this pin scopes full parallelism to
     # exactly this exchange. Both join sides alias the same
-    # repartitioned frame, so the exchange is planned once and
-    # reused. Skew: a pinned width opts out of AQE skew splitting —
-    # per-bin fan-out is the operator's documented `bin_s` knob.
+    # repartitioned frame, but the compiled plan holds two separate
+    # exchanges (each with its own scan/explode upstream); whether
+    # the second is served from the first is up to AQE's runtime
+    # stage reuse. Skew: a pinned width opts out of AQE skew
+    # splitting — per-bin fan-out is the operator's documented
+    # `bin_s` knob.
     binned = intervals.withColumn(
         "__bin",
         F.explode(

@@ -831,7 +831,7 @@ def repetition_metrics(
     # 4.7 s executor time (r15 stage attribution). The r15 session-wide
     # 64k coalescing floor fixed this but regressed 52/65 other bench
     # rows; the pin scopes full parallelism to exactly this exchange
-    # (fanout_width tracks the session's own scale knobs). Skew note:
+    # (fanout_width is the session's core-sized shuffle width). Skew note:
     # per-key work is one document's grams, bounded by doc length.
     tokenized = docs.select(
         F.col(id_col),

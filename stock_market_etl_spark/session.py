@@ -2,9 +2,22 @@
 
 The engine is designed for a multi-executor cluster at ~100 TB scale but
 is exercised locally on ``local[N]``. Everything scale-relevant is
-expressed through session confs (AQE, shuffle partitions, broadcast
+expressed through session confs (AQE, shuffle width, broadcast
 threshold) rather than hand-scheduling, so the same logical plans run
 unchanged on a 1000-executor cluster.
+
+Shuffle width is sized to the cluster, never a constant: an explicit
+``shuffle_partitions`` argument wins, a width the session already
+carries (a deployment's ``spark-defaults``, a driver's own setting) is
+kept, and otherwise the width is the context's ``defaultParallelism``
+— its core count. :func:`shuffle_width` is the one read every
+width-sized layer uses (fan-out repartitions, clustered writes,
+``spread``). Batch plans lose nothing to a narrower width, since AQE
+coalesces and splits their shuffles at runtime; stateful streaming
+stages run without AQE and keep one state-store instance per shuffle
+partition, so there the width IS the task count of every micro-batch.
+A streaming checkpoint records the width it was created with and Spark
+restores it on restart, so existing checkpoints keep their width.
 
 Reference parity notes: the reference stamps UTC timestamps at ingest
 (`scripts/ingest_hourly.py:68`) and converts to US/Eastern only at
@@ -31,10 +44,6 @@ _RUNTIME_CONFS: dict[str, str] = {
     # Spark 4's ANSI mode raises instead. Pre-ANSI semantics (x/0 →
     # NULL) match the oracle and the reference.
     "spark.sql.ansi.enabled": "false",
-    # local[32]-sized shuffle width; AQE coalesces/splits at runtime so
-    # this is a ceiling, not a hand-tuned constant (cluster deployments
-    # override per executor count)
-    "spark.sql.shuffle.partitions": "32",
     # runtime re-planning: partition coalescing, skew-join splitting
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -65,11 +74,26 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session.
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width: the partition count of every
+    engine-sized exchange and clustered write, and the state-store
+    count of a newly created streaming checkpoint."""
+    return int(spark.conf.get(_WIDTH))
+
+
+def prepare_session(
+    spark: SparkSession, shuffle_partitions: int | None = None
+) -> SparkSession:
+    """Apply the engine's runtime confs and shuffle width to an
+    existing session.
 
     Safe to call repeatedly; used by ``__spark_entry__`` because the
-    driver owns session creation there.
+    driver owns session creation there. A driver's plain ``local[32]``
+    session gets width 32; a width already set on the session is kept
+    unless ``shuffle_partitions`` overrides it.
     """
     for k, v in _RUNTIME_CONFS.items():
         try:
@@ -78,6 +102,15 @@ def prepare_session(spark: SparkSession) -> SparkSession:
             # non-runtime-settable in some deployments; engine code
             # falls back where possible
             pass
+    if shuffle_partitions is None and spark.conf.get(_WIDTH, None) is None:
+        try:
+            shuffle_partitions = spark.sparkContext.defaultParallelism
+        except AttributeError:
+            # Spark Connect has no driver-side context; the server's
+            # width stands
+            pass
+    if shuffle_partitions is not None:
+        spark.conf.set(_WIDTH, str(shuffle_partitions))
     return spark
 
 
@@ -91,18 +124,16 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, falling
     back to ``local[*]``) so tests and bench share one entry point.
+    The shuffle width is ``shuffle_partitions`` when given, else the
+    started context's ``defaultParallelism`` (see :func:`prepare_session`).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else 32
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
@@ -113,4 +144,4 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate may have returned a pre-existing session; re-assert
-    return prepare_session(spark)
+    return prepare_session(spark, shuffle_partitions)

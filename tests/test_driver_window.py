@@ -176,6 +176,54 @@ def test_rehash_separates_tracer_drift_from_code_drift(
         pl.cmd_rehash(["another reason"])
 
 
+def _untouched_ledgered_query(queries: dict, ledger: dict) -> str:
+    """A ledgered query whose traced closure lies wholly in files with
+    no working-tree change against HEAD (c6_single_eq_filter when it
+    qualifies). Uncommitted edits to a shared module such as
+    ``session.py`` move every query that loads through it, so the
+    choice has to follow the tree."""
+    import inspect
+    import subprocess
+    from pathlib import Path
+
+    from tools.proof_ledger import _package_callables
+
+    repo = Path(__file__).resolve().parent.parent
+
+    def git_files(*args: str) -> set[Path]:
+        out = subprocess.run(
+            ["git", *args], cwd=repo, check=True, capture_output=True, text=True
+        ).stdout
+        return {(repo / line).resolve() for line in out.splitlines() if line}
+
+    dirty = git_files("diff", "--name-only", "HEAD") | git_files(
+        "ls-files", "--others", "--exclude-standard"
+    )
+
+    def closure_files(fn) -> set[Path]:
+        seen: set[str] = set()
+        files: set[Path] = set()
+        stack = [fn]
+        while stack:
+            f = stack.pop()
+            key = f"{f.__module__}.{f.__qualname__}"
+            if key in seen:
+                continue
+            seen.add(key)
+            try:
+                files.add(Path(inspect.getsourcefile(f)).resolve())
+            except TypeError:
+                continue
+            stack.extend(_package_callables(f))
+        return files
+
+    order = ["c6_single_eq_filter"] + [n for n in ledger if n in queries]
+    for name in order:
+        if name in ledger and not closure_files(queries[name]) & dirty:
+            return name
+    raise AssertionError("every ledgered query has uncommitted changes")
+
+
 def test_package_hashes_at_ref_measures_baseline_code():
     """The baseline measurement really runs the current tracer over
     a git ref's package code: for a ledgered query whose
@@ -188,9 +236,8 @@ def test_package_hashes_at_ref_measures_baseline_code():
     )
     from stock_market_etl_spark.catalog import all_oracles, all_queries
 
-    name = "c6_single_eq_filter"
-    assert name in load_ledger()
     q, o = all_queries(), all_oracles()
+    name = _untouched_ledgered_query(q, load_ledger())
     live = impl_hash(name, q, o)
     at_head = _package_hashes_at_ref("HEAD", [name])
     assert at_head == {name: live}

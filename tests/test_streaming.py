@@ -876,6 +876,66 @@ def test_ohlc_multibatch_matches_batch_twin(spark, sf_smoke, tmp_path):
     assert _rows(spark.table(name)) == _rows(want)
 
 
+def _checkpoint_width(ckpt: str) -> tuple[int, int]:
+    """(width recorded in the latest offset-log entry, state-store
+    partitions of stateful operator 0) of a streaming checkpoint."""
+    import json
+    import os
+
+    offsets = os.path.join(ckpt, "offsets")
+    latest = max(int(f) for f in os.listdir(offsets) if f.isdigit())
+    with open(os.path.join(offsets, str(latest))) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    state = os.path.join(ckpt, "state", "0")
+    parts = [d for d in os.listdir(state) if d.isdigit()]
+    return int(meta["conf"]["spark.sql.shuffle.partitions"]), len(parts)
+
+
+def test_checkpoint_keeps_its_width_across_a_width_change(
+    spark, sf_smoke, tmp_path
+):
+    """Upgrade path for the core-sized shuffle width: a bar checkpoint
+    created at width 32 resumes under a session of a different width
+    with no migration. Spark restores the width from the offset log,
+    so the resumed query keeps all 32 state partitions, and the bars
+    after the resume equal the batch twin. A checkpoint created under
+    the session's own width gets that many state partitions."""
+    import uuid
+
+    from stock_market_etl_spark.session import shuffle_width
+
+    ev = core.batch_events(spark, sf_smoke)
+    src = str(tmp_path / "arrivals")
+    width = shuffle_width(spark)
+
+    def drain(ckpt):
+        stream = core.ohlc_bars(core.stream_documents(spark, src))
+        name = f"ohlc_{uuid.uuid4().hex[:8]}"
+        core.run_available_now(stream, name, ckpt, output_mode="complete")
+        return name
+
+    old = str(tmp_path / "ckpt_w32")
+    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        drain(old)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    assert _checkpoint_width(old) == (32, 32)
+
+    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    resumed = drain(old)
+    want = _rows(core.ohlc_bars(ev))
+    assert _rows(spark.table(resumed)) == want
+    assert _checkpoint_width(old) == (32, 32)
+
+    fresh = str(tmp_path / "ckpt_fresh")
+    assert _rows(spark.table(drain(fresh))) == want
+    assert _checkpoint_width(fresh) == (width, width)
+
+
 def test_agg_partials_multibatch_and_redelivery(spark, sf_smoke, tmp_path):
     """n17's continuous aggregate forced through multiple micro-batches:
     merged partials must equal the full batch rollup for ANY batch

@@ -154,7 +154,7 @@ def main() -> int:
                     "label": args.label,
                     "query": name,
                     "sf": args.sf,
-                    "cpus": cpus,
+                    "cpus": int(cpus),
                     "build_s": round(t_build, 3),
                     "reps": rep_times,
                     "min_s": min(rep_times),
