@@ -104,6 +104,26 @@ DRIVER_WINDOW: tuple[str, ...] = (
 )
 
 
+def registry() -> tuple[dict[str, QueryFn], dict[str, str], Callable]:
+    """A catalog module's registration triple ``QUERIES, ORACLES, _q``:
+    two fresh dicts and the ``@_q(name, sql=None)`` decorator that
+    records a query fn (and its oracle SQL, when given) into them in
+    definition order — the order `all_queries` lists below the fold."""
+    queries: dict[str, QueryFn] = {}
+    oracles: dict[str, str] = {}
+
+    def _q(name: str, sql: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if sql is not None:
+                oracles[name] = sql
+            return fn
+
+        return deco
+
+    return queries, oracles, _q
+
+
 def all_queries() -> dict[str, QueryFn]:
     merged: dict[str, QueryFn] = {}
     for mod in _modules():

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from stock_market_etl_spark.catalog import _scratch
+from stock_market_etl_spark.catalog import _scratch, registry
 from stock_market_etl_spark.io import load_table
 from stock_market_etl_spark.operators import (
     dedup,
@@ -27,18 +27,7 @@ from stock_market_etl_spark.operators.text import (
     analyze,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _sql_list(words: list[str]) -> str:

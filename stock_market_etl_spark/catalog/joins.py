@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from stock_market_etl_spark.catalog import registry
 from stock_market_etl_spark.io import load_table
 from stock_market_etl_spark.operators import skew
 from stock_market_etl_spark.operators.asof import (
@@ -18,18 +19,7 @@ from stock_market_etl_spark.operators.asof import (
 )
 from stock_market_etl_spark.operators.range_join import binned_range_join
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(

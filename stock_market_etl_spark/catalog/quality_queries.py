@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from stock_market_etl_spark.catalog import registry
 from stock_market_etl_spark.io import load_table
 from stock_market_etl_spark.pipeline import (
     newer_than_watermark,
@@ -33,18 +34,7 @@ from stock_market_etl_spark.pipeline import (
 )
 from stock_market_etl_spark.quality import dtype_mismatches, missing_columns
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 #: Deliberate contract for the K1/K2 audit: the events table's real

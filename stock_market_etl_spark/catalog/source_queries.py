@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from stock_market_etl_spark.catalog import _scratch
+from stock_market_etl_spark.catalog import _scratch, registry
 from stock_market_etl_spark.sources.dimension import (
     SAMPLE_HTML,
     SP500_SCHEMA,
@@ -21,18 +21,7 @@ from stock_market_etl_spark.sources.dimension import (
 )
 from stock_market_etl_spark.sources.market_source import MarketDataSource
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q("a3_python_datasource")

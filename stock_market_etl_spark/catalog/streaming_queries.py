@@ -12,21 +12,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from stock_market_etl_spark.catalog import _scratch
+from stock_market_etl_spark.catalog import _scratch, registry
 from stock_market_etl_spark.streaming import core
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(

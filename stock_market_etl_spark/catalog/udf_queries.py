@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from stock_market_etl_spark.catalog import registry
 from stock_market_etl_spark.functions.udfs import (
     OhlcUnpivotUDTF,
     format_direction_pandas,
@@ -17,18 +18,7 @@ from stock_market_etl_spark.functions.udfs import (
 )
 from stock_market_etl_spark.io import load_table
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 _DR = """SELECT event_id, user_id,

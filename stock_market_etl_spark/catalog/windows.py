@@ -9,21 +9,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from stock_market_etl_spark.catalog import registry
 from stock_market_etl_spark.io import load_table
 from stock_market_etl_spark.operators.windows import latest_row_per_key
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLES[name] = sql
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # shared: per-user daily_return over events (F1, the reference's

@@ -6,8 +6,8 @@ natively (I9). This module exposes the three Spark extension points the
 engine supports, each demonstrated on reference semantics:
 
 - scalar ``pandas_udf`` (Arrow-batched, vectorized — the only acceptable
-  Python hot-path form; row-at-a-time ``@udf`` is shown once for API
-  completeness and deliberately NOT used in any data path);
+  Python hot-path form; row-at-a-time ``@udf`` appears only in its
+  Arrow-transported form, M8);
 - grouped-aggregate ``pandas_udf`` (UDAF);
 - PySpark 4 ``@udtf`` (table function).
 
@@ -41,9 +41,9 @@ def format_direction_pandas(dr: pd.Series) -> pd.Series:
 def signed_log_return_arrow(dr):
     """M8: ARROW-OPTIMIZED scalar @udf (``useArrow=True``, PySpark
     3.5+) — row-at-a-time Python logic with Arrow-batched transport:
-    the migration middle ground between the legacy pickled @udf (shown
-    below, never in data paths) and the fully vectorized pandas_udf
-    (M1). Computes the symmetric log return sign(dr)·ln(1+|dr|), a
+    the migration middle ground between the legacy pickled @udf
+    (never in data paths) and the fully vectorized pandas_udf (M1).
+    Computes the symmetric log return sign(dr)·ln(1+|dr|), a
     pure-SQL-expressible transform so the oracle checks that switching
     the serialization engine cannot change the answer."""
     import math
@@ -51,17 +51,6 @@ def signed_log_return_arrow(dr):
     if dr is None:
         return None
     return math.log1p(dr) if dr >= 0 else -math.log1p(-dr)
-
-
-@udf(T.StringType())
-def format_direction_rowwise(dr):
-    """Row-at-a-time twin of M1 — exists to document the API surface;
-    never used in catalog queries (UDFs are the slow path). No type
-    hints: a ``float | None`` union makes PySpark's eval-type inference
-    warn on every import."""
-    if dr is None or dr == 0:
-        return "FLAT"
-    return "UP" if dr > 0 else "DOWN"
 
 
 @pandas_udf(T.DoubleType())

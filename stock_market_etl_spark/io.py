@@ -10,7 +10,15 @@ key templating.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import datetime
+import hashlib
+import json
+import os
+import time
+import uuid
+from urllib.parse import unquote, urlparse
+
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from stock_market_etl_spark.session import prepare_session, shuffle_width
 
@@ -83,16 +91,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = canon_events_ts(df)
     return canon_timestamps(df)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for n, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(n)
 
 
 def write_partitioned(
@@ -197,7 +195,6 @@ def write_compacted(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = (),
-    max_records_per_file: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Small-files-controlled parquet write: the AQE REBALANCE hint
@@ -211,9 +208,7 @@ def write_compacted(
     scan pays listing + open cost per file (the classic small-files
     problem; compaction jobs exist to undo it after the fact). With
     ``partition_cols`` the rebalance keys on them, so each Hive
-    partition is written by as few tasks as its size needs;
-    ``max_records_per_file`` bounds the opposite failure (one giant
-    file no scan can split... parquet row groups aside).
+    partition is written by as few tasks as its size needs.
     """
     hinted = (
         df.hint("rebalance", *[F.col(c) for c in partition_cols])
@@ -221,8 +216,6 @@ def write_compacted(
         else df.hint("rebalance")
     )
     writer = hinted.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
@@ -292,23 +285,29 @@ def load_evolving(
     files are allowed to disagree.
     """
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    if expected is None:
-        return df
+    return df if expected is None else _conform(df, expected, "lake")
+
+
+def _conform(df: DataFrame, expected: T.StructType, where: str) -> DataFrame:
+    """Conform ``df`` to the contract schema ``expected``: missing
+    columns materialize as typed NULLs, extra columns drop, and a
+    type-drifted column is a loud TypeError naming ``where`` (the lake
+    or the snapshot read) — never a silent cast. Nullability
+    differences (incl. nested containsNull / valueContainsNull) are
+    data-compatible, never drift: BOTH sides are relaxed, the rule the
+    commit seam applies when merging manifest schemas
+    (`_merge_table_schema`), so a contract declaring e.g.
+    ``ArrayType(..., containsNull=False)`` still reads a table whose
+    recorded schema is nullability-relaxed."""
     have = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for field in expected.fields:
         got = have.get(field.name)
         if got is None:
-            cols.append(
-                F.lit(None).cast(field.dataType).alias(field.name)
-            )
+            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
         elif _nullable_type(got) != _nullable_type(field.dataType):
-            # nullability differences (incl. nested containsNull /
-            # valueContainsNull) are data-compatible, never drift —
-            # the same rule the commit seam applies when merging
-            # manifest schemas (_merge_table_schema)
             raise TypeError(
-                f"schema drift on {field.name!r}: lake has {got}, "
+                f"schema drift on {field.name!r}: {where} has {got}, "
                 f"contract wants {field.dataType} — refusing to cast "
                 "silently"
             )
@@ -406,12 +405,11 @@ def write_zordered(
 def _list_versions(table_path: str) -> list[int]:
     """Sorted committed snapshot versions of a manifest-versioned
     table — the ONE place the manifest naming scheme
-    (``_v{N}.manifest.json``) is parsed; every snapshot operation
-    (commit, compact, delete, merge, vacuum) discovers versions
-    through here so the scheme can never desynchronize between them.
-    Empty list if the table directory doesn't exist."""
-    import os
-
+    (``_v{N}.manifest.json``) is parsed, as `_manifest_path` is the one
+    place it is formatted; every snapshot operation (commit, compact,
+    delete, merge, vacuum) discovers versions through here so the
+    scheme can never desynchronize between them. Empty list if the
+    table directory doesn't exist."""
     if not os.path.isdir(table_path):
         return []
     return sorted(
@@ -427,6 +425,53 @@ def _latest_version(table_path: str) -> int:
     return versions[-1] if versions else 0
 
 
+def _manifest_path(table_path: str, version: int) -> str:
+    """Snapshot ``version``'s manifest file — the ONE place the
+    manifest filename is formatted (`_list_versions` parses it)."""
+    return os.path.join(table_path, f"_v{version}.manifest.json")
+
+
+def _read_manifest(table_path: str, version: int) -> dict:
+    """Snapshot ``version``'s manifest: ``{"version", "files"}`` plus
+    the optional ``txn``, ``schema``, ``stat_columns`` and ``stats``
+    (see `_commit_manifest`). A missing version raises
+    FileNotFoundError — never an empty snapshot."""
+    with open(_manifest_path(table_path, version)) as fh:
+        return json.load(fh)
+
+
+def _latest_manifest(
+    spark: SparkSession, table_path: str
+) -> tuple[int, dict, T.StructType]:
+    """(version, manifest, table schema) of the latest snapshot — the
+    starting point of every rewrite (compact, CoW delete, upsert); a
+    table with no committed snapshot is an error."""
+    prev = _latest_version(table_path)
+    if not prev:
+        raise ValueError(f"no committed snapshot under {table_path}")
+    manifest = _read_manifest(table_path, prev)
+    return prev, manifest, _manifest_schema(spark, manifest)
+
+
+def _write_data_files(
+    df: DataFrame, table_path: str, version: int
+) -> list[str]:
+    """Land ``df`` as new parquet files of snapshot ``version`` and
+    return their paths. Each call writes a fresh ``data/v{N}-{attempt}/``
+    directory (``mode("error")``: never into existing bytes), so a
+    re-commit after a crashed attempt can't collide with the crash's
+    orphans; nothing is visible until a manifest lists the files."""
+    data_dir = os.path.join(
+        table_path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
+    )
+    df.write.mode("error").parquet(data_dir)
+    return [
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    ]
+
+
 def _input_file_uri_to_path(uri: str) -> str:
     """Normalize a Spark ``input_file_name()`` value (a URL-encoded
     ``file:`` URI in local mode) back to an absolute filesystem path.
@@ -437,12 +482,8 @@ def _input_file_uri_to_path(uri: str) -> str:
     a copy-on-write delete would then no-op while still committing a
     "successful" new version. Decode first, compare on real paths.
     """
-    from urllib.parse import unquote, urlparse
-
     parsed = urlparse(uri)
     path = unquote(parsed.path) if parsed.scheme else unquote(uri)
-    import os
-
     return os.path.abspath(path)
 
 
@@ -454,8 +495,6 @@ def _resolve_hit_files(
     resolve to a manifest file: an unmapped hit means the URI↔path
     normalization broke, and proceeding would silently drop the delete/
     merge for those rows — fail loudly instead."""
-    import os
-
     hit_paths = {_input_file_uri_to_path(u) for u in hit_uris}
     by_path = {os.path.abspath(f): f for f in files}
     unmapped = hit_paths - set(by_path)
@@ -473,8 +512,6 @@ def _resolve_hit_files(
 def _stat_encode(v):
     """JSON-safe (tag, value) for a footer min/max value, or None for
     types we don't prune on."""
-    import datetime
-
     if isinstance(v, bool):  # bool is an int subclass — exclude first
         return None
     if isinstance(v, int):
@@ -496,8 +533,6 @@ def _stat_encode(v):
 
 
 def _stat_decode(tag: str, v):
-    import datetime
-
     if tag == "date":
         return datetime.date.fromisoformat(v)
     if tag == "ts":
@@ -633,29 +668,20 @@ def _predicate_expr(predicate: list[tuple]):
 
 
 def _carry_stats(
-    table_path: str,
-    prev: int,
+    prev_manifest: dict,
     kept_files: list[str],
     new_files: list[str],
     stat_columns: list[str] | None = None,
 ) -> tuple[dict | None, list[str] | None]:
     """Stats payload for a new manifest: inherit ``stat_columns`` from
-    the previous manifest unless given, CARRY the previous manifest's
-    per-file entries for files that survive by reference, and compute
-    footer stats for the new files. Returns (stats, stat_columns) —
-    (None, None) when the table doesn't record stats."""
-    import json
-    import os
-
-    prev_stats: dict = {}
-    if prev:
-        with open(
-            os.path.join(table_path, f"_v{prev}.manifest.json")
-        ) as fh:
-            m = json.load(fh)
-        prev_stats = m.get("stats", {})
-        if stat_columns is None:
-            stat_columns = m.get("stat_columns")
+    the previous manifest (``{}`` for a table's first commit) unless
+    given, CARRY the previous manifest's per-file entries for files that
+    survive by reference, and compute footer stats for the new files.
+    Returns (stats, stat_columns) — (None, None) when the table doesn't
+    record stats."""
+    prev_stats = prev_manifest.get("stats", {})
+    if stat_columns is None:
+        stat_columns = prev_manifest.get("stat_columns")
     if stat_columns is None:
         return None, None
     stats = {f: prev_stats[f] for f in kept_files if f in prev_stats}
@@ -672,8 +698,6 @@ def _nullable_type(dt):
     emits containsNull=false, the parquet read-back says true) are
     data-compatible — treating that as drift would wedge a streaming
     producer."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.ArrayType):
         return T.ArrayType(_nullable_type(dt.elementType), True)
     if isinstance(dt, T.MapType):
@@ -699,8 +723,6 @@ def _merge_table_schema(prev: "StructType | None", new: "StructType"):
     and nullability is relaxed recursively before comparing and
     storing (`_nullable_type` — nullability differences are
     data-compatible, never drift)."""
-    from pyspark.sql import types as T
-
     if prev is None:
         fields = []
         have = {}
@@ -732,8 +754,6 @@ def _manifest_schema(spark: SparkSession, manifest: dict):
     the manifest's file list. Every read path derives its schema
     here, so the result shape can never depend on predicate
     selectivity or footer sampling order."""
-    from pyspark.sql import types as T
-
     if "schema" in manifest:
         return T.StructType.fromJson(manifest["schema"])
     files = manifest["files"]
@@ -763,10 +783,6 @@ def _commit_manifest(
     silently lose the first commit. With link, the loser gets
     FileExistsError and must retry against the new latest version
     (optimistic-concurrency, the Iceberg/Delta commit protocol)."""
-    import json
-    import os
-    import uuid
-
     manifest = {"version": version, "files": sorted(files)}
     if txn is not None:
         manifest["txn"] = txn
@@ -788,7 +804,7 @@ def _commit_manifest(
     )
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
-    target = os.path.join(table_path, f"_v{version}.manifest.json")
+    target = _manifest_path(table_path, version)
     try:
         os.link(tmp, target)
     except FileExistsError:
@@ -811,9 +827,6 @@ def _commit_manifest(
 def _txn_marker_path(table_path: str, txn_id: str) -> str:
     """Marker filename for a txn id — hashed so arbitrary ids are
     path-safe; the marker itself verifies the full id."""
-    import hashlib
-    import os
-
     h = hashlib.md5(txn_id.encode()).hexdigest()[:16]
     return os.path.join(table_path, f"_txn-{h}.marker.json")
 
@@ -828,9 +841,6 @@ def _txn_version(table_path: str, txn_id: str) -> int | None:
     AFTER the manifest commit point, so a crash between the two can
     lose only the marker — the slow path (scan all manifests, one
     JSON read each) still finds the txn and idempotence holds."""
-    import json
-    import os
-
     marker = _txn_marker_path(table_path, txn_id)
     if os.path.exists(marker):
         with open(marker) as fh:
@@ -838,11 +848,8 @@ def _txn_version(table_path: str, txn_id: str) -> int | None:
         if m.get("txn") == txn_id:  # md5-prefix collision check
             return m["version"]
     for v in _list_versions(table_path):
-        with open(
-            os.path.join(table_path, f"_v{v}.manifest.json")
-        ) as fh:
-            if json.load(fh).get("txn") == txn_id:
-                return v
+        if _read_manifest(table_path, v).get("txn") == txn_id:
+            return v
     return None
 
 
@@ -902,40 +909,22 @@ def commit_snapshot(
     At 100 TB the manifest is file-grain metadata (KBs per thousand
     files) and commits are O(new files) — never a lake rewrite.
     """
-    import json
-    import os
-
-    import uuid
-
     if txn_id is not None:
         committed = _txn_version(table_path, txn_id)
         if committed is not None:
             return committed
     prev = _latest_version(table_path)
     version = prev + 1
-    files = []
-    prev_schema = None
-    if prev:
-        with open(
-            os.path.join(table_path, f"_v{prev}.manifest.json")
-        ) as fh:
-            prev_manifest = json.load(fh)
-        files = prev_manifest["files"]
-        prev_schema = _manifest_schema(spark, prev_manifest)
+    prev_manifest = _read_manifest(table_path, prev) if prev else {}
+    files = prev_manifest.get("files", [])
     # refuse type drift BEFORE any bytes land: a retyped column must
     # not pay a full data write (and leave orphan files) per attempt
-    schema = _merge_table_schema(prev_schema, df.schema)
-    data_dir = os.path.join(
-        table_path, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
+    schema = _merge_table_schema(
+        _manifest_schema(spark, prev_manifest) if prev else None, df.schema
     )
-    df.write.mode("error").parquet(data_dir)
-    new_files = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
+    new_files = _write_data_files(df, table_path, version)
     stats, stat_cols = _carry_stats(
-        table_path, prev, files, new_files, stat_columns
+        prev_manifest, files, new_files, stat_columns
     )
     try:
         _commit_manifest(
@@ -978,6 +967,23 @@ def _read_manifest_files(
     return spark.read.schema(schema).parquet(*files)
 
 
+def _read_pruned(
+    spark: SparkSession, manifest: dict, files: list[str], conds: list
+) -> DataFrame:
+    """Read ``files`` of ``manifest`` under the normalized predicate
+    ``conds``: drop the files whose recorded stats bands cannot match
+    (`_file_may_match`), scan the survivors in the snapshot schema,
+    and apply ``conds`` as the residual filter so results never depend
+    on the stats. A fully pruned read is the empty frame in the same
+    schema; no ``conds`` reads every file unfiltered."""
+    if not conds:
+        return _read_manifest_files(spark, manifest, files)
+    stats = manifest.get("stats", {})
+    pruned = [f for f in files if _file_may_match(stats.get(f), conds)]
+    df = _read_manifest_files(spark, manifest, pruned)
+    return df.where(_predicate_expr(conds)) if pruned else df
+
+
 def read_snapshot(
     spark: SparkSession,
     table_path: str,
@@ -1003,31 +1009,14 @@ def read_snapshot(
     files driver-side with zero tasks; parquet footer stats then skip
     row groups inside survivors. On a table without stats the
     predicate degrades to the plain filter."""
-    import json
-    import os
-
-    with open(
-        os.path.join(table_path, f"_v{version}.manifest.json")
-    ) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_path, version)
     conds = _normalize_predicate(predicate)
-    files = manifest["files"]
-    if not files:
+    if not manifest["files"]:
         raise ValueError(
             f"snapshot v{version} of {table_path} lists zero files — "
             "corrupt or hand-edited manifest?"
         )
-    if conds:
-        stats = manifest.get("stats", {})
-        pruned = [
-            f for f in files if _file_may_match(stats.get(f), conds)
-        ]
-        if not pruned:
-            return _read_manifest_files(spark, manifest, [])
-        return _read_manifest_files(spark, manifest, pruned).where(
-            _predicate_expr(conds)
-        )
-    return _read_manifest_files(spark, manifest, files)
+    return _read_pruned(spark, manifest, manifest["files"], conds)
 
 
 def read_snapshot_evolving(
@@ -1053,39 +1042,11 @@ def read_snapshot_evolving(
 
     Footer merging is metadata-only and scoped to the manifest's file
     list; column pruning and filter pushdown still reach the scan."""
-    import json
-    import os
-
-    with open(
-        os.path.join(table_path, f"_v{version}.manifest.json")
-    ) as fh:
-        manifest = json.load(fh)
+    manifest = _read_manifest(table_path, version)
     df = _read_manifest_files(spark, manifest, manifest["files"])
     if expected is None:
         return df
-    have = {f.name: f.dataType for f in df.schema.fields}
-    cols = []
-    for field in expected.fields:
-        got = have.get(field.name)
-        if got is None:
-            cols.append(
-                F.lit(None).cast(field.dataType).alias(field.name)
-            )
-        elif _nullable_type(got) != _nullable_type(field.dataType):
-            # relax BOTH sides: _merge_table_schema stores the
-            # manifest schema nullability-relaxed, so an exact
-            # compare would reject any contract declaring e.g.
-            # ArrayType(..., containsNull=False) — the read seam
-            # must apply the commit seam's nullability-is-not-drift
-            # rule (ADVICE r11)
-            raise TypeError(
-                f"schema drift on {field.name!r}: snapshot v{version} "
-                f"has {got}, contract wants {field.dataType} — "
-                "refusing to cast silently"
-            )
-        else:
-            cols.append(F.col(field.name))
-    return df.select(*cols)
+    return _conform(df, expected, f"snapshot v{version}")
 
 
 def read_increment(
@@ -1113,40 +1074,25 @@ def read_increment(
     (not an error — an increment that exists but contains nothing
     matching is a normal selective-consumer outcome, unlike a
     nonexistent increment, which still raises)."""
-    import json
-    import os
-
-    def _manifest(v: int) -> dict:
-        with open(
-            os.path.join(table_path, f"_v{v}.manifest.json")
-        ) as fh:
-            return json.load(fh)
-
-    to_manifest = _manifest(to_version)
+    to_manifest = _read_manifest(table_path, to_version)
     from_files = (
-        set(_manifest(from_version)["files"]) if from_version else set()
+        set(_read_manifest(table_path, from_version)["files"])
+        if from_version
+        else set()
     )
     new = sorted(set(to_manifest["files"]) - from_files)
     if not new:
         raise ValueError(
             f"no files added between v{from_version} and v{to_version}"
         )
-    conds = _normalize_predicate(predicate)
-    if conds:
-        stats = to_manifest.get("stats", {})
-        pruned = [f for f in new if _file_may_match(stats.get(f), conds)]
-        if not pruned:
-            return _read_manifest_files(spark, to_manifest, [])
-        return _read_manifest_files(spark, to_manifest, pruned).where(
-            _predicate_expr(conds)
-        )
-    return _read_manifest_files(spark, to_manifest, new)
+    return _read_pruned(
+        spark, to_manifest, new, _normalize_predicate(predicate)
+    )
 
 
 def compact_snapshot(
     spark: SparkSession,
     table_path: str,
-    max_records_per_file: int | None = None,
     num_files: int | None = None,
 ) -> int:
     """Small-file COMPACTION as a new snapshot on a manifest-versioned
@@ -1172,52 +1118,23 @@ def compact_snapshot(
     cost every compactor pays — but zero manifest-history rewrites and
     no reader downtime. Returns the new version number.
     """
-    import json
-    import os
-    import uuid as _uuid
-
-    prev = _latest_version(table_path)
-    if not prev:
-        raise ValueError(f"no committed snapshot under {table_path}")
-    with open(
-        os.path.join(table_path, f"_v{prev}.manifest.json")
-    ) as fh:
-        prev_manifest = json.load(fh)
-    files = prev_manifest["files"]
-    table_schema = _manifest_schema(spark, prev_manifest)
-
+    prev, prev_manifest, table_schema = _latest_manifest(spark, table_path)
     version = prev + 1
     # read in the TABLE schema (manifest-recorded), not a footer
     # sample: compacting an evolved table must rewrite every row in
     # the full table shape or the rewrite silently drops late-added
     # columns from pre-evolution files' rows
     df = _read_manifest_files(
-        spark, prev_manifest, files, schema=table_schema
+        spark, prev_manifest, prev_manifest["files"], schema=table_schema
     )
     # repartition, NOT coalesce: coalesce on top of the rebalance hint
     # collapses the AQE-rebalanced partitions through a narrow
     # dependency — undoing the size balancing AND capping the read
     # side's parallelism at num_files. A full shuffle keeps the scan
     # wide and sizes the write side independently.
-    if num_files:
-        df = df.repartition(num_files)
-    else:
-        df = df.hint("rebalance")
-    data_dir = os.path.join(
-        table_path, "data", f"v{version}-{_uuid.uuid4().hex[:8]}"
-    )
-    writer = df.write.mode("error")
-    if max_records_per_file:
-        writer = writer.option(
-            "maxRecordsPerFile", str(max_records_per_file)
-        )
-    writer.parquet(data_dir)
-    new_files = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    stats, stat_cols = _carry_stats(table_path, prev, [], new_files)
+    df = df.repartition(num_files) if num_files else df.hint("rebalance")
+    new_files = _write_data_files(df, table_path, version)
+    stats, stat_cols = _carry_stats(prev_manifest, [], new_files)
     _commit_manifest(
         table_path,
         version,
@@ -1274,10 +1191,6 @@ def vacuum_snapshots(
     directory walk — no Spark job, no data read, O(files) regardless
     of table bytes.
     """
-    import json
-    import os
-    import time
-
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
     versions = _list_versions(table_path)
@@ -1286,14 +1199,10 @@ def vacuum_snapshots(
     kept = versions[-keep_versions:]
     dropped = versions[: -keep_versions] if keep_versions < len(versions) else []
 
-    def _files(v: int) -> set[str]:
-        with open(
-            os.path.join(table_path, f"_v{v}.manifest.json")
-        ) as fh:
-            return set(json.load(fh)["files"])
-
     live = {
-        os.path.abspath(f) for v in kept for f in _files(v)
+        os.path.abspath(f)
+        for v in kept
+        for f in _read_manifest(table_path, v)["files"]
     }
     # every file under data/ not referenced by a retained manifest —
     # covers dropped versions' exclusive files AND crash-orphaned
@@ -1335,9 +1244,7 @@ def vacuum_snapshots(
                     os.remove(os.path.join(dirpath, e))
                 os.rmdir(dirpath)
         for v in dropped:
-            os.remove(
-                os.path.join(table_path, f"_v{v}.manifest.json")
-            )
+            os.remove(_manifest_path(table_path, v))
         # txn markers hard-link manifest inodes, so a dropped
         # manifest's marker would keep answering with a vacuumed
         # version — drop markers below the retention floor too
@@ -1375,20 +1282,8 @@ def delete_where_snapshot(
     files before any row decodes); the rewrite is O(files-with-
     matches). A delete touching 1 of 10⁶ files rewrites one file.
     """
-    import json
-    import os
-    import uuid as _uuid
-
-    prev = _latest_version(table_path)
-    if not prev:
-        raise ValueError(f"no committed snapshot under {table_path}")
-    with open(
-        os.path.join(table_path, f"_v{prev}.manifest.json")
-    ) as fh:
-        prev_manifest = json.load(fh)
+    prev, prev_manifest, table_schema = _latest_manifest(spark, table_path)
     files = prev_manifest["files"]
-    table_schema = _manifest_schema(spark, prev_manifest)
-
     hit = F.coalesce(condition, F.lit(False))
     # table-schema reads (manifest-recorded): the rewrite of an
     # evolved table must keep rows in the full table shape, and the
@@ -1407,22 +1302,11 @@ def delete_where_snapshot(
     version = prev + 1
     new_files: list[str] = []
     if rewrite:
-        survivors = (
-            _read_manifest_files(
-                spark, prev_manifest, rewrite, schema=table_schema
-            )
-            .filter(~hit)
-        )
-        data_dir = os.path.join(
-            table_path, "data", f"v{version}-{_uuid.uuid4().hex[:8]}"
-        )
-        survivors.write.mode("error").parquet(data_dir)
-        new_files = [
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-    stats, stat_cols = _carry_stats(table_path, prev, keep, new_files)
+        survivors = _read_manifest_files(
+            spark, prev_manifest, rewrite, schema=table_schema
+        ).filter(~hit)
+        new_files = _write_data_files(survivors, table_path, version)
+    stats, stat_cols = _carry_stats(prev_manifest, keep, new_files)
     _commit_manifest(
         table_path,
         version,
@@ -1460,20 +1344,8 @@ def upsert_snapshot(
     the rewrite is O(files-with-matches) + O(updates) — an increment
     touching 1 of 10⁶ files rewrites one file, never the lake.
     """
-    import json
-    import os
-    import uuid as _uuid
-
-    prev = _latest_version(table_path)
-    if not prev:
-        raise ValueError(f"no committed snapshot under {table_path}")
-    with open(
-        os.path.join(table_path, f"_v{prev}.manifest.json")
-    ) as fh:
-        prev_manifest = json.load(fh)
+    prev, prev_manifest, table_schema = _latest_manifest(spark, table_path)
     files = prev_manifest["files"]
-    table_schema = _manifest_schema(spark, prev_manifest)
-
     # refuse type drift BEFORE any scan or write happens (the
     # commit_snapshot rule: a retyped update column must not pay the
     # rewrite and leave orphans per attempt)
@@ -1492,26 +1364,13 @@ def upsert_snapshot(
     keep, rewrite = _resolve_hit_files(hit_uris, files, "upsert_snapshot")
     version = prev + 1
     new_files: list[str] = []
-
-    def _write(df: DataFrame) -> None:
-        data_dir = os.path.join(
-            table_path, "data", f"v{version}-{_uuid.uuid4().hex[:8]}"
-        )
-        df.write.mode("error").parquet(data_dir)
-        new_files.extend(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-
     if rewrite:
-        _write(
-            _read_manifest_files(
-                spark, prev_manifest, rewrite, schema=table_schema
-            ).join(key_rows, list(keys), "left_anti")
-        )
-    _write(updates)
-    stats, stat_cols = _carry_stats(table_path, prev, keep, new_files)
+        survivors = _read_manifest_files(
+            spark, prev_manifest, rewrite, schema=table_schema
+        ).join(key_rows, list(keys), "left_anti")
+        new_files = _write_data_files(survivors, table_path, version)
+    new_files += _write_data_files(updates, table_path, version)
+    stats, stat_cols = _carry_stats(prev_manifest, keep, new_files)
     _commit_manifest(
         table_path,
         version,

@@ -52,25 +52,6 @@ def rolling_stddev(
     return F.when(n >= 2, F.stddev_samp(value_col).over(w))
 
 
-def cumulative_product(
-    part_col: str, order_col: str, value_col: str
-) -> Column:
-    """F3: cumulative product per partition (growth curve).
-
-    Reference: ``cumprod(1 + daily_return)`` (`scripts/app.py:46-52`).
-    Uses ``F.product`` (Spark ≥3.2) directly — unlike the
-    exp(sum(log(x))) identity it is exact for zero and negative
-    factors (log(x≤0) is NULL, which sum() skips, silently treating
-    the factor as 1).
-    """
-    w = (
-        Window.partitionBy(part_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return F.product(F.col(value_col)).over(w)
-
-
 def latest_row_per_key(
     df: DataFrame, part_col: str, order_col: str
 ) -> DataFrame:

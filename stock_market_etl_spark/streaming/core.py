@@ -22,6 +22,7 @@ import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 # the single home of the PATH_NOT_FOUND classification lives with
 # the other artifact-seam helpers (review r15, second move — batch
@@ -328,12 +329,26 @@ def batch_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _drain(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Run a prepared ``writer`` as one availableNow drain against
+    ``checkpoint`` and block until the source is exhausted — the ONE
+    trigger/checkpoint discipline every sink here shares. Returns the
+    finished query (``recentProgress`` carries per-batch stats)."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def run_available_now(
     stream_df: DataFrame,
     sink_table: str,
     checkpoint: str,
     output_mode: str = "append",
-):
+) -> StreamingQuery:
     """Drain the whole source with availableNow and stop — the testable
     micro-batch form (the reference's cron tick, but offset-tracked).
 
@@ -343,16 +358,12 @@ def run_available_now(
     ``complete`` mode; production append sinks accept the
     horizon-lagged emission (that lag IS the late-data guarantee).
     """
-    q = (
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(sink_table)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return q
+    return _drain(writer, checkpoint)
 
 
 def upsert_sink(
@@ -382,14 +393,7 @@ def upsert_sink(
             merged = batch_df
         merged.write.mode("overwrite").parquet(lake_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_df.writeStream.foreachBatch(merge_batch), checkpoint)
 
 
 def stream_documents(
@@ -507,14 +511,9 @@ def dedup_ingest_sink(
             corpus_path
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_docs.writeStream.foreachBatch(ingest_batch), checkpoint
     )
-    q.awaitTermination()
-    return q
 
 
 def enrich_with_dim(
@@ -587,14 +586,9 @@ def ivf_append_sink(
             "append"
         ).partitionBy("__cell").parquet(cells_path)
 
-    q = (
-        stream_vecs.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_vecs.writeStream.foreachBatch(append_batch), checkpoint
     )
-    q.awaitTermination()
-    return q
 
 
 def substring_gate_sink(
@@ -700,14 +694,7 @@ def _span_gate_sink(
             fresh, flag_spans(fresh), text_col=text_col, id_col=id_col
         ).write.mode("append").parquet(out_path)
 
-    q = (
-        stream_docs.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_docs.writeStream.foreachBatch(gate_batch), checkpoint)
 
 
 def decontamination_gate_sink(
@@ -957,14 +944,7 @@ def embedding_gate_sink(
         finally:
             fresh.unpersist()
 
-    q = (
-        stream_vecs.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain(stream_vecs.writeStream.foreachBatch(gate_batch), checkpoint)
 
 
 def daily_rollup(events: DataFrame) -> DataFrame:
@@ -984,7 +964,7 @@ def daily_rollup(events: DataFrame) -> DataFrame:
 
 def agg_partials_sink(
     stream_df: DataFrame, lake_path: str, checkpoint: str
-) -> None:
+) -> StreamingQuery:
     """Streaming CONTINUOUS AGGREGATE with idempotent partials: each
     micro-batch writes its own daily_rollup under ``batch_id=N``
     (OVERWRITE — a redelivered batch replaces its own partials
@@ -1003,13 +983,7 @@ def agg_partials_sink(
             os.path.join(lake_path, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint)
 
 
 def read_agg_state(spark: SparkSession, lake_path: str) -> DataFrame:
@@ -1222,15 +1196,8 @@ def jdbc_serving_sink(
                 )
             writer.jdbc(url, table, properties=properties or {})
 
-    q = (
-        stream_agg.writeStream.foreachBatch(serve_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    writer = stream_agg.writeStream.foreachBatch(serve_batch)
+    return _drain(writer.outputMode("update"), checkpoint)
 
 
 def snapshot_lake_sink(
@@ -1239,7 +1206,7 @@ def snapshot_lake_sink(
     checkpoint: str,
     stat_columns: list[str] | None = None,
     legacy_txn_compat: bool = False,
-) -> None:
+) -> StreamingQuery:
     """Streaming → MANIFEST-VERSIONED lake: every micro-batch commits
     as its own snapshot (`io.commit_snapshot` with the batch id as the
     idempotency txn), marrying b14's exactly-once discipline with the
@@ -1318,13 +1285,7 @@ def snapshot_lake_sink(
             stat_columns=stat_columns,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint)
 
 
 def lake_batch_sink(
@@ -1332,7 +1293,7 @@ def lake_batch_sink(
     lake_path: str,
     checkpoint: str,
     date_col: str = "ts",
-) -> None:
+) -> StreamingQuery:
     """Exactly-once streaming → partitioned-lake writer: each
     micro-batch lands under its own ``batch_id=N`` directory (inner
     partitioning by event date) with OVERWRITE mode, so a redelivered
@@ -1353,13 +1314,7 @@ def lake_batch_sink(
             .parquet(os.path.join(lake_path, f"batch_id={batch_id}"))
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint)
 
 
 def drift_monitor_sink(
@@ -1369,7 +1324,7 @@ def drift_monitor_sink(
     baseline_path: str,
     text_col: str = "text",
     group_col: str = "source",
-) -> None:
+) -> StreamingQuery:
     """Streaming DRIFT MONITOR — x80's PSI gate run on arrival against
     a frozen baseline release (the b25 → n19 lifecycle applied to
     score distributions): each micro-batch's documents are
@@ -1395,8 +1350,6 @@ def drift_monitor_sink(
     rebuild — maintaining it inside the per-batch path would make
     PSI self-referential (every batch folded in drags the baseline
     toward the drift it should be flagging)."""
-    import os
-
     from stock_market_etl_spark.operators.importance import (
         psi_vs_baseline,
         read_score_histogram,
@@ -1423,10 +1376,6 @@ def drift_monitor_sink(
             os.path.join(out_path, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream_docs.writeStream.foreachBatch(monitor_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_docs.writeStream.foreachBatch(monitor_batch), checkpoint
     )
-    q.awaitTermination()

@@ -176,12 +176,15 @@ def test_rehash_separates_tracer_drift_from_code_drift(
         pl.cmd_rehash(["another reason"])
 
 
-def _untouched_ledgered_query(queries: dict, ledger: dict) -> str:
-    """A ledgered query whose traced closure lies wholly in files with
-    no working-tree change against HEAD (c6_single_eq_filter when it
-    qualifies). Uncommitted edits to a shared module such as
-    ``session.py`` move every query that loads through it, so the
-    choice has to follow the tree."""
+def _tree_ref_and_query(queries: dict, ledger: dict) -> tuple[str, str]:
+    """A git ref holding the working tree's tracked files, and a
+    ledgered query whose traced closure lies wholly in files with no
+    change against that ref (c6_single_eq_filter when it qualifies).
+    ``git stash create`` commits the staged and unstaged edits without
+    touching the tree or the stash list, and prints nothing on a clean
+    tree (the ref is then HEAD). Measuring at HEAD instead would need a
+    query untouched since HEAD, and an uncommitted edit to a module
+    every query loads through (``io.py``) leaves none."""
     import inspect
     import subprocess
     from pathlib import Path
@@ -190,13 +193,24 @@ def _untouched_ledgered_query(queries: dict, ledger: dict) -> str:
 
     repo = Path(__file__).resolve().parent.parent
 
-    def git_files(*args: str) -> set[Path]:
-        out = subprocess.run(
+    def git(*args: str) -> str:
+        return subprocess.run(
             ["git", *args], cwd=repo, check=True, capture_output=True, text=True
         ).stdout
-        return {(repo / line).resolve() for line in out.splitlines() if line}
 
-    dirty = git_files("diff", "--name-only", "HEAD") | git_files(
+    def git_files(*args: str) -> set[Path]:
+        return {(repo / line).resolve() for line in git(*args).splitlines() if line}
+
+    # the snapshot commit needs a committer identity whatever the host's config
+    ref = (
+        git(
+            "-c", "user.name=proof-ledger-test",
+            "-c", "user.email=proof-ledger-test@localhost",
+            "stash", "create",
+        ).strip()
+        or "HEAD"
+    )
+    dirty = git_files("diff", "--name-only", ref) | git_files(
         "ls-files", "--others", "--exclude-standard"
     )
 
@@ -220,15 +234,15 @@ def _untouched_ledgered_query(queries: dict, ledger: dict) -> str:
     order = ["c6_single_eq_filter"] + [n for n in ledger if n in queries]
     for name in order:
         if name in ledger and not closure_files(queries[name]) & dirty:
-            return name
-    raise AssertionError("every ledgered query has uncommitted changes")
+            return ref, name
+    raise AssertionError("every ledgered query reaches an untracked file")
 
 
 def test_package_hashes_at_ref_measures_baseline_code():
     """The baseline measurement really runs the current tracer over
     a git ref's package code: for a ledgered query whose
-    implementation is untouched in the working tree, the HEAD
-    measurement equals the live one."""
+    implementation the ref holds unchanged, the measurement at the
+    ref equals the live one."""
     from tools.proof_ledger import (
         _package_hashes_at_ref,
         impl_hash,
@@ -237,7 +251,7 @@ def test_package_hashes_at_ref_measures_baseline_code():
     from stock_market_etl_spark.catalog import all_oracles, all_queries
 
     q, o = all_queries(), all_oracles()
-    name = _untouched_ledgered_query(q, load_ledger())
+    ref, name = _tree_ref_and_query(q, load_ledger())
     live = impl_hash(name, q, o)
-    at_head = _package_hashes_at_ref("HEAD", [name])
-    assert at_head == {name: live}
+    at_ref = _package_hashes_at_ref(ref, [name])
+    assert at_ref == {name: live}
