@@ -667,28 +667,6 @@ def _predicate_expr(predicate: list[tuple]):
     return expr
 
 
-def _carry_stats(
-    prev_manifest: dict,
-    kept_files: list[str],
-    new_files: list[str],
-    stat_columns: list[str] | None = None,
-) -> tuple[dict | None, list[str] | None]:
-    """Stats payload for a new manifest: inherit ``stat_columns`` from
-    the previous manifest (``{}`` for a table's first commit) unless
-    given, CARRY the previous manifest's per-file entries for files that
-    survive by reference, and compute footer stats for the new files.
-    Returns (stats, stat_columns) — (None, None) when the table doesn't
-    record stats."""
-    prev_stats = prev_manifest.get("stats", {})
-    if stat_columns is None:
-        stat_columns = prev_manifest.get("stat_columns")
-    if stat_columns is None:
-        return None, None
-    stats = {f: prev_stats[f] for f in kept_files if f in prev_stats}
-    stats.update(_collect_file_stats(new_files, list(stat_columns)))
-    return stats, list(stat_columns)
-
-
 def _nullable_type(dt):
     """``dt`` with nullability relaxed RECURSIVELY (array containsNull,
     map valueContainsNull, nested struct fields): the table-level
@@ -770,20 +748,29 @@ def _manifest_schema(spark: SparkSession, manifest: dict):
 def _commit_manifest(
     table_path: str,
     version: int,
-    files: list[str],
+    kept: list[str],
+    new_files: list[str] = (),
+    prev_manifest: dict | None = None,
     txn: str | None = None,
-    stats: dict | None = None,
     stat_columns: list[str] | None = None,
     schema=None,
 ) -> None:
-    """Atomically publish ``_v{version}.manifest.json``. The commit
-    point is an ``os.link`` create-if-absent (POSIX ``link(2)`` fails
-    with EEXIST if the target exists), NOT a bare rename — ``rename(2)``
-    clobbers, so two concurrent writers that both computed prev=N would
-    silently lose the first commit. With link, the loser gets
-    FileExistsError and must retry against the new latest version
-    (optimistic-concurrency, the Iceberg/Delta commit protocol)."""
-    manifest = {"version": version, "files": sorted(files)}
+    """Atomically publish ``_v{version}.manifest.json`` listing the
+    files ``kept`` by reference from ``prev_manifest`` plus
+    ``new_files``. Stats: ``stat_columns`` is inherited from the
+    previous manifest unless given (none for a table's first commit,
+    ``prev_manifest`` omitted); kept files CARRY their recorded
+    entries and new files get footer stats.
+
+    The commit point is an ``os.link`` create-if-absent (POSIX
+    ``link(2)`` fails with EEXIST if the target exists), NOT a bare
+    rename — ``rename(2)`` clobbers, so two concurrent writers that
+    both computed prev=N would silently lose the first commit. With
+    link, the loser gets FileExistsError and must retry against the
+    new latest version (optimistic-concurrency, the Iceberg/Delta
+    commit protocol)."""
+    prev_manifest = prev_manifest or {}
+    manifest = {"version": version, "files": sorted([*kept, *new_files])}
     if txn is not None:
         manifest["txn"] = txn
     if schema is not None:
@@ -791,14 +778,19 @@ def _commit_manifest(
         # types strict) — reads plan against THIS, never a footer
         # sample, so result shape can't vary with file pruning
         manifest["schema"] = schema.jsonValue()
+    if stat_columns is None:
+        stat_columns = prev_manifest.get("stat_columns")
     if stat_columns is not None:
         # file-grain data-skipping statistics (Iceberg manifest
         # lower/upper bounds reduced to load-bearing parts): which
         # columns this table records, and per-file min/max bands —
         # read_snapshot(predicate=...) prunes files on these before
         # any scan plans
+        prev_stats = prev_manifest.get("stats", {})
+        stats = {f: prev_stats[f] for f in kept if f in prev_stats}
+        stats.update(_collect_file_stats(new_files, list(stat_columns)))
         manifest["stat_columns"] = list(stat_columns)
-        manifest["stats"] = stats or {}
+        manifest["stats"] = stats
     tmp = os.path.join(
         table_path, f"._v{version}.{uuid.uuid4().hex[:8]}.tmp"
     )
@@ -923,17 +915,15 @@ def commit_snapshot(
         _manifest_schema(spark, prev_manifest) if prev else None, df.schema
     )
     new_files = _write_data_files(df, table_path, version)
-    stats, stat_cols = _carry_stats(
-        prev_manifest, files, new_files, stat_columns
-    )
     try:
         _commit_manifest(
             table_path,
             version,
-            files + new_files,
+            files,
+            new_files,
+            prev_manifest,
             txn=txn_id,
-            stats=stats,
-            stat_columns=stat_cols,
+            stat_columns=stat_columns,
             schema=schema,
         )
     except RuntimeError:
@@ -1134,13 +1124,12 @@ def compact_snapshot(
     # wide and sizes the write side independently.
     df = df.repartition(num_files) if num_files else df.hint("rebalance")
     new_files = _write_data_files(df, table_path, version)
-    stats, stat_cols = _carry_stats(prev_manifest, [], new_files)
     _commit_manifest(
         table_path,
         version,
+        [],
         new_files,
-        stats=stats,
-        stat_columns=stat_cols,
+        prev_manifest,
         schema=table_schema,
     )
     return version
@@ -1306,13 +1295,12 @@ def delete_where_snapshot(
             spark, prev_manifest, rewrite, schema=table_schema
         ).filter(~hit)
         new_files = _write_data_files(survivors, table_path, version)
-    stats, stat_cols = _carry_stats(prev_manifest, keep, new_files)
     _commit_manifest(
         table_path,
         version,
-        keep + new_files,
-        stats=stats,
-        stat_columns=stat_cols,
+        keep,
+        new_files,
+        prev_manifest,
         schema=table_schema,
     )
     return version
@@ -1370,13 +1358,12 @@ def upsert_snapshot(
         ).join(key_rows, list(keys), "left_anti")
         new_files = _write_data_files(survivors, table_path, version)
     new_files += _write_data_files(updates, table_path, version)
-    stats, stat_cols = _carry_stats(prev_manifest, keep, new_files)
     _commit_manifest(
         table_path,
         version,
-        keep + new_files,
-        stats=stats,
-        stat_columns=stat_cols,
+        keep,
+        new_files,
+        prev_manifest,
         schema=merged_schema,
     )
     return version

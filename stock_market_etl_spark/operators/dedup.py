@@ -751,10 +751,10 @@ def write_corpus_signatures(
     IDENTITY — batch-side signatures computed under any other family
     land in disjoint band buckets and silently find no candidates —
     so they land in a meta sidecar `read_corpus_signatures` returns
-    and `incremental_dedup` validates (review r15). The sidecar is
-    EMPTIED before the three data writes and restored LAST, so a
-    rebuild crash anywhere between them reads as the malformed-meta
-    refusal instead of mixed-release halves that dedup wrongly."""
+    and `incremental_dedup` validates (review r15). Written under the
+    `artifacts` release protocol: a rebuild crash between the three
+    data writes reads as the malformed-meta refusal, not as
+    mixed-release halves that dedup wrongly."""
     hashes, shingles, bands = corpus_signatures(
         corpus,
         text_col=text_col,
@@ -763,16 +763,14 @@ def write_corpus_signatures(
         seed=seed,
         rows_per_band=rows_per_band,
     )
-    spark = corpus.sparkSession
-    meta_schema = "num_hashes int, seed int, rows_per_band int"
-    artifacts.invalidate_meta(spark, path, meta_schema)
-    hashes.write.mode("overwrite").parquet(f"{path}/hashes")
-    shingles.write.mode("overwrite").parquet(f"{path}/shingles")
-    bands.write.mode("overwrite").parquet(f"{path}/bands")
-    spark.createDataFrame(
-        [(int(num_hashes), int(seed), int(rows_per_band))],
-        meta_schema,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    artifacts.write_release(
+        corpus.sparkSession,
+        path,
+        {"hashes": hashes, "shingles": shingles, "bands": bands},
+        "num_hashes int, seed int, rows_per_band int",
+        (num_hashes, seed, rows_per_band),
+        "overwrite",
+    )
     # minhash_tables persists its outputs for multi-consumer plans;
     # after a write-through there are no further consumers.
     for df in (shingles, bands):
@@ -1844,56 +1842,28 @@ def write_bloom_index(
     one-row meta sidecar, all four validated on read — they are the
     filter's identity exactly as dim is the vector artifact's
     (probing at another k or folding at another (m, j) turns every
-    membership test into noise). An in-place rebuild (the default
-    ``overwrite`` mode) EMPTIES the meta sidecar before touching the
-    bitmap (review r15): without that, a crash between the two
-    writes leaves the new bitmap under the stale meta — silently
-    accepted whenever the geometries happen to match — instead of
-    the loud malformed-meta refusal every crash window now reads
-    as."""
+    membership test into noise). ``mode`` is the `artifacts` release
+    protocol's: ``overwrite`` rebuilds in place, ``error`` publishes
+    write-once."""
     bitmap, m, j, n, k = bloom
-    if mode == "overwrite":
-        artifacts.invalidate_meta(
-            spark, path, "m bigint, j int, n bigint, k int"
-        )
-    _write_bloom_bitmap(spark, path, bitmap, mode)
-    _write_bloom_meta(spark, path, m, j, n, k, mode)
-
-
-def _write_bloom_bitmap(
-    spark: SparkSession, path: str, bitmap: bytes, mode: str
-) -> None:
-    """The bitmap half of the bloom artifact — ordered ≤16 MB chunk
-    rows at ``path/bitmap`` (extracted r15 so `write_bloom_index` and
-    `publish_bloom_index` share one layout, the `_write_index_meta`
-    convention)."""
     chunks = [
         (i, bitmap[off : off + _BLOOM_CHUNK_BYTES])
         for i, off in enumerate(
             range(0, max(len(bitmap), 1), _BLOOM_CHUNK_BYTES)
         )
     ]
-    spark.createDataFrame(
-        chunks, "chunk_id int, bytes binary"
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/bitmap")
-
-
-def _write_bloom_meta(
-    spark: SparkSession,
-    path: str,
-    m: int,
-    j: int,
-    n: int,
-    k: int,
-    mode: str,
-) -> None:
-    """The one-row ``(m, j, n, k)`` identity sidecar at
-    ``path/meta`` — the half a publish crash must leave ABSENT (data
-    before meta) so `read_bloom_index` refuses the artifact loudly."""
-    spark.createDataFrame(
-        [(int(m), int(j), int(n), int(k))],
+    artifacts.write_release(
+        spark,
+        path,
+        {
+            "bitmap": spark.createDataFrame(
+                chunks, "chunk_id int, bytes binary"
+            ).coalesce(1)
+        },
         "m bigint, j int, n bigint, k int",
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/meta")
+        (m, j, n, k),
+        mode,
+    )
 
 
 def publish_bloom_index(
@@ -1903,25 +1873,15 @@ def publish_bloom_index(
 ) -> None:
     """Publish a bloom tuple — typically `merge_window_bloom`'s
     result — as a new frozen RELEASE at ``path``, write-once (the
-    `publish_window_index` / `publish_embedding_index` contract):
-    the streaming gate (`bloom_gate_sink`) reads a release ONCE at
-    sink setup, so a new eval increment folds into the read-back
-    tuple and publishes as the NEXT release directory — never
-    mutating one a running gate may re-read on restart.
-
-    Both halves write mode ``error``; bitmap lands before meta, so a
-    crash between the two leaves an artifact `read_bloom_index`
-    refuses loudly (absent meta) rather than one that silently
-    probes. If the META write fails, the half-written ``bitmap`` dir
-    (and any partially-created meta dir) is removed best-effort so a
-    retry to the SAME path can succeed (the ADVICE-r14 /
-    review-r15 recovery shared by every publish seam in this
-    family); if that cleanup itself fails, recovery is manual:
-    delete the release directory and re-publish. An incoherent
-    tuple (bitmap length disagreeing with its recorded ``m``)
-    refuses BEFORE any write — publishing it would freeze an
+    `artifacts` publish protocol, `write_bloom_index` in mode
+    ``error``): the streaming gate (`bloom_gate_sink`) reads a
+    release ONCE at sink setup, so a new eval increment folds into
+    the read-back tuple and publishes as the NEXT release directory —
+    never mutating one a running gate may re-read on restart. An
+    incoherent tuple (bitmap length disagreeing with its recorded
+    ``m``) refuses BEFORE any write — publishing it would freeze an
     artifact every later read rejects."""
-    bitmap, m, j, n, k = bloom
+    bitmap, m = bloom[:2]
     if len(bitmap) * 8 != int(m):
         raise ValueError(
             f"refusing to publish a malformed bloom tuple: "
@@ -1929,19 +1889,7 @@ def publish_bloom_index(
             f"({int(m) // 8} bytes) — the artifact would fail every "
             "read_bloom_index; rebuild or re-merge the filter"
         )
-    _write_bloom_bitmap(spark, path, bitmap, "error")
-    try:
-        _write_bloom_meta(spark, path, m, j, n, k, "error")
-    except Exception:
-        # Bitmap landed but meta didn't: clean both dirs so a retry
-        # to the same release path succeeds (this branch only runs
-        # after the bitmap write SUCCEEDED at a mode-'error' path,
-        # proving no complete prior release lives here), then
-        # re-raise the original failure.
-        _compat.best_effort_delete(
-            spark, f"{path}/bitmap", f"{path}/meta"
-        )
-        raise
+    write_bloom_index(bloom, spark, path, mode="error")
 
 
 def read_bloom_index(
@@ -1949,28 +1897,15 @@ def read_bloom_index(
 ) -> tuple[bytes, int, int, int, int]:
     """Load a `write_bloom_index` artifact back as the
     `build_window_bloom` tuple `bloom_contaminated_spans` takes.
-    Loud refusals for: malformed meta (empty/multi-row/null fields —
-    a crashed write), a bitmap whose byte length disagrees with the
-    recorded ``m`` (truncated or mixed-release chunks), and a caller
-    ``k`` that contradicts the recorded width (the
-    `read_window_index` convention). The driver-side collect is the
-    filter itself — m/8 bytes, the same bounded class as holding the
-    tuple in memory."""
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
-    fields = ("m", "j", "n", "k")
-    if len(meta_rows) != 1 or any(
-        meta_rows[0][f] is None for f in fields
-    ):
-        defect = (
-            "a null field" if len(meta_rows) == 1
-            else f"{len(meta_rows)} rows (expected exactly 1)"
-        )
-        raise ValueError(
-            f"bloom index at {path} has a malformed meta sidecar — "
-            f"{defect} — artifact incomplete or corrupt; rebuild "
-            "with write_bloom_index"
-        )
-    m, j, n, built_k = (int(meta_rows[0][f]) for f in fields)
+    Loud refusals for: malformed meta (`artifacts.read_required_meta`),
+    a bitmap whose byte length disagrees with the recorded ``m``
+    (truncated or mixed-release chunks), and a caller ``k`` that
+    contradicts the recorded width (the `read_window_index`
+    convention). The driver-side collect is the filter itself — m/8
+    bytes, the same bounded class as holding the tuple in memory."""
+    m, j, n, built_k = artifacts.read_required_meta(
+        spark, path, ("m", "j", "n", "k"), "bloom index", "write_bloom_index"
+    )
     if k is not None and k != built_k:
         raise ValueError(
             f"bloom index at {path} was built with k={built_k}, "
@@ -2353,6 +2288,11 @@ def bloom_contaminated_spans(
     return _merge_flagged_spans(hits, k, id_col)
 
 
+#: The window index's meta schema (`write_window_index`,
+#: `publish_window_index`).
+_WINDOW_INDEX_META = "k int"
+
+
 def write_window_index(
     corpus: DataFrame,
     path: str,
@@ -2375,29 +2315,19 @@ def write_window_index(
     mismatch loudly. The artifact is (16 B digest + 8 B count) per
     DISTINCT window — a fraction of corpus bytes — and
     append-mergeable: counts sum by hash when the corpus grows by
-    appends of new doc ids.
-
-    An in-place rebuild EMPTIES the meta sidecar before touching the
-    data (review r15): without that, a crash between the two writes
-    leaves new hashes under the stale recorded k — a probe at the
-    stale width silently flags nothing — instead of the loud
-    malformed-meta refusal every crash window now reads as."""
+    appends of new doc ids. Written as an in-place rebuild under the
+    `artifacts` release protocol."""
     idx = corpus_window_hashes(
         corpus, k=k, text_col=text_col, id_col=id_col
     )
-    artifacts.invalidate_meta(corpus.sparkSession, path, "k int")
-    idx.write.mode("overwrite").parquet(f"{path}/window_hashes")
-    _write_index_meta(corpus.sparkSession, path, k, mode="overwrite")
-
-
-def _write_index_meta(
-    spark: SparkSession, path: str, k: int, mode: str
-) -> None:
-    """The index meta sidecar in ONE place: a one-row ``k`` table —
-    `read_window_index` refuses anything else as incomplete/corrupt."""
-    spark.createDataFrame([(int(k),)], "k int").coalesce(1).write.mode(
-        mode
-    ).parquet(f"{path}/meta")
+    artifacts.write_release(
+        corpus.sparkSession,
+        path,
+        {"window_hashes": idx},
+        _WINDOW_INDEX_META,
+        (k,),
+        "overwrite",
+    )
 
 
 def publish_window_index(
@@ -2413,63 +2343,25 @@ def publish_window_index(
     (`substring_gate_sink` / `decontamination_gate_sink`) read at
     setup.
 
-    ``path`` must be a NEW release directory (mode ``error`` —
-    write-once, the frozen-release contract): a merged plan still
-    lazily READS the previous release's parquet files, so an in-place
-    overwrite would read-under-write the artifact it is derived from.
-    Data writes before meta, so a crash between the two leaves an
-    artifact `read_window_index` refuses loudly (the malformed-meta
-    guard) rather than one that silently probes. If the META write
-    fails, the half-written ``window_hashes`` directory is removed
-    best-effort so a retry to the SAME path can succeed (ADVICE r14
-    — otherwise every retry refuses with 'already exists'); when
-    that cleanup itself fails (e.g. the filesystem died), recovery
-    is manual: delete the release directory and re-publish.
+    ``path`` must be a NEW release directory: this is the
+    write-once publish of the `artifacts` release protocol.
 
     ``built_k`` is stamped into the release meta, and a WRONG value
     is unverifiable from the digests later — so when ``index`` came
     DIRECTLY from `merge_window_index` (which tags its result with
     the width it validated), a contradicting ``built_k`` refuses
     loudly here instead of publishing a release whose every later
-    probe silently flags nothing. The tag is BEST-EFFORT provenance,
-    not the defense: any transformation of the DataFrame drops it
-    (and a column that shadows the attribute name makes getattr
-    return a Column, so only a plain-int tag is honored) — the
-    required ``built_k`` parameter itself is the contract; thread it
-    from `read_window_index`'s pair."""
-    tagged = getattr(index, "_window_index_k", None)
-    if isinstance(tagged, int) and tagged != int(built_k):
-        raise ValueError(
-            f"index DataFrame carries validated width k={tagged} but "
-            f"publish was asked to record built_k={built_k} — a wrong "
-            "recorded k makes every later probe silently flag "
-            "nothing; pass the k the index was merged/built at"
-        )
-    index.write.mode("error").parquet(f"{path}/window_hashes")
-    try:
-        _write_index_meta(
-            index.sparkSession, path, built_k, mode="error"
-        )
-    except Exception:
-        # Data landed but meta didn't: without cleanup every retry to
-        # the same release path refuses with 'already exists' (ADVICE
-        # r14). Remove the half-written data dir AND any partially-
-        # created meta dir (a meta job that dies after its committer
-        # creates the output dir — e.g. disk-full mid-job — leaves a
-        # dir that would refuse the retry's mode-'error' meta write
-        # even after the data cleanup; review r15), then re-raise the
-        # original failure. Safe: this branch only runs after the
-        # data write SUCCEEDED at a mode-'error' path, proving no
-        # complete prior release lives here. If the cleanup itself
-        # fails, read_window_index still refuses the artifact loudly;
-        # the documented recovery is delete-the-release-dir +
-        # re-publish.
-        _compat.best_effort_delete(
-            index.sparkSession,
-            f"{path}/window_hashes",
-            f"{path}/meta",
-        )
-        raise
+    probe silently flags nothing. The tag is best-effort provenance;
+    the required ``built_k`` parameter itself is the contract —
+    thread it from `read_window_index`'s pair."""
+    artifacts.write_release(
+        index.sparkSession,
+        path,
+        {"window_hashes": index},
+        _WINDOW_INDEX_META,
+        (built_k,),
+        "error",
+    )
 
 
 def merge_window_index(
@@ -2521,8 +2413,7 @@ def merge_window_index(
     # r14 — the habitual default-8 typo at publish time would stamp a
     # wrong k into the release meta, and a wrong recorded k makes
     # every later gate probe silently flag nothing)
-    merged._window_index_k = int(k)
-    return merged
+    return artifacts.tag_release(merged, "width", (k,))
 
 
 def read_window_index(
@@ -2534,22 +2425,10 @@ def read_window_index(
     Passing ``k`` asserts the caller's window width against the
     recorded one — a silent mismatch would flag nothing, so it is a
     loud ValueError instead. A partially-written or corrupt artifact
-    (empty, multi-row, or null-k meta — the case a crashed
-    `write_window_index` leaves behind) is ALSO a loud refusal rather
-    than an opaque IndexError (ADVICE r13, the
-    `read_score_histogram` pattern)."""
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
-    if len(meta_rows) != 1 or meta_rows[0]["k"] is None:
-        defect = (
-            "a null k" if len(meta_rows) == 1
-            else f"{len(meta_rows)} rows (expected exactly 1)"
-        )
-        raise ValueError(
-            f"window index at {path} has a malformed meta sidecar — "
-            f"{defect} — artifact incomplete or corrupt; rebuild "
-            "with write_window_index"
-        )
-    built_k = int(meta_rows[0]["k"])
+    is ALSO a loud refusal (`artifacts.read_required_meta`)."""
+    (built_k,) = artifacts.read_required_meta(
+        spark, path, ("k",), "window index", "write_window_index"
+    )
     if k is not None and k != built_k:
         raise ValueError(
             f"window index at {path} was built with k={built_k}, "

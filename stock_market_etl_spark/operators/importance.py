@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from stock_market_etl_spark.operators import artifacts
 from stock_market_etl_spark.operators.text import tokens
 
 
@@ -236,13 +237,17 @@ def write_score_histogram(
     b25 `write_window_index` pattern). ``bins`` is part of the
     artifact's identity — a probe binned at a different width
     compares incomparable histograms and reads as spurious
-    drift/calm — so it is recorded in a one-row meta table and
+    drift/calm — so it is recorded in a one-row meta table (an
+    in-place rebuild under the `artifacts` release protocol) and
     `read_score_histogram` refuses a mismatch loudly."""
-    hist = score_histogram(scored, score_col, group_col, bins)
-    hist.write.mode("overwrite").parquet(f"{path}/histogram")
-    scored.sparkSession.createDataFrame(
-        [(int(bins),)], "bins int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    artifacts.write_release(
+        scored.sparkSession,
+        path,
+        {"histogram": score_histogram(scored, score_col, group_col, bins)},
+        "bins int",
+        (bins,),
+        "overwrite",
+    )
 
 
 def read_score_histogram(
@@ -250,19 +255,12 @@ def read_score_histogram(
 ) -> tuple[DataFrame, int]:
     """Load a `write_score_histogram` artifact as the
     ``(baseline, bins)`` pair `psi_vs_baseline` takes; passing
-    ``bins`` asserts the caller's width against the recorded one."""
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
-    if len(meta_rows) != 1 or meta_rows[0]["bins"] is None:
-        # a partially-written or empty artifact must surface as the
-        # loud refusal this seam promises, not an opaque IndexError
-        # (ADVICE r12)
-        raise ValueError(
-            f"score histogram meta at {path}/meta is "
-            f"{'empty' if not meta_rows else 'malformed'} "
-            f"({len(meta_rows)} rows) — artifact is incomplete or "
-            "corrupt; rebuild it with write_score_histogram"
-        )
-    built = int(meta_rows[0]["bins"])
+    ``bins`` asserts the caller's width against the recorded one; a
+    partially-written artifact refuses loudly
+    (`artifacts.read_required_meta`)."""
+    (built,) = artifacts.read_required_meta(
+        spark, path, ("bins",), "score histogram", "write_score_histogram"
+    )
     if bins is not None and bins != built:
         raise ValueError(
             f"score histogram at {path} was built with bins={built}, "

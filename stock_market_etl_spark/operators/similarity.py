@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType
 
-from stock_market_etl_spark.operators import _compat, artifacts
+from stock_market_etl_spark.operators import artifacts
 from stock_market_etl_spark.operators.parallelism import spread
 
 
@@ -577,13 +577,11 @@ def write_ivf_index(
     pruning asserted in tests/test_plans.py). ``centroids`` is the tiny
     n_lists-row table every query broadcasts.
 
-    A rebuild EMPTIES the ``(n_lists, dim)`` meta sidecar before
-    touching either data dir and restores it LAST (review r15's
-    multi-dir extension): without the stamp, a rebuild dying between
-    the cells and centroids writes leaves NEW assignments under
+    ``(n_lists, dim)`` is recorded in a meta sidecar under the
+    `artifacts` release protocol: a rebuild dying between the cells
+    and centroids writes would otherwise leave NEW assignments under
     STALE centroids — both halves complete-looking, every probe
-    pruning the wrong cells silently. With it, every crash window
-    reads as `read_ivf_index`'s malformed-meta refusal."""
+    pruning the wrong cells silently."""
     spark = assigned.sparkSession
     # derive the identity stats BEFORE touching the artifact (review
     # r15, pass 5): a degenerate centroid table refuses here with
@@ -599,15 +597,17 @@ def write_ivf_index(
             "nothing was touched; train centroids with ivf_index "
             "first"
         )
-    n_lists, dim = int(stats["n"]), int(stats["d"])
-    artifacts.invalidate_meta(spark, path, "n_lists int, dim int")
-    assigned.write.mode("overwrite").partitionBy("__cell").parquet(
-        f"{path}/cells"
+    artifacts.write_release(
+        spark,
+        path,
+        {
+            "cells": assigned.write.partitionBy("__cell"),
+            "centroids": centers_df,
+        },
+        "n_lists int, dim int",
+        (stats["n"], stats["d"]),
+        "overwrite",
     )
-    centers_df.write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(n_lists, dim)], "n_lists int, dim int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def read_ivf_index(
@@ -800,30 +800,29 @@ def write_pq_index(
     per index build; probes over the read-back artifact never touch
     raw vectors except for the shortlist re-rank.
 
-    A rebuild EMPTIES the ``(m, n_centroids, dsub)`` meta sidecar
-    before touching either data dir and restores it LAST (review
-    r15's multi-dir extension): a rebuild dying between the codes
+    ``(m, n_centroids, dsub)`` is recorded in a meta sidecar under the
+    `artifacts` release protocol: a rebuild dying between the codes
     and codebooks writes would otherwise leave NEW codes under STALE
     codebooks — both halves complete-looking, every ADC distance
     decoded against the wrong centroids silently."""
     m, n_c, dsub = books.shape
     spark = codes_df.sparkSession
-    artifacts.invalidate_meta(
-        spark, path, "m int, n_centroids int, dsub int"
-    )
-    codes_df.write.mode("overwrite").parquet(f"{path}/codes")
     rows = [
         (j, c, [float(x) for x in books[j][c]])
         for j in range(m)
         for c in range(n_c)
     ]
-    spark.createDataFrame(
+    codebooks = spark.createDataFrame(
         rows, "subspace int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    spark.createDataFrame(
-        [(int(m), int(n_c), int(dsub))],
+    )
+    artifacts.write_release(
+        spark,
+        path,
+        {"codes": codes_df, "codebooks": codebooks},
         "m int, n_centroids int, dsub int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        (m, n_c, dsub),
+        "overwrite",
+    )
 
 
 def read_pq_index(
@@ -1478,15 +1477,9 @@ def _checked_unit_vectors(
     return v.withColumn("__v", guard)
 
 
-def _write_emb_meta(
-    spark: SparkSession, path: str, dim: int, mode: str
-) -> None:
-    """The embedding-index meta sidecar in ONE place: a one-row
-    ``dim`` table — `read_embedding_index` refuses anything else as
-    incomplete/corrupt (the `dedup._write_index_meta` pattern)."""
-    spark.createDataFrame(
-        [(int(dim),)], "dim int"
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/meta")
+#: The embedding index's meta schema (`write_embedding_index`,
+#: `publish_embedding_index`).
+_EMB_INDEX_META = "dim int"
 
 
 def write_embedding_index(
@@ -1512,13 +1505,17 @@ def write_embedding_index(
     The artifact is (8 B id + dim×8 B + 8 B norm) per eval vector —
     eval sets are the SMALL side of decontamination by construction,
     and releases append (`merge_embedding_index`), so the probe side
-    reads a frozen parquet scan exactly like the window index."""
-    vecs = _checked_unit_vectors(eval_df, dim, id_col, vec_col)
-    # empty the sidecar before touching the data (review r15 — the
-    # in-place-rebuild crash window; see artifacts.invalidate_meta)
-    artifacts.invalidate_meta(eval_df.sparkSession, path, "dim int")
-    vecs.write.mode("overwrite").parquet(f"{path}/vectors")
-    _write_emb_meta(eval_df.sparkSession, path, dim, mode="overwrite")
+    reads a frozen parquet scan exactly like the window index.
+    Written as an in-place rebuild under the `artifacts` release
+    protocol."""
+    artifacts.write_release(
+        eval_df.sparkSession,
+        path,
+        {"vectors": _checked_unit_vectors(eval_df, dim, id_col, vec_col)},
+        _EMB_INDEX_META,
+        (dim,),
+        "overwrite",
+    )
 
 
 def read_embedding_index(
@@ -1529,22 +1526,11 @@ def read_embedding_index(
     pair `embedding_contamination_incremental` takes. Passing ``dim``
     asserts the caller's width against the recorded one — a silent
     mismatch would verdict nothing, so it is a loud ValueError. A
-    partially-written or corrupt artifact (empty, multi-row, or
-    null-dim meta — what a crashed write leaves behind) is ALSO a
-    loud refusal rather than an opaque IndexError (the
-    `dedup.read_window_index` pattern)."""
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
-    if len(meta_rows) != 1 or meta_rows[0]["dim"] is None:
-        defect = (
-            "a null dim" if len(meta_rows) == 1
-            else f"{len(meta_rows)} rows (expected exactly 1)"
-        )
-        raise ValueError(
-            f"embedding index at {path} has a malformed meta sidecar "
-            f"— {defect} — artifact incomplete or corrupt; rebuild "
-            "with write_embedding_index"
-        )
-    built_dim = int(meta_rows[0]["dim"])
+    partially-written or corrupt artifact is ALSO a loud refusal
+    (`artifacts.read_required_meta`)."""
+    (built_dim,) = artifacts.read_required_meta(
+        spark, path, ("dim",), "embedding index", "write_embedding_index"
+    )
     if dim is not None and dim != built_dim:
         raise ValueError(
             f"embedding index at {path} was built with "
@@ -1603,10 +1589,7 @@ def merge_embedding_index(
     )
     # provenance tag: the validated width travels WITH the result so
     # publish_embedding_index can refuse a contradicting built_dim
-    # (the merge_window_index convention — best-effort on top of the
-    # required parameter, honored only as a plain int)
-    merged._embedding_index_dim = int(dim)
-    return merged
+    return artifacts.tag_release(merged, "width", (dim,))
 
 
 def publish_embedding_index(
@@ -1619,38 +1602,18 @@ def publish_embedding_index(
     multi-release SEMANTIC decontamination lifecycle
     (`dedup.publish_window_index`'s conventions, applied to vectors).
 
-    ``path`` must be a NEW release directory (mode ``error`` —
-    write-once, the frozen-release contract): the merged plan still
-    lazily READS the previous release's parquet files, so an in-place
-    overwrite would read-under-write its own input. Data writes
-    before meta, so a crash between the two reads as a loud
-    malformed-meta refusal; a FAILED meta write removes the
-    half-written ``vectors`` dir best-effort so a retry to the same
-    path succeeds (delete the release dir and re-publish if that
-    cleanup itself fails). A provenance-tagged index refuses a
-    contradicting ``built_dim`` before anything writes."""
-    tagged = getattr(index, "_embedding_index_dim", None)
-    if isinstance(tagged, int) and tagged != int(built_dim):
-        raise ValueError(
-            f"index DataFrame carries validated width dim={tagged} "
-            f"but publish was asked to record built_dim={built_dim} "
-            "— a wrong recorded dim nulls every later probe's "
-            "cosines; pass the dim the index was merged/built at"
-        )
-    index.write.mode("error").parquet(f"{path}/vectors")
-    try:
-        _write_emb_meta(
-            index.sparkSession, path, built_dim, mode="error"
-        )
-    except Exception:
-        # data dir AND any partially-created meta dir, for the same
-        # reasons as dedup.publish_window_index (review r15) — safe
-        # because the mode-'error' data write just succeeded, proving
-        # no complete prior release at this path
-        _compat.best_effort_delete(
-            index.sparkSession, f"{path}/vectors", f"{path}/meta"
-        )
-        raise
+    ``path`` must be a NEW release directory: this is the
+    write-once publish of the `artifacts` release protocol. A
+    provenance-tagged index refuses a contradicting ``built_dim``
+    before anything writes."""
+    artifacts.write_release(
+        index.sparkSession,
+        path,
+        {"vectors": index},
+        _EMB_INDEX_META,
+        (built_dim,),
+        "error",
+    )
 
 
 def embedding_contamination_incremental(
@@ -1696,19 +1659,9 @@ def embedding_contamination_incremental(
     return contamination_from_pairs(pairs, threshold)
 
 
-def _write_lsh_meta(
-    spark: SparkSession, path: str, params: tuple, mode: str
-) -> None:
-    """The LSH-bucket-index meta sidecar in ONE place: a one-row
-    (dim, n_planes, n_tables, seed) table — all four are the
-    artifact's identity (different planes ⇒ disjoint buckets ⇒ a
-    probe that silently finds no candidates), so
-    `read_lsh_buckets` refuses anything malformed."""
-    dim, n_planes, n_tables, seed = (int(x) for x in params)
-    spark.createDataFrame(
-        [(dim, n_planes, n_tables, seed)],
-        "dim int, n_planes int, n_tables int, seed int",
-    ).coalesce(1).write.mode(mode).parquet(f"{path}/meta")
+#: The LSH bucket index's meta schema (`write_lsh_buckets`,
+#: `publish_lsh_buckets`): all four are the artifact's identity.
+_LSH_BUCKETS_META = "dim int, n_planes int, n_tables int, seed int"
 
 
 def write_lsh_buckets(
@@ -1746,19 +1699,13 @@ def write_lsh_buckets(
         seed,
         vec_col="__v",
     ).select(F.col(id_col), "lsh_table", "lsh_bucket")
-    # empty the sidecar before touching the data (review r15 — the
-    # in-place-rebuild crash window; see artifacts.invalidate_meta)
-    artifacts.invalidate_meta(
+    artifacts.write_release(
         eval_index.sparkSession,
         path,
-        "dim int, n_planes int, n_tables int, seed int",
-    )
-    bucketed.write.mode("overwrite").parquet(f"{path}/buckets")
-    _write_lsh_meta(
-        eval_index.sparkSession,
-        path,
+        {"buckets": bucketed},
+        _LSH_BUCKETS_META,
         (built_dim, n_planes, n_tables, seed),
-        mode="overwrite",
+        "overwrite",
     )
 
 
@@ -1768,24 +1715,15 @@ def read_lsh_buckets(
     """Load a `write_lsh_buckets` / `publish_lsh_buckets` artifact as
     ``(buckets, (dim, n_planes, n_tables, seed))`` — the probe MUST
     reuse the returned parameters (they define the plane family; any
-    other bucketing finds no candidates). Malformed meta (empty,
-    multi-row, or any null field — a crashed write) refuses loudly,
-    the `read_embedding_index` pattern."""
-    meta_rows = spark.read.parquet(f"{path}/meta").collect()
-    fields = ("dim", "n_planes", "n_tables", "seed")
-    if len(meta_rows) != 1 or any(
-        meta_rows[0][f] is None for f in fields
-    ):
-        defect = (
-            "a null parameter" if len(meta_rows) == 1
-            else f"{len(meta_rows)} rows (expected exactly 1)"
-        )
-        raise ValueError(
-            f"LSH bucket index at {path} has a malformed meta sidecar "
-            f"— {defect} — artifact incomplete or corrupt; rebuild "
-            "with write_lsh_buckets"
-        )
-    params = tuple(int(meta_rows[0][f]) for f in fields)
+    other bucketing finds no candidates). Malformed meta refuses
+    loudly (`artifacts.read_required_meta`)."""
+    params = artifacts.read_required_meta(
+        spark,
+        path,
+        ("dim", "n_planes", "n_tables", "seed"),
+        "LSH bucket index",
+        "write_lsh_buckets",
+    )
     return spark.read.parquet(f"{path}/buckets"), params
 
 
@@ -1816,9 +1754,11 @@ def merge_lsh_buckets(
         seed,
         vec_col="__v",
     ).select(F.col(id_col), "lsh_table", "lsh_bucket")
-    merged = buckets.unionByName(new_rows)
-    merged._lsh_bucket_params = (dim, n_planes, n_tables, seed)
-    return merged
+    return artifacts.tag_release(
+        buckets.unionByName(new_rows),
+        "LSH params",
+        (dim, n_planes, n_tables, seed),
+    )
 
 
 def publish_lsh_buckets(
@@ -1828,33 +1768,17 @@ def publish_lsh_buckets(
 ) -> None:
     """Publish a bucket-index DATAFRAME — typically
     `merge_lsh_buckets`' result — as a new write-once release at
-    ``path`` (all the `publish_embedding_index` conventions: mode
-    ``error`` because the merged plan still reads the prior release's
-    files, data before meta, half-write cleanup restoring
-    retry-to-same-path, provenance tag refused on contradiction)."""
-    tagged = getattr(buckets, "_lsh_bucket_params", None)
-    if (
-        isinstance(tagged, tuple)
-        and all(isinstance(x, int) for x in tagged)
-        and tuple(tagged) != tuple(int(x) for x in built_params)
-    ):
-        raise ValueError(
-            f"bucket DataFrame carries validated LSH params {tagged} "
-            f"but publish was asked to record {tuple(built_params)} — "
-            "wrong recorded params make every later probe silently "
-            "find no candidates; pass the params the index was "
-            "merged/built at"
-        )
-    buckets.write.mode("error").parquet(f"{path}/buckets")
-    try:
-        _write_lsh_meta(
-            buckets.sparkSession, path, built_params, mode="error"
-        )
-    except Exception:
-        _compat.best_effort_delete(
-            buckets.sparkSession, f"{path}/buckets", f"{path}/meta"
-        )
-        raise
+    ``path`` (the `publish_embedding_index` conventions: the
+    write-once publish of the `artifacts` release protocol, provenance
+    tag refused on contradiction)."""
+    artifacts.write_release(
+        buckets.sparkSession,
+        path,
+        {"buckets": buckets},
+        _LSH_BUCKETS_META,
+        built_params,
+        "error",
+    )
 
 
 def embedding_contamination_ann_incremental(

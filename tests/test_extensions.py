@@ -3367,7 +3367,7 @@ def test_publish_window_index_meta_failure_cleans_data(
     import pytest
 
     from stock_market_etl_spark.io import load_table
-    from stock_market_etl_spark.operators import dedup as dd
+    from stock_market_etl_spark.operators import artifacts, dedup as dd
 
     docs = load_table(spark, sf_smoke, "documents").limit(20)
     idx = dd.corpus_window_hashes(docs, k=8)
@@ -3379,13 +3379,13 @@ def test_publish_window_index_meta_failure_cleans_data(
         os.makedirs(f"{path_}/meta", exist_ok=True)
         raise RuntimeError("meta write died")
 
-    orig = dd._write_index_meta
-    dd._write_index_meta = boom
+    orig = artifacts._write_meta
+    artifacts._write_meta = boom
     try:
         with pytest.raises(RuntimeError, match="meta write died"):
             dd.publish_window_index(idx, path, built_k=8)
     finally:
-        dd._write_index_meta = orig
+        artifacts._write_meta = orig
     assert not os.path.exists(f"{path}/window_hashes")
     assert not os.path.exists(f"{path}/meta")
     # retry to the SAME path now succeeds (write-once contract holds
@@ -3394,6 +3394,27 @@ def test_publish_window_index_meta_failure_cleans_data(
     loaded, built_k = dd.read_window_index(spark, path)
     assert built_k == 8
     assert loaded.count() == idx.count()
+
+
+def test_read_window_index_refuses_absent_meta(spark, tmp_path):
+    """A publish whose meta write AND cleanup both failed leaves the
+    data dir with no meta dir at all; the reader must refuse with the
+    family's ValueError, not Spark's path-not-found AnalysisException."""
+    import shutil
+
+    import pytest
+
+    from stock_market_etl_spark.operators import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "over the lazy dog")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "release")
+    dd.publish_window_index(dd.corpus_window_hashes(docs, k=4), path, 4)
+    shutil.rmtree(tmp_path / "release" / "meta")
+    with pytest.raises(ValueError, match="missing or malformed"):
+        dd.read_window_index(spark, path)
 
 
 def test_bloom_index_release_lifecycle(spark, sf_smoke, tmp_path):
@@ -3511,11 +3532,17 @@ def test_overwrite_rebuild_crash_reads_as_malformed(
     the sidecar first (`artifacts.invalidate_meta`), so both crash
     windows — during the data write and between data and meta —
     read as the malformed-meta refusal, and a completed retry
-    restores the artifact."""
+    restores the artifact. The score histogram takes the same path:
+    a bins=5 rebuild dying before its meta write must not leave the
+    stale bins=10 meta over a 5-bin histogram."""
     import pytest
 
     from stock_market_etl_spark.io import load_table
-    from stock_market_etl_spark.operators import dedup as dd
+    from stock_market_etl_spark.operators import artifacts, dedup as dd
+    from stock_market_etl_spark.operators.importance import (
+        read_score_histogram,
+        write_score_histogram,
+    )
 
     ref = load_table(spark, sf_smoke, "documents").limit(20)
 
@@ -3527,13 +3554,13 @@ def test_overwrite_rebuild_crash_reads_as_malformed(
     def boom(*a, **kw):
         raise RuntimeError("bitmap write died")
 
-    orig = dd._write_bloom_bitmap
-    dd._write_bloom_bitmap = boom
+    orig = artifacts._write_parts
+    artifacts._write_parts = boom
     try:
         with pytest.raises(RuntimeError, match="bitmap write died"):
             dd.write_bloom_index(bloom, spark, p)
     finally:
-        dd._write_bloom_bitmap = orig
+        artifacts._write_parts = orig
     with pytest.raises(ValueError, match="incomplete or corrupt"):
         dd.read_bloom_index(spark, p)
     dd.write_bloom_index(bloom, spark, p)
@@ -3548,19 +3575,37 @@ def test_overwrite_rebuild_crash_reads_as_malformed(
     def boom_meta(*a, **kw):
         raise RuntimeError("meta write died")
 
-    orig_meta = dd._write_index_meta
-    dd._write_index_meta = boom_meta
+    orig_meta = artifacts._write_meta
+    artifacts._write_meta = boom_meta
     try:
         with pytest.raises(RuntimeError, match="meta write died"):
             dd.write_window_index(ref, idx_path, k=4)
     finally:
-        dd._write_index_meta = orig_meta
+        artifacts._write_meta = orig_meta
     with pytest.raises(ValueError, match="incomplete or corrupt"):
         dd.read_window_index(spark, idx_path)
     dd.write_window_index(ref, idx_path, k=4)
     _, got_k = dd.read_window_index(spark, idx_path)
     assert got_k == 4
     dd.release_bloom_broadcasts()
+
+    # score-histogram seam: a bins=5 rebuild dies between the data and
+    # meta writes; the stale bins=10 meta would have been accepted
+    scored = ref.select(
+        "source", (F.col("doc_id") % 7 / 7.0).alias("__q")
+    )
+    hist_path = str(tmp_path / "hist")
+    write_score_histogram(scored, hist_path, "__q", "source", bins=10)
+    artifacts._write_meta = boom_meta
+    try:
+        with pytest.raises(RuntimeError, match="meta write died"):
+            write_score_histogram(
+                scored, hist_path, "__q", "source", bins=5
+            )
+    finally:
+        artifacts._write_meta = orig_meta
+    with pytest.raises(ValueError, match="incomplete or corrupt"):
+        read_score_histogram(spark, hist_path, bins=10)
 
 
 def test_multi_dir_rebuild_crash_reads_as_malformed(
@@ -3667,7 +3712,7 @@ def test_publish_bloom_index_write_once_and_crash_recovery(
     import pytest
 
     from stock_market_etl_spark.io import load_table
-    from stock_market_etl_spark.operators import dedup as dd
+    from stock_market_etl_spark.operators import artifacts, dedup as dd
 
     ref = load_table(spark, sf_smoke, "documents").limit(20)
     bloom = dd.build_window_bloom(ref, k=8)
@@ -3691,13 +3736,13 @@ def test_publish_bloom_index_write_once_and_crash_recovery(
         os.makedirs(f"{path_}/meta", exist_ok=True)
         raise RuntimeError("meta write died")
 
-    orig = dd._write_bloom_meta
-    dd._write_bloom_meta = boom
+    orig = artifacts._write_meta
+    artifacts._write_meta = boom
     try:
         with pytest.raises(RuntimeError, match="meta write died"):
             dd.publish_bloom_index(bloom, spark, path2)
     finally:
-        dd._write_bloom_meta = orig
+        artifacts._write_meta = orig
     assert not os.path.exists(f"{path2}/bitmap")
     assert not os.path.exists(f"{path2}/meta")
     dd.publish_bloom_index(bloom, spark, path2)
@@ -3908,7 +3953,7 @@ def test_publish_lsh_buckets_meta_failure_cleans_data(
     import pytest
 
     from stock_market_etl_spark.io import load_table
-    from stock_market_etl_spark.operators import similarity as sim
+    from stock_market_etl_spark.operators import artifacts, similarity as sim
 
     emb = load_table(spark, sf_smoke, "embeddings").limit(20)
     idx = sim._checked_unit_vectors(emb, 64, "vec_id", "embedding")
@@ -3926,13 +3971,13 @@ def test_publish_lsh_buckets_meta_failure_cleans_data(
         os.makedirs(f"{path_}/meta", exist_ok=True)
         raise RuntimeError("meta write died")
 
-    orig = sim._write_lsh_meta
-    sim._write_lsh_meta = boom
+    orig = artifacts._write_meta
+    artifacts._write_meta = boom
     try:
         with pytest.raises(RuntimeError, match="meta write died"):
             sim.publish_lsh_buckets(bk, path, (64, 4, 16, 42))
     finally:
-        sim._write_lsh_meta = orig
+        artifacts._write_meta = orig
     assert not os.path.exists(f"{path}/buckets")
     assert not os.path.exists(f"{path}/meta")
     sim.publish_lsh_buckets(bk, path, (64, 4, 16, 42))
@@ -3954,7 +3999,7 @@ def test_publish_embedding_index_meta_failure_cleans_data(
     import pytest
 
     from stock_market_etl_spark.io import load_table
-    from stock_market_etl_spark.operators import similarity as sim
+    from stock_market_etl_spark.operators import artifacts, similarity as sim
 
     emb = load_table(spark, sf_smoke, "embeddings").limit(20)
     idx = sim._checked_unit_vectors(emb, 64, "vec_id", "embedding")
@@ -3964,13 +4009,13 @@ def test_publish_embedding_index_meta_failure_cleans_data(
         os.makedirs(f"{path_}/meta", exist_ok=True)
         raise RuntimeError("meta write died")
 
-    orig = sim._write_emb_meta
-    sim._write_emb_meta = boom
+    orig = artifacts._write_meta
+    artifacts._write_meta = boom
     try:
         with pytest.raises(RuntimeError, match="meta write died"):
             sim.publish_embedding_index(idx, path, built_dim=64)
     finally:
-        sim._write_emb_meta = orig
+        artifacts._write_meta = orig
     assert not os.path.exists(f"{path}/vectors")
     assert not os.path.exists(f"{path}/meta")
     sim.publish_embedding_index(idx, path, built_dim=64)

@@ -36,6 +36,25 @@ def test_private_api_only_in_compat():
     assert not offenders, "private API outside _compat.py:\n" + "\n".join(offenders)
 
 
+_ARTIFACTS = PKG / "operators" / "artifacts.py"
+_PROTOCOL = re.compile(r"/meta[\"']|best_effort_delete\(")
+
+
+def test_release_protocol_only_in_artifacts():
+    """The release-artifact protocol (meta sidecar path, publish crash
+    cleanup) has one owner, ``operators/artifacts.py``: a ``/meta``
+    path formatted, or ``best_effort_delete`` called, anywhere else is
+    a second copy that can drift. ``_compat.py`` may define it."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == _ARTIFACTS:
+            continue
+        for i, code in _code_lines(path):
+            if _PROTOCOL.search(code) and "def best_effort_delete(" not in code:
+                offenders.append(f"{path.relative_to(PKG)}:{i}: {code.strip()}")
+    assert not offenders, "release protocol outside artifacts.py:\n" + "\n".join(offenders)
+
+
 def test_release_local_checkpoint_best_effort(spark):
     from stock_market_etl_spark.operators._compat import release_local_checkpoint
 
