@@ -36,9 +36,10 @@ TABLE_NAMES = (
 )
 
 
-def canon_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to session-TZ ``TimestampType``
-    regardless of the physical shape Spark's parquet reader produced.
+def canon_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` event-time column to session-TZ
+    ``TimestampType`` regardless of the physical shape Spark's parquet
+    reader produced.
 
     The fixture's ``events.ts`` is parquet TIMESTAMP(NANOS, false), a
     type whose Spark mapping has drifted across releases; this is the
@@ -53,13 +54,13 @@ def canon_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       pinned UTC (session.py).
     - ``timestamp``: already canonical.
     """
-    dt = dict(df.dtypes).get(col)
+    dt = dict(df.dtypes).get("ts")
     if dt == "bigint":
         df = df.withColumn(
-            col, F.timestamp_micros(F.expr(f"{col} div 1000"))
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
     elif dt == "timestamp_ntz":
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -97,19 +98,18 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = ("year", "ticker"),
-    mode: str = "overwrite",
 ) -> None:
     """B1: partitioned parquet write (reference
     `scripts/ingest_backfill_raw.py:49-78`, `scripts/transform.py:113-125`).
 
-    With ``partitionOverwriteMode=dynamic`` (session default) and
-    ``mode="overwrite"``, only the partitions present in ``df`` are
-    replaced — the Spark-native form of the reference's per-key
-    read-merge-write (B2), minus the read-merge when full partitions are
-    recomputed. At 100 TB this layout gives partition pruning on
-    (year, ticker) predicates and bounded task sizes.
+    With ``partitionOverwriteMode=dynamic`` (session default), only the
+    partitions present in ``df`` are replaced — the Spark-native form of
+    the reference's per-key read-merge-write (B2), minus the read-merge
+    when full partitions are recomputed. At 100 TB this layout gives
+    partition pruning on (year, ticker) predicates and bounded task
+    sizes.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
@@ -118,7 +118,6 @@ def write_bucketed(
     bucket_cols: tuple[str, ...],
     num_buckets: int = 16,
     sort_cols: tuple[str, ...] | None = None,
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
     """Bucketed parquet table layout (SCALE.md Joins): pre-shuffle the
@@ -135,7 +134,7 @@ def write_bucketed(
     spec). Asserted shuffle-free in tests/test_plans.py; the
     oracle-checked catalog form is b11.
     """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(
         num_buckets, *bucket_cols
     )
     if sort_cols:
@@ -145,10 +144,10 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def with_year(df: DataFrame, date_col: str = "date") -> DataFrame:
+def with_year(df: DataFrame) -> DataFrame:
     """Derive the ``year`` partition column the reference encodes in its
     S3 key template (`scripts/ingest_backfill_raw.py:54`)."""
-    return df.withColumn("year", F.year(F.col(date_col)))
+    return df.withColumn("year", F.year(F.col("date")))
 
 
 def load_jdbc(
@@ -195,7 +194,6 @@ def write_compacted(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
     """Small-files-controlled parquet write: the AQE REBALANCE hint
     inserts a shuffle whose output partitions are coalesced/split to
@@ -215,7 +213,7 @@ def write_compacted(
         if partition_cols
         else df.hint("rebalance")
     )
-    writer = hinted.write.mode(mode)
+    writer = hinted.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
@@ -226,7 +224,6 @@ def write_clustered(
     path: str,
     cluster_cols: tuple[str, ...],
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Range-clustered parquet write — the 1-D Z-order move for scan
     pruning. ``repartitionByRange`` sends each value range of the
@@ -253,7 +250,7 @@ def write_clustered(
     (
         df.repartitionByRange(n, *[F.col(c) for c in cluster_cols])
         .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -323,10 +320,9 @@ def zorder_key(
     a_max: float,
     b_min: float,
     b_max: float,
-    bits: int = 16,
 ) -> "Column":
     """Morton (Z-order) key for two columns: min-max-normalize each to
-    ``bits`` bits and interleave them, so rows close in BOTH
+    16 bits and interleave them, so rows close in BOTH
     dimensions get close keys. Bounds arrive as plain floats (the
     caller's one-row stats aggregate — index metadata, not data). A
     degenerate dimension (min == max) maps to 0 and the key falls
@@ -338,16 +334,16 @@ def zorder_key(
         if span <= 0:
             return F.lit(0).cast("long")
         scaled = (c.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(
-            float((1 << bits) - 1)
+            float((1 << 16) - 1)
         )
         clamped = F.least(
-            F.greatest(scaled, F.lit(0.0)), F.lit(float((1 << bits) - 1))
+            F.greatest(scaled, F.lit(0.0)), F.lit(float((1 << 16) - 1))
         )
         return F.floor(clamped).cast("long")
 
     na, nb = norm(a, a_min, a_max), norm(b, b_min, b_max)
     key = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(16):
         bit_a = F.shiftleft(
             F.shiftright(na, i).bitwiseAND(F.lit(1).cast("long")), 2 * i
         )
@@ -364,8 +360,6 @@ def write_zordered(
     col_a: str,
     col_b: str,
     num_files: int | None = None,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet write — the 2-D extension of
     ``write_clustered``: files are range-partitioned + sorted on the
@@ -388,16 +382,14 @@ def write_zordered(
         F.max(F.col(col_b).cast("double")),
     ).collect()[0]
     a_min, a_max, b_min, b_max = (float(x) for x in stats)
-    key = zorder_key(
-        F.col(col_a), F.col(col_b), a_min, a_max, b_min, b_max, bits
-    )
+    key = zorder_key(F.col(col_a), F.col(col_b), a_min, a_max, b_min, b_max)
     n = num_files or shuffle_width(df.sparkSession)
     (
         df.withColumn("__zkey", key)
         .repartitionByRange(n, F.col("__zkey"))
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

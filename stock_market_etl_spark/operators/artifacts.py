@@ -43,6 +43,7 @@ names, its meta schema string, and what its identity means.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 from stock_market_etl_spark.operators import _compat
@@ -64,25 +65,26 @@ def read_if_exists(
     the others mis-classifying real read errors as bootstrap).
     Moved here from streaming/core so batch artifact readers can
     share it without importing the streaming layer."""
-    from pyspark.errors import AnalysisException
-
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        # getCondition is the Spark 4 name; getErrorClass the
-        # deprecated 3.x one (it warns on call) — being the single
-        # home of this classification means absorbing that drift
-        # here (review r15, pass 5)
-        getter = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", None
-        )
-        cond = (getter() if getter is not None else "") or str(exc)
         if (
-            "PATH_NOT_FOUND" not in cond
+            "PATH_NOT_FOUND" not in _condition(exc)
             and "Path does not exist" not in str(exc)
         ):
             raise
         return None
+
+
+def _condition(exc: AnalysisException) -> str:
+    """The Spark error class of ``exc`` (its message if it has none).
+    getCondition is the Spark 4 name; getErrorClass the deprecated
+    3.x one (it warns on call) — absorbing that drift here keeps the
+    classifications below on one spelling (review r15, pass 5)."""
+    getter = getattr(exc, "getCondition", None) or getattr(
+        exc, "getErrorClass", None
+    )
+    return (getter() if getter is not None else "") or str(exc)
 
 
 def read_required_meta(
@@ -99,11 +101,19 @@ def read_required_meta(
     crashed (re)build or publish leaves behind — raises a ValueError
     naming ``what`` and the rebuild seam. With ``required=False`` an
     ABSENT meta dir returns None instead (the IVF streaming-maintained
-    layout) while a present-but-malformed one still refuses."""
-    meta = read_if_exists(spark, f"{path}/meta")
-    if meta is None and not required:
-        return None
-    rows = [] if meta is None else meta.collect()
+    layout) while a present-but-malformed one still refuses — so does
+    a present dir holding no data file (a meta job that died after
+    creating its output dir), whose schema Spark cannot infer."""
+    try:
+        meta = read_if_exists(spark, f"{path}/meta")
+    except AnalysisException as exc:
+        if "UNABLE_TO_INFER_SCHEMA" not in _condition(exc):
+            raise
+        rows = []
+    else:
+        if meta is None and not required:
+            return None
+        rows = [] if meta is None else meta.collect()
     if len(rows) != 1 or any(rows[0][f] is None for f in fields):
         raise ValueError(
             f"{what} at {path} has a missing or malformed meta "

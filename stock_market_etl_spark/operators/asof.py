@@ -24,7 +24,6 @@ def asof_join(
     right: DataFrame,
     on: str,
     key: str,
-    suffix: str = "_right",
 ) -> DataFrame:
     """For each left row, attach the latest right row with
     ``right[on] <= left[on]`` within the same ``key`` partition.
@@ -37,7 +36,7 @@ def asof_join(
     r_tag = right.select(
         key,
         on,
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(c).alias(f"{c}_right") for c in value_cols],
     ).withColumn("__is_left", F.lit(0))
     unioned = l_tag.unionByName(r_tag, allowMissingColumns=True)
 
@@ -58,7 +57,7 @@ def asof_join(
         F.col("__is_left") == 0,
         F.struct(
             F.col(on).alias("__on"),
-            *[F.col(f"{c}{suffix}").alias(c) for c in value_cols],
+            *[F.col(f"{c}_right").alias(c) for c in value_cols],
         ),
     )
     filled = unioned.select(
@@ -67,8 +66,8 @@ def asof_join(
     m = F.col("__m")
     return filled.filter(F.col("__is_left") == 1).select(
         *left.columns,
-        m["__on"].alias(f"{on}{suffix}"),
-        *[m[c].alias(f"{c}{suffix}") for c in value_cols],
+        m["__on"].alias(f"{on}_right"),
+        *[m[c].alias(f"{c}_right") for c in value_cols],
     )
 
 
@@ -77,7 +76,6 @@ def asof_join_directional(
     right: DataFrame,
     on: str,
     key: str,
-    suffix: str = "_right",
     direction: str = "backward",
     tolerance: float | None = None,
 ) -> DataFrame:
@@ -106,7 +104,7 @@ def asof_join_directional(
     r_tag = right.select(
         key,
         on,
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(c).alias(f"{c}_right") for c in value_cols],
     ).withColumn("__is_left", F.lit(0))
     unioned = l_tag.unionByName(r_tag, allowMissingColumns=True)
 
@@ -128,7 +126,7 @@ def asof_join_directional(
             F.col("__is_left") == 0,
             F.struct(
                 F.col(on).alias("__on"),
-                *[F.col(f"{c}{suffix}").alias(c) for c in value_cols],
+                *[F.col(f"{c}_right").alias(c) for c in value_cols],
             ),
         )
         return F.last(row, ignorenulls=True).over(w).alias(f"__{prefix}")
@@ -169,8 +167,8 @@ def asof_join_directional(
 
     return filled.select(
         *left.columns,
-        pick("__on").alias(f"{on}{suffix}"),
-        *[pick(c).alias(f"{c}{suffix}") for c in value_cols],
+        pick("__on").alias(f"{on}_right"),
+        *[pick(c).alias(f"{c}_right") for c in value_cols],
     )
 
 

@@ -37,17 +37,15 @@ from stock_market_etl_spark.operators.text import char_shingles
 
 def exact_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     payload_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Exact dedup on content hash, keeping the lowest-id row per group
-    (deterministic given UNIQUE ``id_col`` values — with duplicate ids
+    (deterministic given UNIQUE ``doc_id`` values — with duplicate ids
     inside a hash group ``min_by`` may pick either tied row; callers
     needing dedup over a non-key column should pre-assign a surrogate
     id, e.g. ``monotonically_increasing_id``).
 
-    ``payload_cols`` is the set of columns (besides ``id_col``) carried
+    ``payload_cols`` is the set of columns (besides ``doc_id``) carried
     through the aggregate — and therefore through the SHUFFLE. The
     default ``None`` keeps every column for drop-in convenience, but at
     100 TB that ships document bodies through the exchange; pass the
@@ -62,42 +60,31 @@ def exact_dedup(
     partition and the exchange carries ≤ one candidate row per (hash,
     partition); the window form would shuffle EVERY input row to its
     hash partition first. Input column order is preserved."""
-    hashed = df.withColumn("content_hash", F.sha2(F.col(text_col), 256))
+    hashed = df.withColumn("content_hash", F.sha2(F.col("text"), 256))
     if payload_cols is None:
         keep = [c for c in df.columns]
     else:
-        wanted = set(payload_cols) | {id_col}
+        wanted = set(payload_cols) | {"doc_id"}
         keep = [c for c in df.columns if c in wanted]
     return (
         hashed.groupBy("content_hash")
         .agg(
-            F.min_by(F.struct(*keep), F.col(id_col)).alias("__keep"),
+            F.min_by(F.struct(*keep), F.col("doc_id")).alias("__keep"),
             F.count("*").alias("n_copies"),
         )
         .select(*[f"__keep.{c}" for c in keep], "content_hash", "n_copies")
     )
 
 
-def _block_cond(
-    a_prefix: str,
-    b_prefix: str,
-    block_cols: tuple[str, ...],
-    length_col: str,
-    length_window: int,
-) -> Column:
+def _block_cond(a_prefix: str, b_prefix: str) -> Column:
     """Shared blocking predicate for the exact-Jaccard joins: equal
-    block keys and |length delta| ≤ window, over ``{prefix}{col}``
+    ``lang`` and |``n_chars`` delta| ≤ 20, over ``{prefix}{col}``
     aliased frames. ONE definition so the self-join (jaccard_pairs)
     and batch-vs-corpus (incremental_dedup) paths can't drift."""
-    cond = (
-        F.abs(
-            F.col(f"{a_prefix}{length_col}") - F.col(f"{b_prefix}{length_col}")
-        )
-        <= length_window
+    length = F.abs(F.col(f"{a_prefix}n_chars") - F.col(f"{b_prefix}n_chars"))
+    return (length <= 20) & (
+        F.col(f"{a_prefix}lang") == F.col(f"{b_prefix}lang")
     )
-    for c in block_cols:
-        cond = cond & (F.col(f"{a_prefix}{c}") == F.col(f"{b_prefix}{c}"))
-    return cond
 
 
 def _jaccard_expr(a_shingles: str, b_shingles: str) -> Column:
@@ -108,16 +95,7 @@ def _jaccard_expr(a_shingles: str, b_shingles: str) -> Column:
     return inter.cast("double") / union
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = ("lang",),
-    length_col: str = "n_chars",
-    length_window: int = 20,
-    shingle_n: int = 3,
-    threshold: float = 0.0,
-) -> DataFrame:
+def jaccard_pairs(df: DataFrame, threshold: float = 0.0) -> DataFrame:
     """Exact character-shingle Jaccard similarity over blocked candidate
     pairs (same block keys, |length delta| ≤ window, id_a < id_b).
 
@@ -127,16 +105,16 @@ def jaccard_pairs(
     """
     sh = spread(
         df.select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            F.col(length_col),
-            F.col(text_col),
+            F.col("doc_id"),
+            F.col("lang"),
+            F.col("n_chars"),
+            F.col("text"),
         )
     ).select(
-        F.col(id_col),
-        *[F.col(c) for c in block_cols],
-        F.col(length_col),
-        char_shingles(F.col(text_col), shingle_n).alias("shingles"),
+        F.col("doc_id"),
+        F.col("lang"),
+        F.col("n_chars"),
+        char_shingles(F.col("text")).alias("shingles"),
     ).persist()  # both self-join sides read it — shingle once, not twice
     a = sh.select(
         *[F.col(c).alias(f"a_{c}") for c in sh.columns]
@@ -144,14 +122,12 @@ def jaccard_pairs(
     b = sh.select(
         *[F.col(c).alias(f"b_{c}") for c in sh.columns]
     )
-    cond = (F.col(f"a_{id_col}") < F.col(f"b_{id_col}")) & _block_cond(
-        "a_", "b_", block_cols, length_col, length_window
-    )
+    cond = (F.col("a_doc_id") < F.col("b_doc_id")) & _block_cond("a_", "b_")
     out = (
         a.join(b, cond)
         .select(
-            F.col(f"a_{id_col}").alias("id_a"),
-            F.col(f"b_{id_col}").alias("id_b"),
+            F.col("a_doc_id").alias("id_a"),
+            F.col("b_doc_id").alias("id_b"),
             _jaccard_expr("a_shingles", "b_shingles").alias("jaccard"),
         )
     )
@@ -162,8 +138,6 @@ def jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram: int = 5,
     threshold: float = 0.5,
     max_ids_per_gram: int = 500,
@@ -196,9 +170,9 @@ def containment_pairs(
     exact intersection — two id-grain joins, arrays bounded by doc
     length, text never shuffles. Same economy as the x49/x69
     families."""
-    toks = word_tokens(F.col(text_col))
+    toks = word_tokens(F.col("text"))
     base = (
-        df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+        df.select(F.col("doc_id").alias("__id"), toks.alias("__toks"))
         .filter(F.size("__toks") >= ngram)
         .select(
             "__id",
@@ -267,8 +241,8 @@ def word_tokens(text_col: Column) -> Column:
     return F.array_remove(F.split(F.lower(F.trim(text_col)), r"\s+"), "")
 
 
-def word_ngram_hashes(tokens_col: Column, n: int = 3) -> Column:
-    """Distinct 64-bit hashes of word ``n``-grams over a MATERIALIZED
+def word_ngram_hashes(tokens_col: Column) -> Column:
+    """Distinct 64-bit hashes of word 3-grams over a MATERIALIZED
     token array — the shingle-set feature space for MinHash/Jaccard.
 
     ``tokens_col`` must be a plain column reference (project
@@ -278,17 +252,15 @@ def word_ngram_hashes(tokens_col: Column, n: int = 3) -> Column:
     tokenization once per n-gram per row (~50× the work, measured)."""
     grams = F.transform(
         F.sequence(
-            F.lit(1), F.greatest(F.size(tokens_col) - (n - 1), F.lit(1))
+            F.lit(1), F.greatest(F.size(tokens_col) - 2, F.lit(1))
         ),
-        lambda i: F.concat_ws(" ", F.slice(tokens_col, i, n)),
+        lambda i: F.concat_ws(" ", F.slice(tokens_col, i, 3)),
     )
     return F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
 
 
 def minhash_tables(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     seed: int = 42,
     rows_per_band: int = 2,
@@ -375,17 +347,17 @@ def minhash_tables(
     # work runs 4×/2× (verified in the optimized plan). At 100 TB the
     # same move is writing the signature table to the lake once and
     # joining against it; MEMORY_AND_DISK is the single-job analogue.
-    sh = spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("__tokens")
+    sh = spread(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), word_tokens(F.col("text")).alias("__tokens")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         word_ngram_hashes(F.col("__tokens")).alias("__shingles"),
     ).persist()
     # posexplode_OUTER, not posexplode: the inner form makes Catalyst
     # infer a size()>0 filter on the UDF result and push it below the
     # projection — running the signature UDF twice per row
     bands = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode_outer(signature(F.col("__shingles"))).alias(
             "band_idx", "band_val"
         ),
@@ -393,15 +365,7 @@ def minhash_tables(
     return sh, bands
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    seed: int = 42,
-    threshold: float = 0.5,
-    rows_per_band: int = 2,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash LSH near-dup pairs (the 100 TB dedup path):
     word-3-gram shingle hashes → MinHash signatures → banded bucket
     equi-join → exact Jaccard re-rank on the candidate set.
@@ -416,19 +380,12 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, jaccard_dist) with jaccard ≥ ``threshold``
     (distance = 1 − exact set Jaccard).
     """
-    sh, bands = minhash_tables(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        seed=seed,
-        rows_per_band=rows_per_band,
-    )
+    sh, bands = minhash_tables(df)
     a_side = bands.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_val"
+        F.col("doc_id").alias("id_a"), "band_idx", "band_val"
     )
     b_side = bands.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("band_idx").alias("__bi"),
         F.col("band_val").alias("__bv"),
     )
@@ -443,10 +400,14 @@ def minhash_lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     cand = pairs.join(
-        sh.select(F.col(id_col).alias("id_a"), F.col("__shingles").alias("__sa")),
+        sh.select(
+            F.col("doc_id").alias("id_a"), F.col("__shingles").alias("__sa")
+        ),
         "id_a",
     ).join(
-        sh.select(F.col(id_col).alias("id_b"), F.col("__shingles").alias("__sb")),
+        sh.select(
+            F.col("doc_id").alias("id_b"), F.col("__shingles").alias("__sb")
+        ),
         "id_b",
     )
     inter = F.size(F.array_intersect("__sa", "__sb"))
@@ -480,9 +441,7 @@ def _simhash_vote(hashes: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash signatures: per-token 64-bit hashes, bit-majority vote.
 
     A document's tokens all come from its own row, so the signature
@@ -494,33 +453,27 @@ def simhash(
     form paid one shuffle AND seconds of Catalyst analysis on the
     64-expression tree (see SCALE.md on interpreted-tree cost).
     """
-    hashed = spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col),
+    hashed = spread(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"),
         F.expr(
-            rf"transform(split(trim({text_col}), '\\s+'), t -> xxhash64(t))"
+            r"transform(split(trim(text), '\\s+'), t -> xxhash64(t))"
         ).alias("__hs"),
     )
     return hashed.filter(F.col("__hs").isNotNull()).select(
-        F.col(id_col), _simhash_vote("__hs").alias("simhash")
+        F.col("doc_id"), _simhash_vote("__hs").alias("simhash")
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup candidates by SimHash: band the 64-bit signature into
-    ``n_bands`` 16-bit keys (pigeonhole: ≤3 differing bits ⇒ at least
+    four 16-bit keys (pigeonhole: ≤3 differing bits ⇒ at least
     one identical band), bucket-join on band value, verify Hamming
     distance ≤ ``max_hamming``. Join cost is bounded by band-bucket
     collisions — the scalable alternative to an all-pairs comparison."""
-    sigs = simhash(df, text_col, id_col)
-    band_width = 64 // n_bands
+    sigs = simhash(df)
+    band_width = 16
     bands = sigs.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -531,21 +484,21 @@ def simhash_near_pairs(
                             "simhash", i * band_width
                         ).bitwiseAND((1 << band_width) - 1).alias("key"),
                     )
-                    for i in range(n_bands)
+                    for i in range(4)
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, "simhash", "bk.band", "bk.key").persist()
+    ).select("doc_id", "simhash", "bk.band", "bk.key").persist()
     # ^ the signature agg (explode + 64-bit-vote groupBy) feeds both
     # self-join sides; materialize it once
     a = bands.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col("simhash").alias("sig_a"),
         "band",
         "key",
     )
     b = bands.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("simhash").alias("sig_b"),
         "band",
         "key",
@@ -564,8 +517,6 @@ def simhash_near_pairs(
 
 def connected_components(
     pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iterations: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected pair graph → one row per
@@ -604,8 +555,8 @@ def connected_components(
 
     # undirected: propagate both ways
     edges = (
-        pairs.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .union(pairs.select(F.col(dst_col), F.col(src_col)))
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .union(pairs.select(F.col("id_b"), F.col("id_a")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -661,8 +612,6 @@ def connected_components(
 def near_dup_clusters(
     df: DataFrame,
     threshold: float = 0.6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     source: str = "exact",
 ) -> DataFrame:
     """Near-duplicate clusters: near-dup pairs chained into connected
@@ -682,27 +631,18 @@ def near_dup_clusters(
       MinHash S-curve (tests/test_extensions.py).
     """
     if source == "exact":
-        pairs = jaccard_pairs(
-            df, text_col=text_col, id_col=id_col, threshold=threshold
-        )
+        pairs = jaccard_pairs(df, threshold=threshold)
     elif source == "lsh":
-        pairs = minhash_lsh_pairs(
-            df, text_col=text_col, id_col=id_col, threshold=threshold
-        )
+        pairs = minhash_lsh_pairs(df, threshold=threshold)
     else:
         raise ValueError(f"unknown pair source: {source!r}")
     return connected_components(pairs).select(
-        F.col("id").alias(id_col), "cluster_rep"
+        F.col("id").alias("doc_id"), "cluster_rep"
     )
 
 
 def corpus_signatures(
     corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    seed: int = 42,
-    rows_per_band: int = 2,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three corpus-side identity tables ``incremental_dedup``
     joins arriving batches against: ``(hashes, shingles, bands)`` —
@@ -714,61 +654,41 @@ def corpus_signatures(
     corpus release, written to the lake (`write_corpus_signatures`),
     and reused by every arriving batch — each increment then costs a
     hash anti-join plus a band-bucket join against MATERIALIZED
-    tables, never a rescan of corpus text. Same ``seed`` ⇒ the same
-    hash family, so batch-side signatures computed later are
-    join-compatible (the contract `minhash_tables` documents).
+    tables, never a rescan of corpus text. One fixed (num_hashes=32,
+    seed=42, rows_per_band=2) ⇒ the same hash family, so batch-side
+    signatures computed later are join-compatible (the contract
+    `minhash_tables` documents).
     """
     hashes = corpus.select(
-        F.sha2(F.col(text_col), 256).alias("content_hash")
+        F.sha2(F.col("text"), 256).alias("content_hash")
     ).distinct()
-    shingles, bands = minhash_tables(
-        corpus,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        seed=seed,
-        rows_per_band=rows_per_band,
-    )
+    shingles, bands = minhash_tables(corpus)
     return hashes, shingles, bands
 
 
-def write_corpus_signatures(
-    corpus: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    seed: int = 42,
-    rows_per_band: int = 2,
-) -> None:
+def write_corpus_signatures(corpus: DataFrame, path: str) -> None:
     """Materialize ``corpus_signatures`` to ``path/{hashes,shingles,
     bands, meta}`` as parquet — the once-per-corpus-version step of
     the incremental-dedup lifecycle. Shingle arrays are the widest
     table (~K longs per doc); hashes/bands are fixed-width rows, so
     the artifact is a small fraction of corpus text size.
 
-    ``(num_hashes, seed, rows_per_band)`` are the artifact's JOIN
-    IDENTITY — batch-side signatures computed under any other family
-    land in disjoint band buckets and silently find no candidates —
-    so they land in a meta sidecar `read_corpus_signatures` returns
-    and `incremental_dedup` validates (review r15). Written under the
+    ``(num_hashes, seed, rows_per_band)`` = (32, 42, 2) are the
+    artifact's JOIN IDENTITY — batch-side signatures computed under
+    any other family land in disjoint band buckets and silently find
+    no candidates — so they land in a meta sidecar
+    `read_corpus_signatures` returns and `incremental_dedup` validates
+    (review r15). Written under the
     `artifacts` release protocol: a rebuild crash between the three
     data writes reads as the malformed-meta refusal, not as
     mixed-release halves that dedup wrongly."""
-    hashes, shingles, bands = corpus_signatures(
-        corpus,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        seed=seed,
-        rows_per_band=rows_per_band,
-    )
+    hashes, shingles, bands = corpus_signatures(corpus)
     artifacts.write_release(
         corpus.sparkSession,
         path,
         {"hashes": hashes, "shingles": shingles, "bands": bands},
         "num_hashes int, seed int, rows_per_band int",
-        (num_hashes, seed, rows_per_band),
+        (32, 42, 2),
         "overwrite",
     )
     # minhash_tables persists its outputs for multi-consumer plans;
@@ -808,15 +728,8 @@ def incremental_dedup(
     corpus: DataFrame | None,
     batch: DataFrame,
     threshold: float = 0.6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = ("lang",),
-    length_col: str = "n_chars",
-    length_window: int = 20,
     source: str = "exact",
-    num_hashes: int = 32,
     seed: int = 42,
-    rows_per_band: int = 2,
     corpus_sigs: (
         tuple[DataFrame, DataFrame, DataFrame]
         | tuple[DataFrame, DataFrame, DataFrame, tuple[int, int, int]]
@@ -857,8 +770,8 @@ def incremental_dedup(
     pre-computed — the materialized 100 TB path: with it the call
     never touches corpus text at all (``corpus`` may be None for
     ``source="lsh"``), so per-batch cost is independent of corpus
-    size. They must have been built with the same ``seed`` /
-    ``num_hashes`` / ``rows_per_band`` — and when the tuple carries
+    size. They must have been built with the same ``seed`` (and the
+    fixed num_hashes=32 / rows_per_band=2) — and when the tuple carries
     the artifact's recorded parameters as a 4th element (what
     `read_corpus_signatures` returns), a contradiction with this
     call's arguments refuses LOUDLY (review r15): a mismatched hash
@@ -872,15 +785,15 @@ def incremental_dedup(
         # the recorded family matters only when batch-side MinHash
         # signatures will be computed — source='exact' uses just the
         # family-independent content hashes (review r15, pass 5)
-        if source == "lsh" and rec != (num_hashes, seed, rows_per_band):
+        if source == "lsh" and rec != (32, seed, 2):
             raise ValueError(
                 f"corpus signatures were built with (num_hashes, "
                 f"seed, rows_per_band)={rec} but this call "
                 f"computes batch signatures at "
-                f"{(num_hashes, seed, rows_per_band)} — different "
+                f"{(32, seed, 2)} — different "
                 "hash families land in disjoint band buckets and "
                 "silently find no candidates; pass the recorded "
-                "parameters"
+                "seed"
             )
     if corpus_sigs is not None:
         c_hash = corpus_sigs[0].select(
@@ -888,40 +801,26 @@ def incremental_dedup(
         )
     elif corpus is not None:
         c_hash = corpus.select(
-            F.sha2(F.col(text_col), 256).alias("__h")
+            F.sha2(F.col("text"), 256).alias("__h")
         ).distinct()
     else:
         raise ValueError("need corpus or corpus_sigs")
-    b_hashed = batch.withColumn("__h", F.sha2(F.col(text_col), 256))
+    b_hashed = batch.withColumn("__h", F.sha2(F.col("text"), 256))
     no_exact = b_hashed.join(c_hash, "__h", "left_anti").drop("__h")
 
     if source == "lsh":
         if corpus_sigs is not None:
             _, c_sh, c_bands = corpus_sigs
         else:
-            c_sh, c_bands = minhash_tables(
-                corpus,
-                text_col=text_col,
-                id_col=id_col,
-                num_hashes=num_hashes,
-                seed=seed,
-                rows_per_band=rows_per_band,
-            )
-        b_sh, b_bands = minhash_tables(
-            no_exact,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            seed=seed,
-            rows_per_band=rows_per_band,
-        )
+            c_sh, c_bands = minhash_tables(corpus, seed=seed)
+        b_sh, b_bands = minhash_tables(no_exact, seed=seed)
         cand = (
             b_bands.select(
-                F.col(id_col).alias("b_id"), "band_idx", "band_val"
+                F.col("doc_id").alias("b_id"), "band_idx", "band_val"
             )
             .join(
                 c_bands.select(
-                    F.col(id_col).alias("c_id"),
+                    F.col("doc_id").alias("c_id"),
                     F.col("band_idx").alias("__bi"),
                     F.col("band_val").alias("__bv"),
                 ),
@@ -934,23 +833,23 @@ def incremental_dedup(
         near_ids = (
             cand.join(
                 b_sh.select(
-                    F.col(id_col).alias("b_id"),
+                    F.col("doc_id").alias("b_id"),
                     F.col("__shingles").alias("__sb"),
                 ),
                 "b_id",
             )
             .join(
                 c_sh.select(
-                    F.col(id_col).alias("c_id"),
+                    F.col("doc_id").alias("c_id"),
                     F.col("__shingles").alias("__sc"),
                 ),
                 "c_id",
             )
             .filter(_jaccard_expr("__sb", "__sc") >= threshold)
-            .select(F.col("b_id").alias(id_col))
+            .select(F.col("b_id").alias("doc_id"))
             .distinct()
         )
-        return no_exact.join(near_ids, id_col, "left_anti")
+        return no_exact.join(near_ids, "doc_id", "left_anti")
     if source != "exact":
         raise ValueError(f"unknown near-dup source: {source!r}")
     if corpus is None:
@@ -960,33 +859,26 @@ def incremental_dedup(
         )
 
     b_sh = no_exact.select(
-        F.col(id_col).alias("b_id"),
-        *[F.col(c).alias(f"b_{c}") for c in block_cols],
-        F.col(length_col).alias(f"b_{length_col}"),
-        char_shingles(F.col(text_col)).alias("b_shingles"),
+        F.col("doc_id").alias("b_id"),
+        F.col("lang").alias("b_lang"),
+        F.col("n_chars").alias("b_n_chars"),
+        char_shingles(F.col("text")).alias("b_shingles"),
     )
     c_sh = corpus.select(
-        *[F.col(c).alias(f"c_{c}") for c in block_cols],
-        F.col(length_col).alias(f"c_{length_col}"),
-        char_shingles(F.col(text_col)).alias("c_shingles"),
+        F.col("lang").alias("c_lang"),
+        F.col("n_chars").alias("c_n_chars"),
+        char_shingles(F.col("text")).alias("c_shingles"),
     )
     near_ids = (
-        b_sh.join(
-            c_sh,
-            _block_cond("b_", "c_", block_cols, length_col, length_window),
-        )
+        b_sh.join(c_sh, _block_cond("b_", "c_"))
         .filter(_jaccard_expr("b_shingles", "c_shingles") >= threshold)
-        .select(F.col("b_id").alias(id_col))
+        .select(F.col("b_id").alias("doc_id"))
         .distinct()
     )
-    return no_exact.join(near_ids, id_col, "left_anti")
+    return no_exact.join(near_ids, "doc_id", "left_anti")
 
 
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Release audit between two corpus versions at CONTENT identity:
     one row per distinct content hash with status ``added`` (only in
     ``new``), ``removed`` (only in ``old``) or ``kept``, plus each
@@ -999,10 +891,10 @@ def corpus_diff(
     partial aggregation before the full-outer hash join — the shuffle
     carries one ~40-byte row per distinct content, never text, and the
     join key is the hash (uniform, skew-free by construction)."""
-    o = old.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash")).agg(
+    o = old.groupBy(F.sha2(F.col("text"), 256).alias("content_hash")).agg(
         F.count("*").alias("old_copies")
     )
-    n = new.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash")).agg(
+    n = new.groupBy(F.sha2(F.col("text"), 256).alias("content_hash")).agg(
         F.count("*").alias("new_copies")
     )
     status = (
@@ -1018,12 +910,7 @@ def corpus_diff(
     )
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    para_tokens: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, para_tokens: int = 20) -> DataFrame:
     """Span-grain exact dedup (the C4/Gopher "remove repeated spans"
     move, word-window form): split each document into non-overlapping
     ``para_tokens``-token blocks, keep only the globally FIRST
@@ -1055,30 +942,30 @@ def paragraph_dedup(
     """
     from stock_market_etl_spark.operators.text import tokens
 
-    toks = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
+    toks = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__t"))
     n = F.size("__t")
     starts = F.sequence(F.lit(1), F.greatest(n, F.lit(1)), F.lit(para_tokens))
     blocks = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 starts, lambda s: F.slice(F.col("__t"), s, para_tokens)
             )
         ).alias("__idx", "__b"),
     ).select(
-        id_col,
+        "doc_id",
         "__idx",
         F.unhex(F.sha2(F.concat_ws(" ", F.col("__b")), 256)).alias("__h"),
     )
     from pyspark.sql import Window
 
     first = F.row_number().over(
-        Window.partitionBy("__h").orderBy(id_col, "__idx")
+        Window.partitionBy("__h").orderBy("doc_id", "__idx")
     )
     kept = (
         blocks.withColumn("__rn", first)
         .filter(F.col("__rn") == 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("__idx")).alias("__keep"))
     )
     rebuilt = F.concat_ws(
@@ -1092,8 +979,8 @@ def paragraph_dedup(
             )
         ),
     )
-    return toks.join(kept, id_col, "left").select(
-        id_col,
+    return toks.join(kept, "doc_id", "left").select(
+        "doc_id",
         rebuilt.alias("kept_text"),
         # size(NULL) is -1, not NULL — guard with when, not coalesce
         F.when(F.col("__keep").isNull(), F.lit(0))
@@ -1108,8 +995,6 @@ def boilerplate_prune(
     docs: DataFrame,
     para_tokens: int = 20,
     min_docs: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-wide boilerplate removal (the C4 "discard any line that
     occurs in three or more documents" rule, word-window form): split
@@ -1141,30 +1026,30 @@ def boilerplate_prune(
     """
     from stock_market_etl_spark.operators.text import tokens
 
-    toks = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
+    toks = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__t"))
     n = F.size("__t")
     starts = F.sequence(F.lit(1), F.greatest(n, F.lit(1)), F.lit(para_tokens))
     blocks = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 starts, lambda s: F.slice(F.col("__t"), s, para_tokens)
             )
         ).alias("__idx", "__b"),
     ).select(
-        id_col,
+        "doc_id",
         "__idx",
         F.unhex(F.sha2(F.concat_ws(" ", F.col("__b")), 256)).alias("__h"),
     )
     banned = (
         blocks.groupBy("__h")
-        .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("__nd"))
         .filter(F.col("__nd") >= min_docs)
         .select("__h")
     )
     kept = (
         blocks.join(banned, "__h", "left_anti")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("__idx")).alias("__keep"))
     )
     rebuilt = F.concat_ws(
@@ -1178,8 +1063,8 @@ def boilerplate_prune(
             )
         ),
     )
-    return toks.join(kept, id_col, "left").select(
-        id_col,
+    return toks.join(kept, "doc_id", "left").select(
+        "doc_id",
         rebuilt.alias("kept_text"),
         # size(NULL) is -1, not NULL — guard with when, not coalesce
         F.when(F.col("__keep").isNull(), F.lit(0))
@@ -1193,13 +1078,7 @@ def boilerplate_prune(
 # --- winnowing fingerprints (MOSS-style local fingerprinting) -------------
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): normalize text (lowercase, strip
     non-alphanumerics), hash every character ``k``-gram, slide a
@@ -1241,16 +1120,16 @@ def winnow_fingerprints(
     the exchange cost belongs to whatever consumes the (id, pos, hash)
     rows (~2/(w+1) of the gram count, never the text).
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")
+    norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", "")
     # spread BEFORE the per-doc compute: a single-file corpus is one
     # partition and the stage is bounded by Python hashing, not IO
     # (parallelism.spread is a no-op on wide inputs — at scale this
     # adds nothing; locally it round-robins just id+text).
-    base = spread(docs.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), norm.alias("__t")
+    base = spread(docs.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), norm.alias("__t")
     ).filter(F.length("__t") >= k)
-    id_type = docs.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, fp_pos bigint, fp_hash bigint"
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    out_schema = f"doc_id {id_type}, fp_pos bigint, fp_hash bigint"
 
     def _winnow(batches):
         import hashlib
@@ -1346,7 +1225,7 @@ def winnow_fingerprints(
                     _select(h, counts, pos_parts, hash_parts)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf["__id"].values, counts)
+                    "doc_id": np.repeat(pdf["__id"].values, counts)
                     if counts
                     else pdf["__id"].values,
                     "fp_pos": np.concatenate(pos_parts)
@@ -1359,7 +1238,7 @@ def winnow_fingerprints(
             )
 
     return base.select(
-        F.col(id_col).alias("__id"), "__t"
+        F.col("doc_id").alias("__id"), "__t"
     ).mapInPandas(_winnow, schema=out_schema)
 
 
@@ -1369,8 +1248,6 @@ def winnow_near_dup(
     w: int = 16,
     min_shared: int = 8,
     max_docs_per_fp: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-duplicate pairs by shared winnowing fingerprints: two
     documents pair when they share at least ``min_shared`` distinct
@@ -1395,9 +1272,9 @@ def winnow_near_dup(
     # set and both self-join sides) — winnow once, not three times
     # (lifecycle per module docstring).
     fps = (
-        winnow_fingerprints(docs, k, w, text_col, id_col)
+        winnow_fingerprints(docs, k, w)
         .select(
-            F.col(id_col).alias("__d"),
+            F.col("doc_id").alias("__d"),
             F.col("fp_hash").alias("__h"),
         )
         .distinct()
@@ -1425,8 +1302,6 @@ def keep_best_dedup(
     docs: DataFrame,
     score: Column,
     threshold: float = 0.6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     source: str = "exact",
 ) -> DataFrame:
     """Quality-AWARE near-duplicate dedup: chain near-dup pairs into
@@ -1449,19 +1324,16 @@ def keep_best_dedup(
     """
     from pyspark.sql import Window
 
-    clusters = near_dup_clusters(
-        docs, threshold=threshold, text_col=text_col,
-        id_col=id_col, source=source,
-    )
-    scored = docs.select(F.col(id_col), score.alias("__q"))
-    memb = clusters.join(scored, id_col)
+    clusters = near_dup_clusters(docs, threshold=threshold, source=source)
+    scored = docs.select(F.col("doc_id"), score.alias("__q"))
+    memb = clusters.join(scored, "doc_id")
     wc = Window.partitionBy("cluster_rep")
     wr = Window.partitionBy("cluster_rep").orderBy(
-        F.col("__q").desc(), F.col(id_col).asc()
+        F.col("__q").desc(), F.col("doc_id").asc()
     )
     best = (
         memb.select(
-            id_col,
+            "doc_id",
             "__q",
             F.row_number().over(wr).alias("__rn"),
             F.count("*").over(wc).alias("cluster_size"),
@@ -1470,12 +1342,12 @@ def keep_best_dedup(
         .drop("__rn")
     )
     singles = scored.join(
-        clusters.select(id_col), id_col, "left_anti"
+        clusters.select("doc_id"), "doc_id", "left_anti"
     ).withColumn("cluster_size", F.lit(1).cast("long"))
     return (
         best.unionByName(singles)
         .select(
-            id_col,
+            "doc_id",
             F.col("cluster_size").cast("long").alias("cluster_size"),
             F.round("__q", 6).alias("quality"),
         )
@@ -1545,14 +1417,12 @@ def exact_substring_spans_keep_one(
     docs: DataFrame,
     k: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """`exact_substring_spans` with Lee et al.'s KEEP-ONE policy
     (their published dedup keeps one occurrence of each duplicated
     substring; x71/x72's every-copy stance is C4's): each flagged
     window is charged to every holder EXCEPT its KEEPER — the minimum
-    ``id_col`` among the documents holding that window content — so
+    ``doc_id`` among the documents holding that window content — so
     exact-duplicate documents resolve to "min id keeps its text,
     the rest cut", and a duplicated paragraph survives verbatim in
     its first holder. Keeper choice is per WINDOW (content identity),
@@ -1568,24 +1438,24 @@ def exact_substring_spans_keep_one(
     flag aggregate carries one extra 8-byte min(id) column; the hit
     join swaps left_semi for an inner join plus a scan-local keeper
     inequality."""
-    g = _window_hash_stream(docs, k, text_col, id_col)
+    g = _window_hash_stream(docs, k, "text", "doc_id")
     flagged = (
-        g.select("__h", id_col)
+        g.select("__h", "doc_id")
         .distinct()
         .groupBy("__h")
         .agg(
             F.count("*").alias("__nd"),
-            F.min(id_col).alias("__keeper"),
+            F.min("doc_id").alias("__keeper"),
         )
         .filter(F.col("__nd") >= min_docs)
         .select("__h", "__keeper")
     )
     hits = (
         g.join(flagged, "__h")
-        .filter(F.col(id_col) != F.col("__keeper"))
-        .select(id_col, "__pos")
+        .filter(F.col("doc_id") != F.col("__keeper"))
+        .select("doc_id", "__pos")
     )
-    return _merge_flagged_spans(hits, k, id_col)
+    return _merge_flagged_spans(hits, k, "doc_id")
 
 
 def _window_hash_stream(
@@ -1705,8 +1575,6 @@ def build_window_bloom(
     reference: DataFrame,
     k: int = 8,
     fpp: float = 0.01,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> tuple[bytes, int, int, int, int]:
     """Build a BLOOM FILTER over a reference corpus's distinct
     k-token window hashes — the memory-bounded tier of the
@@ -1739,7 +1607,7 @@ def build_window_bloom(
     count() job sizes ``m`` from the exact distinct-window count via
     the public `bloom_sizing` seam."""
     hashes = (
-        _window_hash_stream(reference, k, text_col, id_col)
+        _window_hash_stream(reference, k, "text", "doc_id")
         .select("__h")
         .distinct()
         .persist()
@@ -1933,8 +1801,6 @@ def merge_window_bloom(
     new_docs: DataFrame,
     built_k: int,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     fpp: float = 0.01,
 ) -> tuple[bytes, int, int, int, int]:
     """Fold NEW documents into an existing window Bloom filter
@@ -1979,7 +1845,7 @@ def merge_window_bloom(
     import numpy as np
 
     hashes = (
-        _window_hash_stream(new_docs, k, text_col, id_col)
+        _window_hash_stream(new_docs, k, "text", "doc_id")
         .select("__h")
         .distinct()
         .persist()
@@ -2293,13 +2159,7 @@ def bloom_contaminated_spans(
 _WINDOW_INDEX_META = "k int"
 
 
-def write_window_index(
-    corpus: DataFrame,
-    path: str,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def write_window_index(corpus: DataFrame, path: str, k: int = 8) -> None:
     """Materialize `corpus_window_hashes` to ``path/{window_hashes,
     meta}`` — the once-per-corpus-release step of the substring-dedup
     lifecycle (the window-grain sibling of `write_corpus_signatures`
@@ -2317,9 +2177,7 @@ def write_window_index(
     append-mergeable: counts sum by hash when the corpus grows by
     appends of new doc ids. Written as an in-place rebuild under the
     `artifacts` release protocol."""
-    idx = corpus_window_hashes(
-        corpus, k=k, text_col=text_col, id_col=id_col
-    )
+    idx = corpus_window_hashes(corpus, k=k)
     artifacts.write_release(
         corpus.sparkSession,
         path,
@@ -2369,8 +2227,6 @@ def merge_window_index(
     new_docs: DataFrame,
     built_k: int,
     k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fold NEW documents into an existing `corpus_window_hashes`
     index WITHOUT re-hashing the indexed corpus — the incremental
@@ -2400,9 +2256,7 @@ def merge_window_index(
             f"requested k={k} — a mixed-width index under-flags "
             "silently; rebuild the index or merge at its k"
         )
-    new_counts = corpus_window_hashes(
-        new_docs, k=k, text_col=text_col, id_col=id_col
-    )
+    new_counts = corpus_window_hashes(new_docs, k=k)
     merged = (
         index.unionByName(new_counts)
         .groupBy("__h")
@@ -2593,8 +2447,6 @@ def cut_spans(
     spans: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    span_start: str = "span_start",
-    span_end: str = "span_end",
 ) -> DataFrame:
     """REASSEMBLE documents with flagged token spans CUT — the action
     half of `exact_substring_spans` (Lee et al. 2021's actual dedup
@@ -2624,7 +2476,7 @@ def cut_spans(
     span_lists = spans.groupBy(id_col).agg(
         F.collect_list(
             F.struct(
-                F.col(span_start).alias("s"), F.col(span_end).alias("e")
+                F.col("span_start").alias("s"), F.col("span_end").alias("e")
             )
         ).alias("__spans")
     )
@@ -2650,8 +2502,6 @@ def curation_lineage(
     docs: DataFrame,
     min_chars: int = 200,
     allowed_langs: tuple[str, ...] = ("en", "de", "fr"),
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document drop-reason audit for a gate → exact-dedup
     curation pipeline — the lineage table a pipeline operator needs
@@ -2676,29 +2526,29 @@ def curation_lineage(
         list(allowed_langs)
     )
     meta = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_chars",
         "lang",
-        F.sha2(F.col(text_col).cast("binary"), 256).alias("__h"),
+        F.sha2(F.col("text").cast("binary"), 256).alias("__h"),
         eligible.alias("__ok"),
     )
     keepers = (
         meta.filter(F.col("__ok"))
         .groupBy("__h")
-        .agg(F.min(id_col).alias("__kept_by"))
+        .agg(F.min("doc_id").alias("__kept_by"))
     )
     return meta.join(keepers, "__h", "left").select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(F.col("n_chars") < min_chars, F.lit("too_short"))
         .when(
             ~F.col("lang").isin(list(allowed_langs)),
             F.lit("lang_blocked"),
         )
-        .when(F.col(id_col) != F.col("__kept_by"), F.lit("exact_dup"))
+        .when(F.col("doc_id") != F.col("__kept_by"), F.lit("exact_dup"))
         .otherwise(F.lit("kept"))
         .alias("verdict"),
         F.when(
-            F.col("__ok") & (F.col(id_col) != F.col("__kept_by")),
+            F.col("__ok") & (F.col("doc_id") != F.col("__kept_by")),
             F.col("__kept_by"),
         ).alias("kept_by"),
     )

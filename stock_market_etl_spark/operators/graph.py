@@ -20,8 +20,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     weight_col: str | None = None,
     checkpoint: bool = True,
 ) -> DataFrame:
@@ -64,9 +62,7 @@ def pagerank(
         if weight_col is not None
         else F.lit(1.0)
     )
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    e = edges.select("src", "dst", w.alias("w"))
     outw = e.groupBy("src").agg(F.sum("w").alias("tw"))
     norm = e.join(outw, "src").select(
         "src", "dst", (F.col("w") / F.col("tw")).alias("p")

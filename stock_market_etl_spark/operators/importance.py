@@ -61,8 +61,6 @@ def dsir_weights(
     target: DataFrame,
     raw: DataFrame,
     n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-raw-document DSIR importance weight.
 
@@ -70,7 +68,7 @@ def dsir_weights(
     with add-one smoothing over the ``n_buckets``-bucket hashed-bigram
     space: ``p̂(b) = (c_b + 1) / (total + n_buckets)``. Positive means
     the document looks more target-like than pool-like. Returns
-    (id_col, n_grams, log_weight); raw docs with < 2 tokens carry no
+    (doc_id, n_grams, log_weight); raw docs with < 2 tokens carry no
     grams and are excluded (nothing to score).
 
     One gram scan covers BOTH corpora (a union with a side tag →
@@ -81,8 +79,8 @@ def dsir_weights(
     # discarded id slot must still union cleanly with raw's id column,
     # whatever its type (a hard-coded long cast fails unionByName on
     # string-keyed corpora)
-    tg = _gram_buckets(target, n_buckets, text_col, id_col).select(
-        F.lit(None).cast(raw.schema[id_col].dataType).alias(id_col),
+    tg = _gram_buckets(target, n_buckets, "text", "doc_id").select(
+        F.lit(None).cast(raw.schema["doc_id"].dataType).alias("doc_id"),
         F.lit(1).alias("__is_target"),
         "__bucket",
     )
@@ -91,8 +89,8 @@ def dsir_weights(
     # cache the tokenize+hash scan runs twice (same lifecycle
     # convention as the LSH signature tables, operators/dedup.py:4-9:
     # callers running batch loops clearCache()/unpersist between runs)
-    rg = _gram_buckets(raw, n_buckets, text_col, id_col).select(
-        F.col(id_col), F.lit(0).alias("__is_target"), "__bucket"
+    rg = _gram_buckets(raw, n_buckets, "text", "doc_id").select(
+        F.col("doc_id"), F.lit(0).alias("__is_target"), "__bucket"
     ).persist()
     grams = tg.unionByName(rg)
     counts = grams.groupBy("__bucket").agg(
@@ -120,7 +118,7 @@ def dsir_weights(
     )
     return (
         rg.join(F.broadcast(weights), "__bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_grams"),
             F.round(F.sum("__w"), 6).alias("log_weight"),
@@ -136,7 +134,6 @@ def psi_drift(
     new_col: str,
     bins: int = 10,
     eps: float = 1e-4,
-    threshold: float = 0.2,
 ) -> DataFrame:
     """Population Stability Index of a score DISTRIBUTION between two
     releases, per group — the standard ML-pipeline drift monitor
@@ -192,7 +189,7 @@ def psi_drift(
         .select(
             group_col,
             "psi",
-            (F.col("psi") >= threshold).alias("drift_flag"),
+            (F.col("psi") >= 0.2).alias("drift_flag"),
         )
     )
 
@@ -276,18 +273,16 @@ def psi_vs_baseline(
     score_col: str,
     group_col: str,
     bins: int,
-    eps: float = 1e-4,
-    threshold: float = 0.2,
 ) -> DataFrame:
     """PSI of an ARRIVING batch's score distribution against a FROZEN
     baseline histogram (`score_histogram` / the read-back artifact) —
     the streamed face of `psi_drift`, same math: bins present in
     EITHER side enter the sum (full-outer on (group, bin)), the
-    missing side clamps to ``eps``, totals come from windows over the
+    missing side clamps to 1e-4, totals come from windows over the
     joined histogram. Emits only groups the batch actually touched
     (you monitor arrivals; a batch-absent group has no distribution
     to test). A group ABSENT from the baseline alarms loudly — every
-    baseline share clamps to eps, which is the correct "new source
+    baseline share clamps to 1e-4, which is the correct "new source
     appeared" signal. Returns (group, psi, drift_flag, n_docs).
 
     Scale shape: the batch folds to its own B·|groups| histogram in
@@ -316,10 +311,10 @@ def psi_vs_baseline(
     p_tot = F.sum(F.coalesce(F.col("__p_n"), F.lit(0))).over(w)
     q_tot = F.sum(F.coalesce(F.col("__q_n"), F.lit(0))).over(w)
     p = F.greatest(
-        F.coalesce(F.col("__p_n"), F.lit(0)) / p_tot, F.lit(eps)
+        F.coalesce(F.col("__p_n"), F.lit(0)) / p_tot, F.lit(1e-4)
     )
     q = F.greatest(
-        F.coalesce(F.col("__q_n"), F.lit(0)) / q_tot, F.lit(eps)
+        F.coalesce(F.col("__q_n"), F.lit(0)) / q_tot, F.lit(1e-4)
     )
     return (
         joined.select(
@@ -336,7 +331,7 @@ def psi_vs_baseline(
         .select(
             group_col,
             "psi",
-            (F.col("psi") >= threshold).alias("drift_flag"),
+            (F.col("psi") >= 0.2).alias("drift_flag"),
             "n_docs",
         )
     )

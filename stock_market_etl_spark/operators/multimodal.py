@@ -536,25 +536,23 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
-def ahash_bytes(payload: bytes, hash_size: int = 8) -> int:
+def ahash_bytes(payload: bytes) -> int:
     """Average-hash of one image payload (pure function, reused by the
-    numpy cross-check tests): decode → ``hash_size``² nearest-neighbour
+    numpy cross-check tests): decode → 8×8 nearest-neighbour
     resample → per-cell brightness (r+g+b) → threshold at the grid mean
     → bits packed row-major MSB-first into a SIGNED 64-bit int (the
     BIGINT the DataFrame column carries). Opaque payloads fall back to
     the deterministic byte-sample grid (:func:`fake_resize`) so the
     hash is total over mixed-media tables — same per-row dispatch rule
     as :func:`resize_images`."""
-    n = hash_size * hash_size
-    if n > 64:
-        raise ValueError("hash_size^2 must fit in 64 bits")
+    n = 64
     try:
-        rgb = resize_rgb(decode_image(payload), hash_size, hash_size)
+        rgb = resize_rgb(decode_image(payload), 8, 8)
         vals = [
             rgb[3 * i] + rgb[3 * i + 1] + rgb[3 * i + 2] for i in range(n)
         ]
     except ValueError:
-        vals = list(fake_resize(payload, hash_size, hash_size))
+        vals = list(fake_resize(payload, 8, 8))
     mean = sum(vals) / n
     bits = 0
     for v in vals:
@@ -562,7 +560,7 @@ def ahash_bytes(payload: bytes, hash_size: int = 8) -> int:
     return bits - (1 << 64) if bits >= (1 << 63) else bits
 
 
-def image_ahash(assets: DataFrame, hash_size: int = 8) -> DataFrame:
+def image_ahash(assets: DataFrame) -> DataFrame:
     """Arrow-batched perceptual hashing over binary payloads
     (mapInPandas, 1 row in → 1 row out, 8 bytes out per image): the
     64-bit average-hash whose Hamming distance approximates visual
@@ -577,7 +575,7 @@ def image_ahash(assets: DataFrame, hash_size: int = 8) -> DataFrame:
                     "asset_id": pdf["asset_id"],
                     "ahash": pd.Series(
                         [
-                            ahash_bytes(bytes(p), hash_size)
+                            ahash_bytes(bytes(p))
                             for p in pdf["payload"]
                         ],
                         dtype="int64",
@@ -588,9 +586,7 @@ def image_ahash(assets: DataFrame, hash_size: int = 8) -> DataFrame:
     return assets.mapInPandas(batches, schema=AHASH_SCHEMA)
 
 
-def image_near_dup(
-    assets: DataFrame, max_hamming: int = 3, hash_size: int = 8
-) -> DataFrame:
+def image_near_dup(assets: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Image near-duplicate pairs via banded average-hash — the visual
     analogue of MinHash-LSH dedup (x10) with an EXACTNESS guarantee
     instead of a recall curve: the 64-bit hash splits into 4 disjoint
@@ -608,7 +604,7 @@ def image_near_dup(
     buckets per band position), the same economy as the text LSH
     family."""
     return near_dup_pairs_from_hashes(
-        image_ahash(assets, hash_size=hash_size), max_hamming=max_hamming
+        image_ahash(assets), max_hamming=max_hamming
     )
 
 
@@ -731,7 +727,6 @@ def bmp_ahash_from_documents(
     docs: DataFrame,
     width: int = 16,
     height: int = 16,
-    hash_size: int = 8,
 ) -> DataFrame:
     """:func:`bmp_assets_from_documents` ∘ :func:`image_ahash` FUSED
     into one Arrow stage (r10 VERDICT: the chained form ships every
@@ -747,9 +742,7 @@ def bmp_ahash_from_documents(
     n = width * height * 3
 
     def one(text: str) -> int:
-        return ahash_bytes(
-            encode_bmp(width, height, _tiled_rgb(text, n)), hash_size
-        )
+        return ahash_bytes(encode_bmp(width, height, _tiled_rgb(text, n)))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

@@ -52,7 +52,6 @@ def deterministic_split(
     weights: dict[str, float],
     id_col: str = "doc_id",
     salt: str = "",
-    out_col: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split (train/val/test/...) by hash of
     its id — stable under re-runs, repartitioning, and data growth
@@ -79,14 +78,12 @@ def deterministic_split(
             else expr.when(cond, F.lit(name))
         )
     expr = F.lit(names[0]) if expr is None else expr.otherwise(F.lit(names[-1]))
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
     default_fraction: float = 0.0,
     salt: str = "",
 ) -> DataFrame:
@@ -96,11 +93,11 @@ def stratified_sample(
     kept set is reproducible and monotone in the fraction (raising a
     stratum's fraction only ever *adds* documents, so dataset-mix
     ablations nest instead of resampling)."""
-    prefix = _hash_prefix(F.col(id_col), salt)
+    prefix = _hash_prefix(F.col("doc_id"), salt)
     thr = F.lit(_hex_threshold(default_fraction))
     for stratum, frac in fractions.items():
         thr = F.when(
-            F.col(strata_col) == stratum, F.lit(_hex_threshold(frac))
+            F.col("lang") == stratum, F.lit(_hex_threshold(frac))
         ).otherwise(thr)
     return df.filter(prefix < thr)
 
@@ -109,9 +106,7 @@ def leakage_safe_split(
     df: DataFrame,
     weights: dict[str, float],
     clusters: DataFrame,
-    id_col: str = "doc_id",
     salt: str = "",
-    out_col: str = "split",
 ) -> DataFrame:
     """`deterministic_split` at NEAR-DUP-CLUSTER grain: every document
     in a near-duplicate cluster draws its split from the cluster
@@ -127,14 +122,14 @@ def leakage_safe_split(
     projection. At 100 TB the clusters table is the (much smaller)
     pair-participant set, and the join key is the same id the pair
     pipeline already partitions by."""
-    rep = F.coalesce(F.col("cluster_rep"), F.col(id_col))
+    rep = F.coalesce(F.col("cluster_rep"), F.col("doc_id"))
     grouped = (
-        df.join(clusters.withColumnRenamed("id", id_col), id_col, "left")
+        df.join(clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .withColumn("__split_key", rep)
         .drop("cluster_rep")
     )
     out = deterministic_split(
-        grouped, weights, id_col="__split_key", salt=salt, out_col=out_col
+        grouped, weights, id_col="__split_key", salt=salt
     )
     return out.drop("__split_key")
 
@@ -143,7 +138,6 @@ def temperature_sample(
     df: DataFrame,
     alpha: float = 0.5,
     strata_col: str = "source",
-    id_col: str = "doc_id",
     salt: str = "",
 ) -> DataFrame:
     """Temperature-weighted source rebalancing — the standard LLM
@@ -187,7 +181,7 @@ def temperature_sample(
     )
     return (
         df.join(q, F.col(strata_col).eqNullSafe(F.col("__stratum")))
-        .filter(_hash_prefix(F.col(id_col), salt) < F.col("__thr"))
+        .filter(_hash_prefix(F.col("doc_id"), salt) < F.col("__thr"))
         .select(*df.columns)
     )
 
@@ -195,15 +189,11 @@ def temperature_sample(
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    size_col: str = "n_chars",
-    part_col: str = "lang",
-    order_col: str = "doc_id",
-    bin_col: str = "bin_id",
     chunk_width: int = 1024,
 ) -> DataFrame:
     """Pack documents into contiguous token-budget bins (context-window
-    packing for LLM pretraining): within each ``part_col`` partition,
-    documents are taken in ``order_col`` order and a new bin starts
+    packing for LLM pretraining): within each ``lang`` partition,
+    documents are taken in ``doc_id`` order and a new bin starts
     whenever the running size crosses a multiple of ``budget``.
 
     bin = floor(exclusive-prefix-sum(size) / budget), deterministic and
@@ -214,7 +204,7 @@ def pack_sequences(
     is needed.
 
     The prefix sum is computed in two phases rather than one
-    ``Window.partitionBy(part_col)`` — the naive window funnels every
+    ``Window.partitionBy("lang")`` — the naive window funnels every
     row of a stratum into ONE task (a 20 TB 'en' stratum = one hot
     executor; the classic window-skew failure). Phase 1 cumsums within
     (stratum, chunk) where chunk = floor(order / chunk_width) — an
@@ -227,37 +217,37 @@ def pack_sequences(
     the naive form (long addition is associative) while the widest
     task holds one chunk, set by ``chunk_width``, not one stratum.
     """
-    chunk = (F.col(order_col) / F.lit(chunk_width)).cast("long")
+    chunk = (F.col("doc_id") / F.lit(chunk_width)).cast("long")
     d = df.withColumn("__chunk", chunk)
     w_local = (
-        Window.partitionBy(part_col, "__chunk")
-        .orderBy(order_col)
+        Window.partitionBy("lang", "__chunk")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = d.withColumn(
-        "__local", F.coalesce(F.sum(size_col).over(w_local), F.lit(0))
+        "__local", F.coalesce(F.sum("n_chars").over(w_local), F.lit(0))
     )
     offsets = (
-        d.groupBy(part_col, "__chunk")
-        .agg(F.sum(size_col).alias("__tot"))
+        d.groupBy("lang", "__chunk")
+        .agg(F.sum("n_chars").alias("__tot"))
         .withColumn(
             "__offset",
             F.coalesce(
                 F.sum("__tot").over(
-                    Window.partitionBy(part_col)
+                    Window.partitionBy("lang")
                     .orderBy("__chunk")
                     .rowsBetween(Window.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ),
         )
-        .select(part_col, "__chunk", "__offset")
+        .select("lang", "__chunk", "__offset")
     )
     # eqNullSafe: a NULL stratum is a legitimate group (groupBy and the
     # naive window both treat it as one) — a plain equi-join would
     # silently drop those rows
     off = offsets.select(
-        F.col(part_col).alias("__p2"),
+        F.col("lang").alias("__p2"),
         F.col("__chunk").alias("__c2"),
         "__offset",
     )
@@ -265,10 +255,10 @@ def pack_sequences(
     return (
         local.join(
             F.broadcast(off),
-            F.col(part_col).eqNullSafe(F.col("__p2"))
+            F.col("lang").eqNullSafe(F.col("__p2"))
             & F.col("__chunk").eqNullSafe(F.col("__c2")),
         )
-        .withColumn(bin_col, F.floor(cum_excl / F.lit(budget)).cast("long"))
+        .withColumn("bin_id", F.floor(cum_excl / F.lit(budget)).cast("long"))
         .drop("__chunk", "__local", "__offset", "__p2", "__c2")
     )
 
@@ -335,12 +325,7 @@ def quota_cap(
     )
 
 
-def deterministic_shuffle(
-    df: DataFrame,
-    salt: str = "epoch-0",
-    id_col: str = "doc_id",
-    pos_col: str = "shuffle_pos",
-) -> DataFrame:
+def deterministic_shuffle(df: DataFrame, salt: str = "epoch-0") -> DataFrame:
     """Epoch-keyed global shuffle order for pretraining: every row gets
     a dense 1-based position in the order of md5(id || salt) — a new
     salt is a new, fully reshuffled but exactly reproducible epoch
@@ -358,14 +343,14 @@ def deterministic_shuffle(
     # NULL is NULL → NULL chunk → the row would fall out of the join)
     h = F.md5(
         F.concat(
-            F.coalesce(F.col(id_col).cast("string"), F.lit("<null-id>")),
+            F.coalesce(F.col("doc_id").cast("string"), F.lit("<null-id>")),
             F.lit(salt),
         )
     )
     d = df.withColumn("__h", h).withColumn(
         "__chunk", F.substring(F.col("__h"), 1, 2)
     )
-    w_local = Window.partitionBy("__chunk").orderBy("__h", id_col)
+    w_local = Window.partitionBy("__chunk").orderBy("__h", "doc_id")
     local = d.withColumn("__local", F.row_number().over(w_local))
     offsets = (
         d.groupBy("__chunk")
@@ -386,9 +371,9 @@ def deterministic_shuffle(
     return (
         local.join(F.broadcast(offsets), "__chunk")
         .withColumn(
-            pos_col, (F.col("__local") + F.col("__offset")).cast("long")
+            "shuffle_pos", (F.col("__local") + F.col("__offset")).cast("long")
         )
-        .select(*df.columns, pos_col)
+        .select(*df.columns, "shuffle_pos")
     )
 
 
@@ -396,9 +381,6 @@ def shard_assignment(
     df: DataFrame,
     rows_per_shard: int,
     salt: str = "epoch-0",
-    id_col: str = "doc_id",
-    pos_col: str = "shuffle_pos",
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Deterministic training-shard layout: shard
     ``floor((pos-1)/rows_per_shard)`` over the epoch-keyed global
@@ -410,10 +392,10 @@ def shard_assignment(
     address any shard without coordination."""
     if rows_per_shard <= 0:
         raise ValueError(f"rows_per_shard must be positive: {rows_per_shard}")
-    out = deterministic_shuffle(df, salt=salt, id_col=id_col, pos_col=pos_col)
+    out = deterministic_shuffle(df, salt=salt)
     return out.withColumn(
-        shard_col,
-        F.floor((F.col(pos_col) - 1) / rows_per_shard).cast("long"),
+        "shard_id",
+        F.floor((F.col("shuffle_pos") - 1) / rows_per_shard).cast("long"),
     )
 
 
@@ -422,7 +404,6 @@ def write_shards(
     path: str,
     rows_per_shard: int,
     salt: str = "epoch-0",
-    id_col: str = "doc_id",
 ) -> None:
     """Materialize `shard_assignment` as one directory per shard
     (``path/shard_id=K/``), rows inside each shard sorted by their
@@ -433,9 +414,7 @@ def write_shards(
     sorted file per shard, not one fragment per upstream partition;
     shard size is the operator's knob, so executor memory bounds it,
     not data volume."""
-    sharded = shard_assignment(
-        df, rows_per_shard, salt=salt, id_col=id_col
-    )
+    sharded = shard_assignment(df, rows_per_shard, salt=salt)
     (
         sharded.repartition(F.col("shard_id"))
         .sortWithinPartitions("shard_id", "shuffle_pos")
@@ -451,8 +430,6 @@ def epoch_repeat(
     strata_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "repeat",
-    default_factor: float = 1.0,
-    out_col: str = "copy_idx",
 ) -> DataFrame:
     """Materialize a data recipe's per-stratum repeat factors — the
     UPSAMPLING dual of ``temperature_sample``: a row whose stratum
@@ -462,7 +439,7 @@ def epoch_repeat(
     uses, so a given id's copy count is stable under re-runs,
     repartitioning, and corpus growth). ``f < 1`` degenerates to a
     plain keep/drop downsample; ``f = 0`` drops the stratum. Output
-    rows carry ``n_copies`` (the row's total) and ``out_col``
+    rows carry ``n_copies`` (the row's total) and ``copy_idx``
     (1-based copy index — the epoch-distinct key downstream shuffles
     and shard layouts key on, cf. x27/x44).
 
@@ -494,8 +471,8 @@ def epoch_repeat(
             if thr_expr is None
             else thr_expr.when(cond, F.lit(th))
         )
-    dnb = int(math.floor(default_factor))
-    dth = _hex_threshold(default_factor - math.floor(default_factor))
+    dnb = 1
+    dth = _hex_threshold(0.0)
     base = (
         F.lit(dnb) if base_expr is None else base_expr.otherwise(F.lit(dnb))
     )
@@ -507,7 +484,7 @@ def epoch_repeat(
         "*",
         F.explode(
             F.sequence(F.lit(1), F.col("n_copies"), F.lit(1))
-        ).alias(out_col),
+        ).alias("copy_idx"),
     )
 
 
@@ -516,7 +493,6 @@ def weighted_sample(
     weight_col: str,
     k: int,
     salt: str = "ws",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis–Spirakis A-ES, PODS'06): each row draws a uniform
@@ -540,7 +516,7 @@ def weighted_sample(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))),
+                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt))),
                 1,
                 8,
             ),
@@ -552,6 +528,6 @@ def weighted_sample(
     key = F.round(F.col(weight_col).cast("double") / -F.log(u), 6)
     return (
         df.withColumn("sample_key", key)
-        .orderBy(F.col("sample_key").desc(), F.col(id_col))
+        .orderBy(F.col("sample_key").desc(), F.col("doc_id"))
         .limit(k)
     )

@@ -22,24 +22,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Append a ``sess_id`` column: sessions close after
     ``gap_minutes`` of per-user inactivity (gaps-and-islands — the lag
     flag and its running sum share one partitioning, so this is a
-    single exchange of the events on ``user_col``)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_col)
-    gap = F.unix_micros(F.col(ts_col)) - F.unix_micros(
-        F.lag(ts_col).over(w)
+    single exchange of the events on ``user_id``)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.unix_micros(F.col("ts")) - F.unix_micros(
+        F.lag("ts").over(w)
     )
     new_sess = (
         F.when(
-            F.lag(ts_col).over(w).isNull()
+            F.lag("ts").over(w).isNull()
             | (gap > gap_minutes * 60 * 1_000_000),
             1,
         )
@@ -53,36 +47,28 @@ def sessionize(
     )
 
 
-def session_transcripts(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    payload_col: str = "event_type",
-    sep: str = " ",
-) -> DataFrame:
+def session_transcripts(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assemble one transcript document per session: the session's
-    ``payload_col`` values joined by ``sep`` in (ts, order_col) order,
+    ``event_type`` values joined by spaces in (ts, event_id) order,
     plus turn count and start/end bounds. The ordered join is
     ``array_sort(collect_list(struct(ts, order, payload)))`` — no
     second sort exchange; order keys ride inside the aggregated
     structs."""
-    sess = sessionize(events, gap_minutes, user_col, ts_col, order_col)
+    sess = sessionize(events, gap_minutes)
     ordered = F.array_sort(
         F.collect_list(
             F.struct(
-                F.col(ts_col).alias("t"),
-                F.col(order_col).alias("o"),
-                F.col(payload_col).alias("p"),
+                F.col("ts").alias("t"),
+                F.col("event_id").alias("o"),
+                F.col("event_type").alias("p"),
             )
         )
     )
-    return sess.groupBy(user_col, "sess_id").agg(
-        F.min(ts_col).alias("sess_start"),
-        F.max(ts_col).alias("sess_end"),
+    return sess.groupBy("user_id", "sess_id").agg(
+        F.min("ts").alias("sess_start"),
+        F.max("ts").alias("sess_end"),
         F.count("*").cast("long").alias("n_turns"),
         F.concat_ws(
-            sep, F.transform(ordered, lambda x: x["p"])
+            " ", F.transform(ordered, lambda x: x["p"])
         ).alias("transcript"),
     )

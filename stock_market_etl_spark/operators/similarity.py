@@ -112,13 +112,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(df: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity against one stored vector.
 
     The 1-row query side is broadcast, so the candidate scan is a single
@@ -127,19 +121,19 @@ def cosine_topk(
     bucketed approximate path.
     """
     q = (
-        df.filter(F.col(id_col) == query_id)
-        .select(_as_double(F.col(vec_col)).alias("q_vec"))
+        df.filter(F.col("vec_id") == query_id)
+        .select(_as_double(F.col("embedding")).alias("q_vec"))
         # query-side norm computed ONCE in the 1-row broadcast side, not
         # per candidate row (it lands behind the join boundary)
         .withColumn("q_norm", l2_norm(F.col("q_vec")))
     )
-    cand = spread(df.filter(F.col(id_col) != query_id))
-    v = _as_double(F.col(vec_col))
+    cand = spread(df.filter(F.col("vec_id") != query_id))
+    v = _as_double(F.col("embedding"))
     sim = dot(v, F.col("q_vec")) / (l2_norm(v) * F.col("q_norm"))
     return (
         cand.crossJoin(F.broadcast(q))
-        .select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        .select(F.col("vec_id"), sim.alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -221,10 +215,6 @@ def ann_lsh(
     dim: int,
     k: int = 10,
     n_planes: int = 8,
-    n_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate nearest neighbours: candidates = vectors sharing any
     LSH table bucket with the query (union over tables), then exact
@@ -232,16 +222,14 @@ def ann_lsh(
     is tested at small scale (tests/test_extensions.py)."""
     # both the query probe and the candidate side read the bucketed
     # table — persist so the scan + bucket UDF run once, not twice
-    bucketed = hyperplane_lsh_buckets(
-        df, dim, n_planes, n_tables, seed, vec_col
-    ).persist()
-    q = bucketed.filter(F.col(id_col) == query_id).select(
-        _as_double(F.col(vec_col)).alias("q_vec"),
-        l2_norm(_as_double(F.col(vec_col))).alias("q_norm"),
+    bucketed = hyperplane_lsh_buckets(df, dim, n_planes).persist()
+    q = bucketed.filter(F.col("vec_id") == query_id).select(
+        _as_double(F.col("embedding")).alias("q_vec"),
+        l2_norm(_as_double(F.col("embedding"))).alias("q_norm"),
         F.col("lsh_table").alias("q_table"),
         F.col("lsh_bucket").alias("q_bucket"),
     )
-    cand = bucketed.filter(F.col(id_col) != query_id)
+    cand = bucketed.filter(F.col("vec_id") != query_id)
     # bucket-local join, then collapse to distinct candidate ids before
     # the (expensive) exact re-rank; q_norm rides the broadcast so only
     # the candidate-side norm is computed per re-ranked row
@@ -252,14 +240,16 @@ def ann_lsh(
             & (cand.lsh_bucket == F.col("q_bucket")),
             "inner",
         )
-        .select(F.col(id_col), F.col(vec_col), F.col("q_vec"), F.col("q_norm"))
+        .select(
+            F.col("vec_id"), F.col("embedding"), F.col("q_vec"), F.col("q_norm")
+        )
         .distinct()
     )
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     sim = dot(v, F.col("q_vec")) / (l2_norm(v) * F.col("q_norm"))
     return (
-        matches.select(F.col(id_col), F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        matches.select(F.col("vec_id"), F.round(sim, 6).alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -279,8 +269,6 @@ def _unit_pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate detection, exact form: every
     unordered pair (id_a < id_b) whose cosine similarity rounds to
@@ -293,10 +281,10 @@ def embedding_near_dup_pairs(
     are blocked into LSH buckets so the join is an equality shuffle on
     (table, bucket) and only bucket-local pairs are compared.
     """
-    v = _normed_vectors(df, id_col, vec_col).persist()
+    v = _normed_vectors(df, "vec_id", "embedding").persist()
     # ^ both self-join sides read it — cast + norm-fold once per vector
-    a = _pair_side(v, id_col, "a")
-    b = _pair_side(v, id_col, "b")
+    a = _pair_side(v, "vec_id", "a")
+    b = _pair_side(v, "vec_id", "b")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", _pair_cos().alias("cosine_sim"))
@@ -460,27 +448,22 @@ def embedding_near_dup_lsh(
     df: DataFrame,
     dim: int,
     threshold: float = 0.4,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale path for embedding-cosine near-dedup: a pair is a candidate
-    iff it shares an LSH bucket in at least one of ``n_tables`` tables
+    iff it shares an LSH bucket in at least one of 16 tables
     (OR-amplified sign-random-projection), then the exact cosine filter
     runs on candidates only (`_lsh_candidate_cos`, the shared block).
 
     The candidate join is an equality join on (lsh_table, lsh_bucket) —
     bucket-local, shuffle-partitionable, no all-pairs scan. Miss
-    probability per true pair is (1 - (1 - θ/π)^n_planes)^n_tables;
+    probability per true pair is (1 - (1 - θ/π)^4)^16;
     recall vs `embedding_near_dup_pairs` is asserted at small scale
     (tests/test_extensions.py). x16 keeps the interpreted fold: it is
     the DuckDB-comparable exact oracle; THIS is the scale path.
     """
     return (
         _lsh_candidate_cos(
-            df, dim, n_planes, n_tables, seed, id_col, vec_col
+            df, dim, 4, 16, 42, "vec_id", "embedding"
         )
         .select("id_a", "id_b", F.col("cos").alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
@@ -491,7 +474,6 @@ def ivf_index(
     df: DataFrame,
     n_lists: int = 16,
     seed: int = 42,
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index: a seeded k-means coarse quantizer assigns
     every vector to one of ``n_lists`` cells. Returns
@@ -507,7 +489,9 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feats = df.withColumn("__vec", array_to_vector(_as_double(F.col(vec_col))))
+    feats = df.withColumn(
+        "__vec", array_to_vector(_as_double(F.col("embedding")))
+    )
     km = KMeans(k=n_lists, seed=seed, featuresCol="__vec", predictionCol="__cell")
     model = km.fit(feats)
     assigned = model.transform(feats).drop("__vec")
@@ -520,11 +504,7 @@ def ivf_index(
     return assigned, centers_df
 
 
-def assign_cells(
-    df: DataFrame,
-    centers_df: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(df: DataFrame, centers_df: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid (squared-euclidean
     argmin — the k-means assignment rule), WITHOUT re-running k-means:
     the n_lists-row centroid table broadcasts, distances compute in a
@@ -545,7 +525,7 @@ def assign_cells(
         ((r["cell"], list(r["centroid"])) for r in centers_df.collect()),
         key=lambda t: t[0],
     )
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     choices = []
     for cell, centroid in centers:
         lit_c = F.array(*[F.lit(float(x)) for x in centroid])
@@ -646,8 +626,6 @@ def ivf_probe(
     query_id: int,
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query side of IVF: rank centroids against the query vector,
     probe the ``n_probe`` closest cells, exact-rerank inside. The cell
@@ -655,8 +633,8 @@ def ivf_probe(
     column, so over a cell-partitioned index it prunes at the file
     listing — the scan never touches the other cells.
     """
-    q = assigned.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("q_vec")
+    q = assigned.filter(F.col("vec_id") == query_id).select(
+        F.col("embedding").alias("q_vec")
     )
     probe_cells = [
         r.cell
@@ -672,7 +650,7 @@ def ivf_probe(
 
     cand = spread(
         assigned.filter(
-            F.col("__cell").isin(probe_cells) & (F.col(id_col) != query_id)
+            F.col("__cell").isin(probe_cells) & (F.col("vec_id") != query_id)
         )
     )
     # query norm rides the 1-row broadcast; only the candidate-side norm
@@ -681,12 +659,12 @@ def ivf_probe(
         _as_double(F.col("q_vec")).alias("q_vec"),
         l2_norm(_as_double(F.col("q_vec"))).alias("q_norm"),
     )
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     sim = dot(v, F.col("q_vec")) / (l2_norm(v) * F.col("q_norm"))
     return (
         cand.crossJoin(F.broadcast(qn))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -697,17 +675,14 @@ def ivf_topk(
     k: int = 10,
     n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate nearest neighbours, index + probe in one call —
     the clustered alternative to hyperplane LSH. Recall/probe trade-off
     is tested against `cosine_topk` (tests/test_extensions.py); the
     split form (`ivf_index` offline / `ivf_probe` online) is the 100 TB
     deployment shape."""
-    assigned, centers_df = ivf_index(df, n_lists, seed, vec_col)
-    return ivf_probe(assigned, centers_df, query_id, k, n_probe, id_col, vec_col)
+    assigned, centers_df = ivf_index(df, n_lists)
+    return ivf_probe(assigned, centers_df, query_id, k, n_probe)
 
 
 def _pq_train(sample: np.ndarray, m: int, k: int, seed: int, iters: int = 10):
@@ -733,18 +708,10 @@ def _pq_train(sample: np.ndarray, m: int, k: int, seed: int, iters: int = 10):
     return books
 
 
-def pq_index(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-    sample_size: int = 2048,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def pq_index(df: DataFrame):
     """Product-quantization index (Jégou et al., TPAMI 2011): split each
-    vector into ``m`` subvectors, k-means each subspace on a bounded
-    driver-side sample, store each vector as ``m`` small codes
+    vector into m=8 subvectors, k-means each subspace (k=16 centroids)
+    on a bounded driver-side sample, store each vector as m small codes
     (m·log2(k) bits ≈ 4 B here vs 256 B raw — the compression that makes
     a 100 TB embedding corpus scannable from memory).
 
@@ -759,28 +726,28 @@ def pq_index(
     sample = np.array(
         [
             r[0]
-            for r in df.select(_as_double(F.col(vec_col)))
-            .limit(sample_size)
+            for r in df.select(_as_double(F.col("embedding")))
+            .limit(2048)
             .collect()
         ]
     )
-    books = _pq_train(sample, m, k, seed)
-    dsub = sample.shape[1] // m
+    books = _pq_train(sample, 8, 16, 42)
+    dsub = sample.shape[1] // 8
 
     @pandas_udf(ArrayType(IntegerType()))
     def encode(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         x = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
+        codes = np.empty((len(x), 8), dtype=np.int32)
+        for j in range(8):
             sub = x[:, j * dsub : (j + 1) * dsub]  # (n, dsub)
             d = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
             codes[:, j] = d.argmin(axis=1)
         return pd.Series(list(codes))
 
-    codes_df = spread(df.select(F.col(id_col), F.col(vec_col))).select(
-        F.col(id_col), encode(F.col(vec_col)).alias("pq_code")
+    codes_df = spread(df.select(F.col("vec_id"), F.col("embedding"))).select(
+        F.col("vec_id"), encode(F.col("embedding")).alias("pq_code")
     )
     return codes_df, books
 
@@ -860,8 +827,6 @@ def pq_probe(
     query_id: int,
     k: int = 10,
     rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query side of PQ-ADC over an existing code table: build the
     (m × n_centroids) query→centroid distance table driver-side, scan
@@ -875,8 +840,8 @@ def pq_probe(
 
     m = books.shape[0]
     q = np.array(
-        df.filter(F.col(id_col) == query_id)
-        .select(_as_double(F.col(vec_col)))
+        df.filter(F.col("vec_id") == query_id)
+        .select(_as_double(F.col("embedding")))
         .first()[0]
     )
     dsub = len(q) // m
@@ -898,25 +863,27 @@ def pq_probe(
         return pd.Series(table[np.arange(m)[None, :], c].sum(axis=1))
 
     shortlist = (
-        codes_df.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), adc(F.col("pq_code")).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col))
+        codes_df.filter(F.col("vec_id") != query_id)
+        .select(F.col("vec_id"), adc(F.col("pq_code")).alias("adc_dist"))
+        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
         .limit(rerank)
-        .select(id_col)
+        .select("vec_id")
     )
     # exact cosine re-rank of the shortlist only
     qn = (
-        df.filter(F.col(id_col) == query_id)
-        .select(_as_double(F.col(vec_col)).alias("q_vec"))
+        df.filter(F.col("vec_id") == query_id)
+        .select(_as_double(F.col("embedding")).alias("q_vec"))
         .withColumn("q_norm", l2_norm(F.col("q_vec")))
     )
-    cand = shortlist.join(df.select(F.col(id_col), F.col(vec_col)), id_col)
-    v = _as_double(F.col(vec_col))
+    cand = shortlist.join(
+        df.select(F.col("vec_id"), F.col("embedding")), "vec_id"
+    )
+    v = _as_double(F.col("embedding"))
     sim = dot(v, F.col("q_vec")) / (l2_norm(v) * F.col("q_norm"))
     return (
         cand.crossJoin(F.broadcast(qn))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        .select(F.col("vec_id"), F.round(sim, 6).alias("cosine_sim"))
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -925,12 +892,7 @@ def pq_topk(
     df: DataFrame,
     query_id: int,
     k: int = 10,
-    m: int = 8,
-    n_centroids: int = 16,
     rerank: int = 50,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ approximate nearest neighbours, index + probe in one call —
     see `pq_probe` for the ADC mechanics. The split form (`pq_index` +
@@ -938,28 +900,14 @@ def pq_topk(
     the 100 TB deployment shape: training and encoding happen once per
     index build, every query after that reads the m-byte code column
     plus ``rerank`` raw vectors."""
-    codes_df, books = pq_index(
-        df, m, n_centroids, seed, id_col=id_col, vec_col=vec_col
-    )
-    return pq_probe(
-        codes_df,
-        books,
-        df,
-        query_id,
-        k=k,
-        rerank=rerank,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    codes_df, books = pq_index(df)
+    return pq_probe(codes_df, books, df, query_id, k=k, rerank=rerank)
 
 
 def semdedup(
     df: DataFrame,
     n_clusters: int = 8,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by CLUSTER-SCOPED cosine pruning — k-means the
@@ -981,24 +929,24 @@ def semdedup(
     rows-only in the driver gate (same policy as x15/x17/x21), with
     the invariant + x16-agreement tests as the hard evidence.
     """
-    assigned, _ = ivf_index(
-        df, n_lists=n_clusters, seed=seed, vec_col=vec_col
-    )
+    assigned, _ = ivf_index(df, n_lists=n_clusters)
     v = (
         assigned.select(
-            F.col(id_col), F.col("__cell"), _as_double(F.col(vec_col)).alias("__v")
+            F.col("vec_id"),
+            F.col("__cell"),
+            _as_double(F.col("embedding")).alias("__v"),
         )
         .withColumn("__n", l2_norm(F.col("__v")))
         .persist()
     )
     a = v.select(
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("__cell").alias("__ca"),
         F.col("__v").alias("__va"),
         F.col("__n").alias("__na"),
     )
     b = v.select(
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("__cell").alias("__cb"),
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
@@ -1012,7 +960,7 @@ def semdedup(
             (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")),
         )
         .filter(sim >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
     # Materialize the (tiny, id-only) drop set eagerly so the cached
@@ -1021,7 +969,7 @@ def semdedup(
     # the session. The returned frame depends only on the checkpoint.
     drops = drops.localCheckpoint(eager=True)
     v.unpersist()
-    return df.join(drops, id_col, "left_anti")
+    return df.join(drops, "vec_id", "left_anti")
 
 
 # --- kNN label propagation (auto-labeling) -------------------------------
@@ -1089,14 +1037,7 @@ def _pair_cosine_rounded() -> Column:
     ).alias("__sim")
 
 
-def knn_label_propagation(
-    emb: DataFrame,
-    query_cond,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_label_propagation(emb: DataFrame, query_cond, k: int = 5) -> DataFrame:
     """Auto-labeling by exact k-nearest-neighbour vote: rows matching
     ``query_cond`` are treated as UNLABELED and receive the majority
     label of their k nearest labeled neighbours by cosine similarity
@@ -1114,21 +1055,21 @@ def knn_label_propagation(
     bucket-local candidates.
     """
     q = emb.filter(query_cond).select(
-        F.col(id_col).alias("__qid"),
-        _as_double(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("__qid"),
+        _as_double(F.col("embedding")).alias("__qv"),
     ).withColumn("__qn", l2_norm(F.col("__qv")))
     lab = emb.filter(~query_cond).select(
-        F.col(id_col).alias("__lid"),
-        _as_double(F.col(vec_col)).alias("__lv"),
-        label_col,
+        F.col("vec_id").alias("__lid"),
+        _as_double(F.col("embedding")).alias("__lv"),
+        "label",
     ).withColumn("__ln", l2_norm(F.col("__lv")))
     pairs = lab.crossJoin(F.broadcast(q)).select(
         "__qid",
         "__lid",
-        label_col,
+        "label",
         _pair_cosine_rounded(),
     )
-    return _knn_vote_tail(pairs, k, label_col)
+    return _knn_vote_tail(pairs, k, "label")
 
 
 def knn_label_propagation_lsh(
@@ -1138,10 +1079,6 @@ def knn_label_propagation_lsh(
     k: int = 5,
     n_planes: int = 8,
     n_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """The scale form of :func:`knn_label_propagation`: candidates come
     from hyperplane-LSH bucket collisions (OR-amplified across
@@ -1163,14 +1100,12 @@ def knn_label_propagation_lsh(
     anti-regression floor — on the fixture's RANDOM background
     vectors top-5 margins are thin, so full agreement is not an
     achievable (or meaningful) bar below the LSH crossover."""
-    bucketed = hyperplane_lsh_buckets(
-        emb, dim, n_planes, n_tables, seed, vec_col
-    ).persist()
+    bucketed = hyperplane_lsh_buckets(emb, dim, n_planes, n_tables).persist()
     qb = bucketed.filter(query_cond).select(
-        F.col(id_col).alias("__qid"), "lsh_table", "lsh_bucket"
+        F.col("vec_id").alias("__qid"), "lsh_table", "lsh_bucket"
     )
     lb = bucketed.filter(~query_cond).select(
-        F.col(id_col).alias("__lid"),
+        F.col("vec_id").alias("__lid"),
         F.col("lsh_table").alias("__t"),
         F.col("lsh_bucket").alias("__b"),
     )
@@ -1183,9 +1118,7 @@ def knn_label_propagation_lsh(
         .select("__qid", "__lid")
         .distinct()
     )
-    return knn_from_candidates(
-        emb, cand, query_cond, k, id_col, vec_col, label_col
-    )
+    return knn_from_candidates(emb, cand, query_cond, k)
 
 
 def knn_from_candidates(
@@ -1193,9 +1126,6 @@ def knn_from_candidates(
     cand: DataFrame,
     query_cond,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Run the kNN vote over an explicit ``(__qid, __lid)`` candidate
     table — the shared back half of every approximate form (and the
@@ -1204,13 +1134,13 @@ def knn_from_candidates(
     asserted in tests). Vectors re-attach BY ID here, after candidate
     dedup, so the O(candidates) shuffle never carries arrays."""
     qv = emb.filter(query_cond).select(
-        F.col(id_col).alias("__qid"),
-        _as_double(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("__qid"),
+        _as_double(F.col("embedding")).alias("__qv"),
     ).withColumn("__qn", l2_norm(F.col("__qv")))
     lv = emb.filter(~query_cond).select(
-        F.col(id_col).alias("__lid"),
-        _as_double(F.col(vec_col)).alias("__lv"),
-        label_col,
+        F.col("vec_id").alias("__lid"),
+        _as_double(F.col("embedding")).alias("__lv"),
+        "label",
     ).withColumn("__ln", l2_norm(F.col("__lv")))
     pairs = (
         cand.join(qv, "__qid")
@@ -1218,11 +1148,11 @@ def knn_from_candidates(
         .select(
             "__qid",
             "__lid",
-            label_col,
+            "label",
             _pair_cosine_rounded(),
         )
     )
-    return _knn_vote_tail(pairs, k, label_col)
+    return _knn_vote_tail(pairs, k, "label")
 
 
 def bitext_margin_pairs(
@@ -1230,8 +1160,6 @@ def bitext_margin_pairs(
     side: Column,
     k: int = 4,
     threshold: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Margin-based parallel-pair mining (Artetxe & Schwenk 2019,
     arXiv:1811.01136 — the CCMatrix/LASER recipe): for every source
@@ -1262,7 +1190,7 @@ def bitext_margin_pairs(
     table carries only (id_a, id_b, cos), and the two background
     averages are id-grain aggregates joined back at id grain."""
     pairs = _sided_pair_table(
-        df, side, id_col, vec_col, "a", "b"
+        df, side, "vec_id", "embedding", "a", "b"
     ).persist()
     return bitext_margin_from_pairs(pairs, k, threshold)
 
@@ -1383,8 +1311,6 @@ def embedding_contamination(
     df: DataFrame,
     is_eval: Column,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SEMANTIC train-test contamination — the embedding rung of the
     contamination family (n-gram x26, paragraph x52, exact-substring
@@ -1402,7 +1328,7 @@ def embedding_contamination(
     `embedding_contamination_ann` (the x16 → x17 move). All ranking
     happens on the 6-decimal ROUNDED cosine so both engines order
     identical numbers."""
-    pairs = _sided_pair_table(df, ~is_eval, id_col, vec_col, "t", "e")
+    pairs = _sided_pair_table(df, ~is_eval, "vec_id", "embedding", "t", "e")
     return contamination_from_pairs(pairs, threshold)
 
 
@@ -1414,8 +1340,6 @@ def embedding_contamination_ann(
     n_planes: int = 4,
     n_tables: int = 16,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The 100 TB tier of semantic contamination — LSH-bucketed
     train×eval candidates (a pair is a candidate iff it shares a
@@ -1438,8 +1362,8 @@ def embedding_contamination_ann(
         n_planes,
         n_tables,
         seed,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         left_side=~is_eval,
         left_name="id_t",
         right_name="id_e",
@@ -1482,13 +1406,7 @@ def _checked_unit_vectors(
 _EMB_INDEX_META = "dim int"
 
 
-def write_embedding_index(
-    eval_df: DataFrame,
-    path: str,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def write_embedding_index(eval_df: DataFrame, path: str, dim: int) -> None:
     """Materialize an eval release's embeddings as a frozen
     ``path/{vectors, meta}`` artifact — the once-per-release step of
     the SEMANTIC decontamination lifecycle (the embedding sibling of
@@ -1511,7 +1429,7 @@ def write_embedding_index(
     artifacts.write_release(
         eval_df.sparkSession,
         path,
-        {"vectors": _checked_unit_vectors(eval_df, dim, id_col, vec_col)},
+        {"vectors": _checked_unit_vectors(eval_df, dim, "vec_id", "embedding")},
         _EMB_INDEX_META,
         (dim,),
         "overwrite",
@@ -1546,8 +1464,6 @@ def merge_embedding_index(
     new_eval: DataFrame,
     built_dim: int,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Fold a NEW eval release into an existing embedding index
     WITHOUT re-normalizing the indexed vectors — the incremental
@@ -1583,8 +1499,8 @@ def merge_embedding_index(
             "later cosine; rebuild the index or merge at its dim"
         )
     merged = index.unionByName(
-        _checked_unit_vectors(new_eval, dim, id_col, vec_col).select(
-            F.col(id_col), F.col("__v"), F.col("__n")
+        _checked_unit_vectors(new_eval, dim, "vec_id", "embedding").select(
+            F.col("vec_id"), F.col("__v"), F.col("__n")
         )
     )
     # provenance tag: the validated width travels WITH the result so
@@ -1621,8 +1537,6 @@ def embedding_contamination_incremental(
     train: DataFrame,
     threshold: float = 0.4,
     built_dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """`embedding_contamination` probing a MATERIALIZED eval index
     (`read_embedding_index`'s first element) instead of deriving the
@@ -1648,11 +1562,11 @@ def embedding_contamination_incremental(
             "mismatch nulls every cosine and flags nothing"
         )
     t = _pair_side(
-        _checked_unit_vectors(train, built_dim, id_col, vec_col),
-        id_col,
+        _checked_unit_vectors(train, built_dim, "vec_id", "embedding"),
+        "vec_id",
         "t",
     )
-    e = _pair_side(eval_index, id_col, "e")
+    e = _pair_side(eval_index, "vec_id", "e")
     pairs = t.crossJoin(e).select(
         "id_t", "id_e", _pair_cos("t", "e").alias("cos")
     )
@@ -1671,7 +1585,6 @@ def write_lsh_buckets(
     n_planes: int = 4,
     n_tables: int = 16,
     seed: int = 42,
-    id_col: str = "vec_id",
 ) -> None:
     """Materialize the LSH bucket assignments of a FROZEN embedding
     index (`read_embedding_index`'s first element) as a
@@ -1692,13 +1605,13 @@ def write_lsh_buckets(
     Bucket rows derive from the index's STORED vectors, so the
     artifact pair (vectors, buckets) can never disagree."""
     bucketed = hyperplane_lsh_buckets(
-        eval_index.select(F.col(id_col), F.col("__v")),
+        eval_index.select(F.col("vec_id"), F.col("__v")),
         int(built_dim),
         n_planes,
         n_tables,
         seed,
         vec_col="__v",
-    ).select(F.col(id_col), "lsh_table", "lsh_bucket")
+    ).select(F.col("vec_id"), "lsh_table", "lsh_bucket")
     artifacts.write_release(
         eval_index.sparkSession,
         path,
@@ -1731,7 +1644,6 @@ def merge_lsh_buckets(
     buckets: DataFrame,
     new_eval_index: DataFrame,
     built_params: tuple[int, int, int, int],
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Fold a NEW eval release's bucket assignments into an existing
     bucket index WITHOUT re-bucketing the indexed releases — the
@@ -1747,13 +1659,13 @@ def merge_lsh_buckets(
     so width enforcement rides in from that seam."""
     dim, n_planes, n_tables, seed = (int(x) for x in built_params)
     new_rows = hyperplane_lsh_buckets(
-        new_eval_index.select(F.col(id_col), F.col("__v")),
+        new_eval_index.select(F.col("vec_id"), F.col("__v")),
         dim,
         n_planes,
         n_tables,
         seed,
         vec_col="__v",
-    ).select(F.col(id_col), "lsh_table", "lsh_bucket")
+    ).select(F.col("vec_id"), "lsh_table", "lsh_bucket")
     return artifacts.tag_release(
         buckets.unionByName(new_rows),
         "LSH params",
@@ -1787,8 +1699,6 @@ def embedding_contamination_ann_incremental(
     train: DataFrame,
     built_params: tuple[int, int, int, int],
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     persist_train: bool = True,
 ) -> DataFrame:
     """The ANN tier probing MATERIALIZED artifacts — the 100 TB form
@@ -1820,31 +1730,31 @@ def embedding_contamination_ann_incremental(
     recomputation is cheaper than the cleanup plumbing (review
     r15)."""
     dim, n_planes, n_tables, seed = (int(x) for x in built_params)
-    tv = _checked_unit_vectors(train, dim, id_col, vec_col)
+    tv = _checked_unit_vectors(train, dim, "vec_id", "embedding")
     if persist_train:
         tv = tv.persist()
     train_buckets = hyperplane_lsh_buckets(
-        tv.select(F.col(id_col), F.col("__v")),
+        tv.select(F.col("vec_id"), F.col("__v")),
         dim,
         n_planes,
         n_tables,
         seed,
         vec_col="__v",
-    ).select(F.col(id_col).alias("id_t"), "lsh_table", "lsh_bucket")
+    ).select(F.col("vec_id").alias("id_t"), "lsh_table", "lsh_bucket")
     pairs = _bucket_join_pairs(
         train_buckets,
         eval_buckets.select(
-            F.col(id_col).alias("id_e"), "lsh_table", "lsh_bucket"
+            F.col("vec_id").alias("id_e"), "lsh_table", "lsh_bucket"
         ),
         "id_t",
         "id_e",
     )
     unit = F.transform(F.col("__v"), lambda x: x / F.col("__n"))
     va = tv.select(
-        F.col(id_col).alias("id_t"), unit.alias("__ul")
+        F.col("vec_id").alias("id_t"), unit.alias("__ul")
     )
     vb = eval_index.select(
-        F.col(id_col).alias("id_e"), unit.alias("__ur")
+        F.col("vec_id").alias("id_e"), unit.alias("__ur")
     )
     return contamination_from_pairs(
         _attach_unit_cos(pairs, va, vb, "id_t", "id_e"), threshold
@@ -1859,9 +1769,6 @@ def bitext_margin_pairs_ann(
     threshold: float = 1.05,
     n_planes: int = 4,
     n_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The 100 TB tier of margin-based bitext mining — the x16 → x17
     move applied to `bitext_margin_pairs`: candidate pairs come from
@@ -1889,9 +1796,9 @@ def bitext_margin_pairs_ann(
         dim,
         n_planes,
         n_tables,
-        seed,
-        id_col,
-        vec_col,
+        42,
+        "vec_id",
+        "embedding",
         left_side=side,
     ).persist()
     return bitext_margin_from_pairs(pairs, k, threshold)

@@ -157,22 +157,22 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.trim(text)))
 
 
-def char_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct character n-gram shingle set (input to Jaccard / MinHash).
+def char_shingles(text: Column) -> Column:
+    """Distinct character 3-gram shingle set (input to Jaccard / MinHash).
 
     Guarded for short strings: Spark's sequence(1, 0) would generate a
-    DESCENDING range, so texts shorter than n yield an empty set.
+    DESCENDING range, so texts shorter than 3 yield an empty set.
     """
-    idx = F.sequence(F.lit(1), F.length(text) - (n - 1))
+    idx = F.sequence(F.lit(1), F.length(text) - 2)
     return F.when(
-        F.length(text) >= n,
-        F.array_distinct(F.transform(idx, lambda i: F.substring(text, i, n))),
+        F.length(text) >= 3,
+        F.array_distinct(F.transform(idx, lambda i: F.substring(text, i, 3))),
     ).otherwise(F.array().cast("array<string>"))
 
 
-def analyze(df: DataFrame, text_col: str = "text") -> DataFrame:
+def analyze(df: DataFrame) -> DataFrame:
     """Attach the full text-analysis column set to a document frame."""
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
         "*",
         token_count(t).alias("n_tokens"),
@@ -204,8 +204,6 @@ def contamination_check(
     train_df: DataFrame,
     eval_df: DataFrame,
     n: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark-contamination audit: for each eval document, the
     fraction of its distinct word ``n``-grams that also occur anywhere
@@ -223,13 +221,13 @@ def contamination_check(
     from stock_market_etl_spark.operators.parallelism import spread
 
     def grams_of(df: DataFrame) -> DataFrame:
-        toks = spread(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), tokens(F.col(text_col)).alias("__t")
+        toks = spread(df.select(F.col("doc_id"), F.col("text"))).select(
+            F.col("doc_id"), tokens(F.col("text")).alias("__t")
         )
         # posexplode_outer: no inferred size()>0 filter re-running the
         # gram expression (the sequence() above always yields ≥1)
         return toks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode_outer(word_grams(F.col("__t"), n)).alias("__i", "g"),
         ).drop("__i")
 
@@ -238,13 +236,13 @@ def contamination_check(
     hit = train_grams.withColumn("__hit", F.lit(1))
     return (
         eval_grams.join(hit, "g", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
             F.coalesce(F.sum("__hit"), F.lit(0)).alias("n_hit"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_hit",
             F.round(F.col("n_hit") / F.col("n_grams"), 6).alias(
@@ -290,12 +288,7 @@ def repetition_ratio(tokens_col: Column) -> Column:
     return 1.0 - F.size(F.array_distinct(tokens_col)) / F.size(tokens_col)
 
 
-def tfidf_topk(
-    docs,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def tfidf_topk(docs, k: int = 3):
     """Top-``k`` TF-IDF terms per document.
 
     tf = term count / doc token count; idf = ln((N+1)/(df+1)) + 1
@@ -313,7 +306,7 @@ def tfidf_topk(
     map-side and AQE can split a skewed join partition, while a
     window would pin every (doc, hot-term) row into one task —
     a Zipfian-vocabulary skew trap. Per-doc totals and the final
-    top-k, by contrast, ARE windows — both partition by ``id_col``,
+    top-k, by contrast, ARE windows — both partition by ``doc_id``,
     so doc_len, the tf·idf projection, and the rank sort all ride ONE
     exchange (doc grain is bounded by doc size — no skew exposure).
     No driver-side state — N (corpus size) rides a 1-row broadcast
@@ -322,9 +315,9 @@ def tfidf_topk(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     )
-    term_counts = toks.groupBy(id_col, "term").agg(
+    term_counts = toks.groupBy("doc_id", "term").agg(
         F.count("*").alias("tf_count")
     )
     df_counts = term_counts.groupBy("term").agg(
@@ -333,7 +326,7 @@ def tfidf_topk(
     n_docs = docs.select(
         F.count("*").cast("double").alias("n_docs")
     )
-    w_doc = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id")
     scored = (
         term_counts.join(df_counts, "term")
         .crossJoin(F.broadcast(n_docs))
@@ -347,14 +340,14 @@ def tfidf_topk(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            id_col,
+            "doc_id",
             "rank",
             "term",
             F.round("tfidf", 6).alias("tfidf"),
@@ -362,15 +355,13 @@ def tfidf_topk(
     )
 
 
-def bm25_topk(
-    docs,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+# BM25 term-frequency saturation and length normalisation (the
+# Robertson/Zaragoza defaults), shared by both BM25 scorers
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
+def bm25_topk(docs, query_terms: list[str], k: int = 10):
     """Top-``k`` documents for a bag-of-words query under BM25
     (Robertson/Okapi; the Lucene-style smoothed idf
     ``ln(1 + (N - df + 0.5)/(df + 0.5))`` so scores stay positive).
@@ -383,18 +374,18 @@ def bm25_topk(
     is a TakeOrderedAndProject, never a global sort.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     )
-    doc_len = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
+    doc_len = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     avgdl = doc_len.agg(F.avg("dl").alias("avgdl"))
     n_docs = docs.select(F.count("*").cast("double").alias("n_docs"))
 
     q = toks.filter(F.col("term").isin(query_terms))
-    tf = q.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = q.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_counts = tf.groupBy("term").agg(F.count("*").alias("df"))
 
     scored = (
-        tf.join(doc_len, id_col)
+        tf.join(doc_len, "doc_id")
         .join(F.broadcast(df_counts), "term")
         .crossJoin(F.broadcast(avgdl))
         .crossJoin(F.broadcast(n_docs))
@@ -409,17 +400,18 @@ def bm25_topk(
         .withColumn(
             "term_score",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (_BM25_K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                + _BM25_K1
+                * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
-        .orderBy(F.col("bm25").desc(), F.col(id_col))
+        .orderBy(F.col("bm25").desc(), F.col("doc_id"))
         .limit(k)
     )
 
@@ -429,10 +421,6 @@ def bm25_hard_negatives(
     queries: dict[str, list[str]],
     positives: DataFrame,
     k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_chunks: int = 64,
 ) -> DataFrame:
     """Hard-negative mining for retrieval training (the DPR recipe,
@@ -491,17 +479,17 @@ def bm25_hard_negatives(
     stats = docs.agg(
         F.avg(
             F.when(
-                F.col(text_col).isNotNull(),
-                F.size(tokens(F.col(text_col))),
+                F.col("text").isNotNull(),
+                F.size(tokens(F.col("text"))),
             )
         ).alias("avgdl"),
         F.count("*").cast("double").alias("n_docs"),
     )
 
     toks = docs.select(
-        F.col(id_col),
-        F.size(tokens(F.col(text_col))).alias("dl"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.size(tokens(F.col("text"))).alias("dl"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     # tf feeds BOTH df_counts and the scored stream — without the
     # persist Spark re-executes the whole corpus explode per consumer
@@ -509,7 +497,7 @@ def bm25_hard_negatives(
     # doc, query term).
     tf = (
         toks.filter(F.col("term").isin(all_terms))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
         .persist()
     )
@@ -530,20 +518,21 @@ def bm25_hard_negatives(
         .withColumn(
             "term_score",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (_BM25_K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                + _BM25_K1
+                * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
     )
-    negs = scored.join(positives, ["query_id", id_col], "left_anti")
+    negs = scored.join(positives, ["query_id", "doc_id"], "left_anti")
 
-    order = (F.col("bm25").desc(), F.col(id_col))
+    order = (F.col("bm25").desc(), F.col("doc_id"))
     w_chunk = Window.partitionBy(
-        "query_id", (F.col(id_col) % n_chunks)
+        "query_id", (F.col("doc_id") % n_chunks)
     ).orderBy(*order)
     w_query = Window.partitionBy("query_id").orderBy(*order)
     return (
@@ -551,17 +540,11 @@ def bm25_hard_negatives(
         .filter(F.col("__cr") <= k)
         .withColumn("rank", F.row_number().over(w_query))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "bm25", "rank")
+        .select("query_id", "doc_id", "bm25", "rank")
     )
 
 
-def chunk_documents(
-    docs,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def chunk_documents(docs, chunk_tokens: int = 64, overlap: int = 16):
     """Sliding-window document chunking: split each document into
     ``chunk_tokens``-token chunks with ``overlap`` tokens of context
     carried between consecutive chunks (stride = chunk_tokens −
@@ -581,7 +564,7 @@ def chunk_documents(
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
     toks = docs.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__t")
+        F.col("doc_id"), tokens(F.col("text")).alias("__t")
     )
     n = F.size("__t")
     # start indices 1, 1+stride, ... while start <= n - overlap: the
@@ -593,7 +576,7 @@ def chunk_documents(
         F.lit(1), F.greatest(n - overlap, F.lit(1)), F.lit(stride)
     )
     chunks = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 starts, lambda s: F.slice(F.col("__t"), s, chunk_tokens)
@@ -601,18 +584,14 @@ def chunk_documents(
         ).alias("chunk_idx", "__chunk"),
     )
     return chunks.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         F.concat_ws(" ", F.col("__chunk")).alias("chunk_text"),
         F.size("__chunk").cast("long").alias("n_tokens"),
     )
 
 
-def bigram_lm_score(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def bigram_lm_score(docs):
     """Corpus-statistics language-model scoring: each document's mean
     log-probability under an add-one-smoothed bigram model trained on
     the corpus itself — the self-supervised stand-in for
@@ -633,7 +612,7 @@ def bigram_lm_score(
     excluded (no bigrams to score).
     """
     toks = docs.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__t")
+        F.col("doc_id"), tokens(F.col("text")).alias("__t")
     )
     bigrams_arr = F.transform(
         F.sequence(F.lit(1), F.size("__t") - 1),
@@ -642,7 +621,7 @@ def bigram_lm_score(
         ),
     )
     doc_bigrams = toks.filter(F.size("__t") >= 2).select(
-        F.col(id_col), F.explode(bigrams_arr).alias("bg")
+        F.col("doc_id"), F.explode(bigrams_arr).alias("bg")
     )
     bigram_counts = doc_bigrams.groupBy("bg").agg(
         F.count("*").alias("c_bg")
@@ -662,7 +641,7 @@ def bigram_lm_score(
             F.log((F.col("c_bg") + 1) / (F.col("c_w") + F.col("v"))),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_bigrams"),
         F.round(F.avg("__lp"), 6).alias("avg_logprob"),
     )
@@ -672,8 +651,6 @@ def paragraph_contamination(
     train_df: DataFrame,
     eval_df: DataFrame,
     para_tokens: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Block-grain decontamination audit: for each eval document, the
     fraction of its non-overlapping ``para_tokens``-token blocks (the
@@ -693,22 +670,23 @@ def paragraph_contamination(
     from stock_market_etl_spark.operators.parallelism import spread
 
     def block_hashes(df: DataFrame) -> DataFrame:
-        toks = spread(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), tokens(F.col(text_col)).alias("__t")
+        toks = spread(df.select(F.col("doc_id"), F.col("text"))).select(
+            F.col("doc_id"), tokens(F.col("text")).alias("__t")
         )
         n = F.size("__t")
         starts = F.sequence(
             F.lit(1), F.greatest(n, F.lit(1)), F.lit(para_tokens)
         )
         return toks.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.transform(
                     starts, lambda s: F.slice(F.col("__t"), s, para_tokens)
                 )
             ).alias("__b"),
         ).select(
-            id_col, F.unhex(F.sha2(F.concat_ws(" ", F.col("__b")), 256)).alias("__h")
+            "doc_id",
+            F.unhex(F.sha2(F.concat_ws(" ", F.col("__b")), 256)).alias("__h"),
         )
 
     train_h = (
@@ -719,13 +697,13 @@ def paragraph_contamination(
     evb = block_hashes(eval_df)
     return (
         evb.join(train_h, "__h", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_blocks"),
             F.coalesce(F.sum("__hit"), F.lit(0)).cast("long").alias("n_hit"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_blocks",
             "n_hit",
             F.round(F.col("n_hit") / F.col("n_blocks"), 6).alias(
@@ -735,11 +713,7 @@ def paragraph_contamination(
     )
 
 
-def repetition_metrics(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Gopher repetition rules (Rae et al. 2021 §A1.1, the n-gram
     half; x51 covers the word-grain half): per document, the fraction
     of characters covered by the most common 2-gram and 3-gram and by
@@ -811,7 +785,7 @@ def repetition_metrics(
     # rebuilds the full document string once per GRAM row (~5 s at
     # sf0.1); here it is once per document, and codegen subexpression
     # elimination shares the split between __t and __base.
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     # Partition by DOCUMENT before the gram explode: every aggregation
     # below is doc-keyed, and HashPartitioning(doc_id) satisfies the
     # clustering requirement of groupBy(doc_id, ...), so Catalyst
@@ -834,30 +808,30 @@ def repetition_metrics(
     # (fanout_width is the session's core-sized shuffle width). Skew note:
     # per-key work is one document's grams, bounded by doc length.
     tokenized = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("__t"),
         F.length(F.concat_ws(" ", toks)).cast("double").alias("__base"),
-    ).repartition(fanout_width(docs), F.col(id_col))
+    ).repartition(fanout_width(docs), F.col("doc_id"))
     tagged = tokenized.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__base"),
         F.explode(
             F.concat(*[grams(n) for n in (2, 3, 5)])
         ).alias("__ng"),
     ).select(
-        id_col,
+        "doc_id",
         "__base",
         F.col("__ng.n").alias("n"),
         F.col("__ng.gh").alias("gh"),
         F.col("__ng.gl").alias("gl"),
     )
-    gc = tagged.groupBy(id_col, "n", "gh").agg(
+    gc = tagged.groupBy("doc_id", "n", "gh").agg(
         F.count("*").alias("c"),
         F.first("gl").alias("gl"),
         F.first("__base").alias("__base"),
     )
     cgl = (F.col("c") * F.col("gl")).cast("double")
-    pern = gc.groupBy(id_col, "n").agg(
+    pern = gc.groupBy("doc_id", "n").agg(
         F.max(F.struct(F.col("c"), cgl.alias("cgl")))["cgl"].alias(
             "topcov"
         ),
@@ -866,17 +840,17 @@ def repetition_metrics(
         ),
         F.first("__base").alias("__base"),
     )
-    per_doc = pern.groupBy(id_col).agg(
+    per_doc = pern.groupBy("doc_id").agg(
         F.max(F.when(F.col("n") == 2, F.col("topcov") / F.col("__base"))).alias("__t2"),
         F.max(F.when(F.col("n") == 3, F.col("topcov") / F.col("__base"))).alias("__t3"),
         F.max(F.when(F.col("n") == 5, F.col("dupcov") / F.col("__base"))).alias("__d5"),
     )
-    out = docs.select(F.col(id_col)).join(per_doc, id_col, "left")
+    out = docs.select(F.col("doc_id")).join(per_doc, "doc_id", "left")
     t2 = F.round(F.coalesce("__t2", F.lit(0.0)), 6)
     t3 = F.round(F.coalesce("__t3", F.lit(0.0)), 6)
     d5 = F.round(F.coalesce("__d5", F.lit(0.0)), 6)
     return out.select(
-        id_col,
+        "doc_id",
         t2.alias("top2_frac"),
         t3.alias("top3_frac"),
         d5.alias("dup5_frac"),
@@ -884,13 +858,7 @@ def repetition_metrics(
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020,
     arXiv:1911.00359): score every document under the corpus LM
     (`bigram_lm_score` stands in for KenLM — identical plumbing), then
@@ -908,16 +876,16 @@ def perplexity_buckets(
     """
     from pyspark.sql import Window
 
-    scored = bigram_lm_score(docs, text_col=text_col, id_col=id_col).join(
-        docs.select(id_col, lang_col), id_col
+    scored = bigram_lm_score(docs).join(
+        docs.select("doc_id", "lang"), "doc_id"
     )
-    w = Window.partitionBy(lang_col).orderBy(
-        F.col("avg_logprob").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("lang").orderBy(
+        F.col("avg_logprob").desc(), F.col("doc_id").asc()
     )
     tier = F.ntile(n_buckets).over(w)
     return scored.select(
-        F.col(id_col),
-        F.col(lang_col),
+        F.col("doc_id"),
+        F.col("lang"),
         "avg_logprob",
         tier.cast("long").alias("tier"),
         F.when(tier == 1, "head")
@@ -1137,11 +1105,7 @@ def deletion_neighborhood_pairs(
     )
 
 
-def source_reputation(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def source_reputation(df: DataFrame) -> DataFrame:
     """SOURCE-GRAIN curation gate (RefinedWeb/Dolma-style domain
     filtering at the fixture's source grain): per source, document
     volume, mean quality (the UNROUNDED per-doc `quality_score`
@@ -1162,9 +1126,9 @@ def source_reputation(
     (domains, feeds), never the corpus — so its single-partition sort
     is bounded; the doc-grain gate application is then a broadcast
     semi-join, text never shuffles."""
-    t = F.col(text_col)
+    t = F.col("text")
     per = df.select(
-        F.col(source_col).alias("source"),
+        "source",
         F.md5(t).alias("__h"),
         quality_score(t).alias("__q"),
     )
@@ -1191,15 +1155,7 @@ def source_reputation(
     )
 
 
-def fim_transform(
-    docs,
-    rate_pct: int = 90,
-    pre_tok: str = "<PRE>",
-    suf_tok: str = "<SUF>",
-    mid_tok: str = "<MID>",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fim_transform(docs, rate_pct: int = 90) -> DataFrame:
     """Fill-in-the-middle training transform (Bavarian et al. 2022,
     arXiv:2207.14255): for ``rate_pct``% of documents, reorder to
     PSM — ``<PRE> prefix <SUF> suffix <MID> middle`` — so the model
@@ -1228,9 +1184,9 @@ def fim_transform(
     Scale shape: zero exchanges — tokenize, hash, slice, and rejoin
     are all array expressions inside the scan stage (the x36 chunking
     economy); at 100 TB this is a map-only pass."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     n = F.size(t)
-    doc = F.col(id_col)
+    doc = F.col("doc_id")
     apply_f = F.pmod(F.pmod(doc, 100) * 48271, 100) < rate_pct
 
     def cut(mult, add, prime):
@@ -1250,11 +1206,11 @@ def fim_transform(
         )
 
     fim_tokens = F.concat(
-        F.array(F.lit(pre_tok)),
+        F.array(F.lit("<PRE>")),
         seg(F.lit(0), lo),
-        F.array(F.lit(suf_tok)),
+        F.array(F.lit("<SUF>")),
         seg(hi, n),
-        F.array(F.lit(mid_tok)),
+        F.array(F.lit("<MID>")),
         seg(lo, hi),
     )
     return docs.select(

@@ -28,14 +28,9 @@ def pct_change(part_col: str, order_col: str, value_col: str) -> Column:
     return (F.col(value_col) - prev) / prev
 
 
-def rolling_stddev(
-    part_col: str,
-    order_col: str,
-    value_col: str,
-    window_rows: int = 30,
-) -> Column:
+def rolling_stddev(part_col: str, order_col: str, value_col: str) -> Column:
     """F2: trailing rolling sample stddev (ddof=1) over the last
-    ``window_rows`` rows including current.
+    30 rows including current.
 
     Reference: `scripts/transform.py:71-76` with ``ROLLING_WINDOW=30``
     (`scripts/config.py:40`), ``min_samples=1`` → null until ≥2 samples.
@@ -46,7 +41,7 @@ def rolling_stddev(
     w = (
         Window.partitionBy(part_col)
         .orderBy(order_col)
-        .rowsBetween(-(window_rows - 1), 0)
+        .rowsBetween(-29, 0)
     )
     n = F.count(F.col(value_col)).over(w)
     return F.when(n >= 2, F.stddev_samp(value_col).over(w))
@@ -67,25 +62,19 @@ def latest_row_per_key(
     )
 
 
-def compute_stock_metrics(
-    prices: DataFrame,
-    part_col: str = "ticker",
-    order_col: str = "date",
-    price_col: str = "close",
-    window_rows: int = 30,
-) -> DataFrame:
+def compute_stock_metrics(prices: DataFrame) -> DataFrame:
     """The reference's metric pipeline (`scripts/transform.py:65-79`):
     per-series daily return + trailing rolling volatility.
 
     Returns the input plus ``daily_return`` and ``rolling_vol_30d``.
-    Single shuffle on ``part_col``; both windows share the same
+    Single shuffle on ``ticker``; both windows share the same
     partitioning so Catalyst computes them in one WindowExec stage pair
     without re-shuffling.
     """
     df = prices.withColumn(
-        "daily_return", pct_change(part_col, order_col, price_col)
+        "daily_return", pct_change("ticker", "date", "close")
     )
     return df.withColumn(
         "rolling_vol_30d",
-        rolling_stddev(part_col, order_col, "daily_return", window_rows),
+        rolling_stddev("ticker", "date", "daily_return"),
     )

@@ -202,9 +202,6 @@ def scd2_apply(
     updates: DataFrame,
     key: str,
     attrs: tuple[str, ...],
-    eff_col: str = "eff_date",
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
 ) -> DataFrame:
     """L superset: slowly-changing-dimension TYPE 2 merge — apply one
     update batch to a versioned dimension, preserving history. The
@@ -218,7 +215,7 @@ def scd2_apply(
 
     Contract: ``current`` rows carry (key, *attrs, valid_from,
     valid_to) with exactly one OPEN row (valid_to IS NULL) per key;
-    ``updates`` carries (key, *attrs, eff_col) with at most one row
+    ``updates`` carries (key, *attrs, eff_date) with at most one row
     per key per batch (pre-aggregate with e4's max_by if not — the
     same one-version-per-batch rule every MERGE-based SCD2 has).
     Closed history rows pass through untouched.
@@ -239,17 +236,17 @@ def scd2_apply(
     at most once regardless of history depth."""
     ucols = [F.col(f"u.{a}") for a in attrs]
     ccols = [F.col(f"c.{a}") for a in attrs]
-    open_all = current.filter(F.col(to_col).isNull())
+    open_all = current.filter(F.col("valid_to").isNull())
     null_key_open = open_all.filter(F.col(key).isNull()).select(
-        key, *attrs, from_col, to_col
+        key, *attrs, "valid_from", "valid_to"
     )
     open_rows = open_all.filter(F.col(key).isNotNull()).alias("c")
-    closed_rows = current.filter(F.col(to_col).isNotNull())
+    closed_rows = current.filter(F.col("valid_to").isNotNull())
     null_key_new = updates.filter(F.col(key).isNull()).select(
         F.col(key),
         *[F.col(a) for a in attrs],
-        F.col(eff_col).alias(from_col),
-        F.lit(None).cast(current.schema[to_col].dataType).alias(to_col),
+        F.col("eff_date").alias("valid_from"),
+        F.lit(None).cast(current.schema["valid_to"].dataType).alias("valid_to"),
     )
     u = updates.filter(F.col(key).isNotNull()).alias("u")
 
@@ -265,20 +262,20 @@ def scd2_apply(
     kept_open = j.filter(F.col(f"u.{key}").isNull()).select(
         F.col(f"c.{key}").alias(key),
         *[c.alias(a) for c, a in zip(ccols, attrs)],
-        F.col(f"c.{from_col}").alias(from_col),
-        F.col(f"c.{to_col}").alias(to_col),
+        F.col("c.valid_from").alias("valid_from"),
+        F.col("c.valid_to").alias("valid_to"),
     )
     unchanged = j.filter(matched & ~changed).select(
         F.col(f"c.{key}").alias(key),
         *[c.alias(a) for c, a in zip(ccols, attrs)],
-        F.col(f"c.{from_col}").alias(from_col),
-        F.col(f"c.{to_col}").alias(to_col),
+        F.col("c.valid_from").alias("valid_from"),
+        F.col("c.valid_to").alias("valid_to"),
     )
     closed_out = j.filter(matched & changed).select(
         F.col(f"c.{key}").alias(key),
         *[c.alias(a) for c, a in zip(ccols, attrs)],
-        F.col(f"c.{from_col}").alias(from_col),
-        F.col(f"u.{eff_col}").alias(to_col),
+        F.col("c.valid_from").alias("valid_from"),
+        F.col("u.eff_date").alias("valid_to"),
     )
     # new versions: changed rows AND first-seen keys open at eff_date
     new_open = j.filter(
@@ -287,12 +284,12 @@ def scd2_apply(
     ).select(
         F.col(f"u.{key}").alias(key),
         *[c.alias(a) for c, a in zip(ucols, attrs)],
-        F.col(f"u.{eff_col}").alias(from_col),
-        F.lit(None).cast(current.schema[to_col].dataType).alias(to_col),
+        F.col("u.eff_date").alias("valid_from"),
+        F.lit(None).cast(current.schema["valid_to"].dataType).alias("valid_to"),
     )
     return (
         closed_rows.select(
-            key, *attrs, from_col, to_col
+            key, *attrs, "valid_from", "valid_to"
         )
         .unionAll(kept_open)
         .unionAll(unchanged)

@@ -23,25 +23,18 @@ from pyspark.sql import DataFrame, functions as F
 from stock_market_etl_spark.operators import dedup, sampling
 
 
-def build_training_set(
-    docs: DataFrame,
-    min_chars: int = 200,
-    mix: dict[str, float] | None = None,
-    default_fraction: float = 0.75,
-    pack_budget: int = 4096,
-) -> DataFrame:
+def build_training_set(docs: DataFrame) -> DataFrame:
     """Returns (doc_id, lang, n_chars, bin_id) for the packed train
     set. The held-out pool (decontamination target) is the reference
     corpus rows with ``doc_id % 10 >= 8`` — in production a benchmark
     suite; content-hash equality is the exact-dup tier of the
     contamination ladder (x26's n-gram audit is the fuzzy tier)."""
-    mix = {"en": 0.5} if mix is None else mix
 
     # 1. quality floor (scan-side)
-    kept = docs.filter(F.col("n_chars") >= min_chars)
+    kept = docs.filter(F.col("n_chars") >= 200)
     # 2. deterministic language mix (scan-side)
     mixed = sampling.stratified_sample(
-        kept, mix, default_fraction=default_fraction, salt="mix-v1"
+        kept, {"en": 0.5}, default_fraction=0.75, salt="mix-v1"
     )
     # 3. exact dedup, deterministic survivor — carry only the narrow
     #    columns the later stages read (lang for the mix audit, n_chars
@@ -62,6 +55,6 @@ def build_training_set(
         clean, {"train": 0.9, "val": 0.05, "test": 0.05}, salt="split-v1"
     ).filter(F.col("split") == "train")
     # 6. pack into context-window bins
-    return sampling.pack_sequences(train, budget=pack_budget).select(
+    return sampling.pack_sequences(train, budget=4096).select(
         "doc_id", "lang", "n_chars", "bin_id"
     )

@@ -71,21 +71,17 @@ def null_key_counts(
     return {c: (row[c] or 0) for c in keys}
 
 
-def validate(
-    df: DataFrame,
-    expected: T.StructType = STOCK_METRICS_SCHEMA,
-    keys: tuple[str, ...] = KEY_COLUMNS,
-) -> DataFrame:
+def validate(df: DataFrame) -> DataFrame:
     """K4: the gate — raise ``DataQualityError`` on any K1/K2/K3
     violation, else return ``df`` unchanged so the gate composes inline
     before writes (`scripts/transform.py:127-136`)."""
-    missing = missing_columns(df, expected)
+    missing = missing_columns(df, STOCK_METRICS_SCHEMA)
     if missing:
         raise DataQualityError(f"missing columns: {missing}")
-    mismatched = dtype_mismatches(df, expected)
+    mismatched = dtype_mismatches(df, STOCK_METRICS_SCHEMA)
     if mismatched:
         raise DataQualityError(f"dtype mismatches: {mismatched}")
-    nulls = {c: n for c, n in null_key_counts(df, keys).items() if n > 0}
+    nulls = {c: n for c, n in null_key_counts(df).items() if n > 0}
     if nulls:
         raise DataQualityError(f"nulls in key columns: {nulls}")
     return df

@@ -115,19 +115,8 @@ def jdbc_upsert(
             f"{len(key_rows)} distinct key tuples exceeds "
             f"max_delete_keys={max_delete_keys}; stage + MERGE instead"
         )
-    spark = df.sparkSession
-    jvm = spark._jvm
-    props = properties or {}
-    driver = props.get("driver")
-    if driver:
-        jvm.java.lang.Class.forName(driver)
-    # carry user/password (and any driver-specific keys) to the delete
-    # connection exactly as Spark's writer does for the append half
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        if k != "driver":
-            jprops.setProperty(k, str(v))
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+    jvm = df.sparkSession._jvm
+    conn = _jdbc_connection(df.sparkSession, url, properties)
     try:
         conn.setAutoCommit(False)
         # Spark's JDBC writer creates ANSI-quoted (case-sensitive)
@@ -152,6 +141,23 @@ def jdbc_upsert(
     finally:
         conn.close()
     jdbc_append(df, url, table, properties)
+
+
+def _jdbc_connection(spark: SparkSession, url: str, properties: dict | None):
+    """Open a driver-side JDBC connection the way Spark's own reader
+    and writer do: load ``properties["driver"]`` if given and carry
+    every other key (user/password and any driver-specific ones) as
+    connection properties. The caller closes it."""
+    jvm = spark._jvm
+    props = properties or {}
+    driver = props.get("driver")
+    if driver:
+        jvm.java.lang.Class.forName(driver)
+    jprops = jvm.java.util.Properties()
+    for k, v in props.items():
+        if k != "driver":
+            jprops.setProperty(k, str(v))
+    return jvm.java.sql.DriverManager.getConnection(url, jprops)
 
 
 def _bind_key(jvm, stmt, pos: int, value) -> None:
@@ -185,16 +191,7 @@ def jdbc_table_exists(
     Postgres → lower). Used by bootstrap-or-upsert sinks: a
     schema-read probe can't distinguish "table missing" from transient
     failure, and guessing wrong there would double-append."""
-    jvm = spark._jvm
-    props = properties or {}
-    driver = props.get("driver")
-    if driver:
-        jvm.java.lang.Class.forName(driver)
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        if k != "driver":
-            jprops.setProperty(k, str(v))
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+    conn = _jdbc_connection(spark, url, properties)
     try:
         # Scope the probe to the connection's CURRENT schema — the one
         # unqualified writes/upserts resolve against. An unscoped scan

@@ -64,15 +64,13 @@ def batch_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def tumbling_counts(
-    events: DataFrame, watermark: str = "2 hours", width: str = "1 hour"
-) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window per-user aggregation — the streaming form of the
     reference's per-(year,ticker) batch grouping
     (`scripts/ingest_hourly.py:117-124`)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -87,17 +85,12 @@ def tumbling_counts(
     )
 
 
-def sliding_avg(
-    events: DataFrame,
-    watermark: str = "2 hours",
-    width: str = "6 hours",
-    slide: str = "1 hour",
-) -> DataFrame:
+def sliding_avg(events: DataFrame) -> DataFrame:
     """Sliding-window average — time-based analogue of the 30-row
     rolling volatility (F2, `scripts/transform.py:71-76`)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "6 hours", "1 hour").alias("win"), "user_id")
         .agg(F.round(F.avg("value"), 6).alias("avg_value"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -107,9 +100,7 @@ def sliding_avg(
     )
 
 
-def ohlc_bars(
-    events: DataFrame, watermark: str = "2 hours", width: str = "1 day"
-) -> DataFrame:
+def ohlc_bars(events: DataFrame) -> DataFrame:
     """Tumbling-window OHLC bar maintenance — the streaming form of the
     f15 tick→bar resample (catalog/windows.py): per (user, bar) open /
     high / low / close / tick count, kept current as ticks arrive.
@@ -119,8 +110,8 @@ def ohlc_bars(
     epoch makes the bar key equal f15's calendar date (UTC session TZ),
     so a complete-mode drain equals the batch resample exactly."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 day").alias("win"), "user_id")
         .agg(
             F.round(F.min_by("value", "ts"), 6).alias("open_px"),
             F.round(F.max("value"), 6).alias("high_px"),
@@ -140,14 +131,12 @@ def ohlc_bars(
     )
 
 
-def session_counts(
-    events: DataFrame, watermark: str = "2 hours", gap: str = "30 minutes"
-) -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Session-window aggregation (no reference analogue — engine
-    superset): sessions close after ``gap`` of per-user inactivity."""
+    superset): sessions close after 30 minutes of per-user inactivity."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -158,12 +147,10 @@ def session_counts(
     )
 
 
-def session_transcripts_stream(
-    events: DataFrame, watermark: str = "2 hours", gap: str = "30 minutes"
-) -> DataFrame:
+def session_transcripts_stream(events: DataFrame) -> DataFrame:
     """Streaming session transcript assembly — the stateful streaming
     twin of operators/sessions.session_transcripts (catalog x50):
-    every ``gap``-bounded per-user session becomes one ordered
+    every 30-minute-gap-bounded per-user session becomes one ordered
     transcript document. ``session_window`` carries open sessions in
     the state store and MERGES them when a later micro-batch extends
     one (the semantics the multi-batch test pins); the transcript agg
@@ -182,8 +169,8 @@ def session_transcripts_stream(
         )
     )
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(
             F.min("ts").alias("sess_start"),
             F.max("ts").alias("sess_end"),
@@ -196,12 +183,12 @@ def session_transcripts_stream(
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Stateful streaming dedup on the natural key — the streaming form
     of E6 (`scripts/load_stock_metrics.py:88`): duplicates arriving
-    within the watermark horizon are dropped, state is evicted beyond
-    it."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    within the 2-hour watermark horizon are dropped, state is evicted
+    beyond it."""
+    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["user_id", "ts"]
     )
 
@@ -366,12 +353,7 @@ def run_available_now(
     return _drain(writer, checkpoint)
 
 
-def upsert_sink(
-    stream_df: DataFrame,
-    lake_path: str,
-    checkpoint: str,
-    keys: tuple[str, ...] = ("user_id", "ts"),
-):
+def upsert_sink(stream_df: DataFrame, lake_path: str, checkpoint: str):
     """foreachBatch idempotent upsert sink: each micro-batch runs the L2
     anti-join merge against the lake (reference merge core
     `scripts/ingest_hourly.py:117-131`). Exactly-once lake state =
@@ -387,7 +369,7 @@ def upsert_sink(
         existing = _read_if_exists(spark, lake_path)
         if existing is not None:
             existing = existing.select(*batch_df.columns)
-            merged = merge_increment(existing, batch_df, keys)
+            merged = merge_increment(existing, batch_df, ("user_id", "ts"))
             merged = merged.localCheckpoint(eager=True)
         else:
             merged = batch_df
@@ -427,8 +409,6 @@ def dedup_ingest_sink(
     stream_docs: DataFrame,
     corpus_path: str,
     checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float | None = None,
     transform=None,
 ):
@@ -479,9 +459,7 @@ def dedup_ingest_sink(
             batch_df = transform(batch_df)
             if batch_df.isEmpty():
                 return
-        batch_dd = exact_dedup(
-            batch_df, text_col=text_col, id_col=id_col
-        ).select(*out_cols)
+        batch_dd = exact_dedup(batch_df).select(*out_cols)
         # missing corpus ⇒ bootstrap append; other read errors retry
         # (the shared `_read_if_exists` classification, review r15)
         corpus = _read_if_exists(spark, corpus_path)
@@ -489,11 +467,11 @@ def dedup_ingest_sink(
             corpus = corpus.select(*out_cols)
             if threshold is None:
                 c_hash = corpus.select(
-                    F.sha2(F.col(text_col), 256).alias("__h")
+                    F.sha2(F.col("text"), 256).alias("__h")
                 ).distinct()
                 batch_dd = (
                     batch_dd.withColumn(
-                        "__h", F.sha2(F.col(text_col), 256)
+                        "__h", F.sha2(F.col("text"), 256)
                     )
                     .join(c_hash, "__h", "left_anti")
                     .drop("__h")
@@ -503,8 +481,6 @@ def dedup_ingest_sink(
                     corpus,
                     batch_dd,
                     threshold=threshold,
-                    text_col=text_col,
-                    id_col=id_col,
                     source="lsh",
                 )
         batch_dd.select(*out_cols).write.mode("append").parquet(
@@ -516,9 +492,7 @@ def dedup_ingest_sink(
     )
 
 
-def enrich_with_dim(
-    events: DataFrame, dim: DataFrame, key: str = "user_id"
-) -> DataFrame:
+def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream–static broadcast enrichment: each micro-batch left-joins
     the (bounded) static dimension — the STATELESS streaming join
     (no watermark, no join state store; contrast `view_purchase_join`,
@@ -528,16 +502,10 @@ def enrich_with_dim(
     between batches without restarting the query. The streaming form
     of D1's fact ⟕ watermark-dim join (reference
     `scripts/load_stock_metrics.py:77`)."""
-    return events.join(F.broadcast(dim), key, "left")
+    return events.join(F.broadcast(dim), "user_id", "left")
 
 
-def ivf_append_sink(
-    stream_vecs: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def ivf_append_sink(stream_vecs: DataFrame, index_path: str, checkpoint: str):
     """Streaming IVF index maintenance — the ANN twin of
     `dedup_ingest_sink`: each arriving embedding micro-batch is
     assigned to its nearest centroid against the index's FIXED
@@ -550,7 +518,7 @@ def ivf_append_sink(
 
     Exactly-once at vector-id grain without transactional writes, by
     the same algebra as the dedup sink: the batch anti-joins on
-    ``id_col`` against the ids already in the index (an id-column scan
+    ``vec_id`` against the ids already in the index (an id-column scan
     of ``cells`` — never embeddings), so a redelivered micro-batch
     lands nothing (replay-tested in tests/test_streaming.py).
 
@@ -579,9 +547,9 @@ def ivf_append_sink(
         # missing cells table ⇒ bootstrap; other read errors retry
         # (the shared `_fresh_minus_landed` seam, review r15)
         fresh = _fresh_minus_landed(
-            batch_df.dropDuplicates([id_col]), cells_path, id_col
+            batch_df.dropDuplicates(["vec_id"]), cells_path, "vec_id"
         )
-        assigned = assign_cells(fresh, centers_df, vec_col=vec_col)
+        assigned = assign_cells(fresh, centers_df)
         assigned.select(*out_cols, "__cell").write.mode(
             "append"
         ).partitionBy("__cell").parquet(cells_path)
@@ -596,9 +564,6 @@ def substring_gate_sink(
     out_path: str,
     checkpoint: str,
     index_path: str,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Streaming SUBSTRING-DEDUP gate — the suffix-ladder's ingest
     face (x71 flag → x72 cut, run on arrival against the b25
@@ -612,7 +577,7 @@ def substring_gate_sink(
     join against the artifact.
 
     Exactly-once at doc-id grain by the `ivf_append_sink` algebra:
-    the batch anti-joins on ``id_col`` against ids already landed, so
+    the batch anti-joins on ``doc_id`` against ids already landed, so
     a redelivered micro-batch lands nothing (replay-tested in
     tests/test_streaming.py).
 
@@ -638,15 +603,12 @@ def substring_gate_sink(
             None,
             fresh,
             k=built_k,
-            min_docs=min_docs,
-            text_col=text_col,
-            id_col=id_col,
             corpus_index=index,
             built_k=built_k,
         )
 
     return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, text_col, id_col
+        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
     )
 
 
@@ -702,9 +664,6 @@ def decontamination_gate_sink(
     out_path: str,
     checkpoint: str,
     index_path: str,
-    min_ref_docs: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Streaming TRAIN-TEST DECONTAMINATION gate — x84 run on arrival
     (`substring_gate_sink`'s lifecycle with `contaminated_spans`'s
@@ -727,7 +686,7 @@ def decontamination_gate_sink(
 
     Exactly-once at doc-id grain by the `ivf_append_sink` algebra
     (via `_span_gate_sink`, the shared flag-and-cut gate): the batch
-    anti-joins on ``id_col`` against ids already landed, so a
+    anti-joins on ``doc_id`` against ids already landed, so a
     redelivered micro-batch lands nothing (replay-tested in
     tests/test_streaming.py)."""
     from stock_market_etl_spark.operators.dedup import (
@@ -743,15 +702,12 @@ def decontamination_gate_sink(
             None,
             fresh,
             k=built_k,
-            min_ref_docs=min_ref_docs,
-            text_col=text_col,
-            id_col=id_col,
             reference_index=index,
             built_k=built_k,
         )
 
     return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, text_col, id_col
+        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
     )
 
 
@@ -760,8 +716,6 @@ def bloom_gate_sink(
     out_path: str,
     checkpoint: str,
     bloom_index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Streaming decontamination gate at the BLOOM tier — x88 run on
     arrival (`decontamination_gate_sink`'s lifecycle with the
@@ -786,12 +740,10 @@ def bloom_gate_sink(
     bloom = read_bloom_index(stream_docs.sparkSession, bloom_index_path)
 
     def flag_spans(fresh: DataFrame) -> DataFrame:
-        return bloom_contaminated_spans(
-            bloom, fresh, k=bloom[4], text_col=text_col, id_col=id_col
-        )
+        return bloom_contaminated_spans(bloom, fresh, k=bloom[4])
 
     return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, text_col, id_col
+        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
     )
 
 
@@ -801,9 +753,6 @@ def embedding_gate_sink(
     checkpoint: str,
     vector_index_path: str,
     bucket_index_path: str | None = None,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Streaming SEMANTIC decontamination gate — x85 run on arrival
     (the n21 lifecycle applied to the embedding tier, closing the
@@ -814,7 +763,7 @@ def embedding_gate_sink(
     write-once per release, a new eval release folds in at increment
     cost and publishes as the NEXT release, never mutating the one a
     running gate reads), contaminated vectors (max cosine ≥
-    ``threshold`` to any eval vector) are DROPPED, and the kept rows
+    0.4 to any eval vector) are DROPPED, and the kept rows
     land as ``(id, nearest_eval_id, max_cosine)`` — the audit-grain
     gate record (the vector itself re-joins by id downstream;
     landing the evidence keeps the table oracle-comparable, the x26
@@ -864,17 +813,14 @@ def embedding_gate_sink(
         # different copies of the same id and land a contaminated
         # row as "kept" (review r15)
         fresh = _fresh_minus_landed(
-            batch_df.dropDuplicates([id_col]), out_path, id_col
+            batch_df.dropDuplicates(["vec_id"]), out_path, "vec_id"
         ).persist()
         try:
             if buckets is None:
                 verdict = embedding_contamination_incremental(
                     index,
                     fresh,
-                    threshold=threshold,
                     built_dim=built_dim,
-                    id_col=id_col,
-                    vec_col=vec_col,
                 )
             else:
                 verdict = embedding_contamination_ann_incremental(
@@ -882,9 +828,6 @@ def embedding_gate_sink(
                     buckets,
                     fresh,
                     params,
-                    threshold=threshold,
-                    id_col=id_col,
-                    vec_col=vec_col,
                     persist_train=False,  # batch dies with the call;
                     # a per-batch persist would leak blocks forever
                     # (review r15) — recomputation reads `fresh`
@@ -905,22 +848,20 @@ def embedding_gate_sink(
             # of one verdict.
             verdict = verdict.persist()
             try:
-                # verdict keys on the literal "vec_id" output name
-                # (contamination_from_pairs' audit schema); NULL
-                # evidence is cast to the VERDICT's own types — a
+                # NULL evidence is cast to the VERDICT's own types — a
                 # hardcoded bigint would make unionByName coerce (or
                 # crash, under ANSI) non-bigint id columns (review
                 # r15 pass 3)
                 out = verdict.filter(~F.col("contaminated")).select(
-                    F.col("vec_id").alias(id_col),
+                    "vec_id",
                     "nearest_eval_id",
                     "max_cosine",
                 )
                 noverdict = (
-                    fresh.select(id_col)
+                    fresh.select("vec_id")
                     .join(
-                        verdict.select(F.col("vec_id").alias(id_col)),
-                        id_col,
+                        verdict.select("vec_id"),
+                        "vec_id",
                         "left_anti",
                     )
                     .withColumn(
@@ -1000,9 +941,9 @@ def read_agg_state(spark: SparkSession, lake_path: str) -> DataFrame:
     )
 
 
-def view_purchase_join(events: DataFrame, max_lag: str = "1 hour") -> DataFrame:
+def view_purchase_join(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: each purchase matched to every view by
-    the same user in the preceding ``max_lag`` (attribution). The one
+    the same user in the preceding hour (attribution). The one
     §N capability with no batch-side analogue in the reference at all —
     its loader only ever joins a stream to a static watermark table
     (`scripts/load_stock_metrics.py:77`).
@@ -1037,7 +978,7 @@ def view_purchase_join(events: DataFrame, max_lag: str = "1 hour") -> DataFrame:
         buys,
         (F.col("user_id") == F.col("buy_user"))
         & (F.col("buy_ts") >= F.col("view_ts"))
-        & (F.col("buy_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {max_lag}")),
+        & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 hour")),
         "inner",
     )
     return joined.select(
@@ -1045,10 +986,10 @@ def view_purchase_join(events: DataFrame, max_lag: str = "1 hour") -> DataFrame:
     )
 
 
-def view_purchase_left_join(events: DataFrame, max_lag: str = "1 hour") -> DataFrame:
+def view_purchase_left_join(events: DataFrame) -> DataFrame:
     """Left-outer stream-stream join: every view, with its attributed
     purchase columns null when no same-user purchase follows within
-    ``max_lag`` (abandonment detection). The outer semantics are where
+    an hour (abandonment detection). The outer semantics are where
     watermarks stop being an optimization and become part of the
     MEANING: a null match can only be emitted once the purchase-side
     watermark proves no match can still arrive, so unmatched rows
@@ -1078,7 +1019,7 @@ def view_purchase_left_join(events: DataFrame, max_lag: str = "1 hour") -> DataF
         buys,
         (F.col("user_id") == F.col("buy_user"))
         & (F.col("buy_ts") >= F.col("view_ts"))
-        & (F.col("buy_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {max_lag}")),
+        & (F.col("buy_ts") <= F.col("view_ts") + F.expr("INTERVAL 1 hour")),
         "left_outer",
     )
     return joined.select("user_id", "view_id", "view_ts", "buy_id", "buy_ts")
@@ -1111,13 +1052,12 @@ def observe_stream_audit(
     stream_df: DataFrame,
     keys: tuple[str, ...],
     watermark_col: str | None = None,
-    name: str = "audit",
 ) -> DataFrame:
     """Streaming twin of ``quality.observe_audit``: attach the K3/L1
     audit metrics to a stream by NAME (the ``Observation`` handle class
     is batch-only; named observations are the streaming API). Each
     micro-batch's metrics arrive in its ``StreamingQueryProgress.
-    observedMetrics[name]`` — counters are per-batch and additive, the
+    observedMetrics["audit"]`` — counters are per-batch and additive, the
     watermark max is a running per-batch max — so an ingest pipeline
     gets its audit trail from the SAME job that ingests, with no
     second pass over the stream (the 100 TB rule k5 proves in batch).
@@ -1129,7 +1069,7 @@ def observe_stream_audit(
         )
     if watermark_col is not None:
         metrics.append(F.max(watermark_col).alias(f"max_{watermark_col}"))
-    return stream_df.observe(name, *metrics)
+    return stream_df.observe("audit", *metrics)
 
 
 def serving_totals(events: DataFrame) -> DataFrame:
@@ -1292,7 +1232,6 @@ def lake_batch_sink(
     stream_df: DataFrame,
     lake_path: str,
     checkpoint: str,
-    date_col: str = "ts",
 ) -> StreamingQuery:
     """Exactly-once streaming → partitioned-lake writer: each
     micro-batch lands under its own ``batch_id=N`` directory (inner
@@ -1308,7 +1247,7 @@ def lake_batch_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("event_date", F.to_date(date_col))
+            batch_df.withColumn("event_date", F.to_date("ts"))
             .write.mode("overwrite")
             .partitionBy("event_date")
             .parquet(os.path.join(lake_path, f"batch_id={batch_id}"))
@@ -1322,8 +1261,6 @@ def drift_monitor_sink(
     out_path: str,
     checkpoint: str,
     baseline_path: str,
-    text_col: str = "text",
-    group_col: str = "source",
 ) -> StreamingQuery:
     """Streaming DRIFT MONITOR — x80's PSI gate run on arrival against
     a frozen baseline release (the b25 → n19 lifecycle applied to
@@ -1367,11 +1304,11 @@ def drift_monitor_sink(
         if batch_df.isEmpty():
             return
         scored = batch_df.select(
-            F.col(group_col),
-            F.round(quality_score(F.col(text_col)), 6).alias("__q"),
+            F.col("source"),
+            F.round(quality_score(F.col("text")), 6).alias("__q"),
         )
         psi_vs_baseline(
-            scored, baseline, "__q", group_col, bins
+            scored, baseline, "__q", "source", bins
         ).write.mode("overwrite").parquet(
             os.path.join(out_path, f"batch_id={batch_id}")
         )

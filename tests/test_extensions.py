@@ -3415,6 +3415,19 @@ def test_read_window_index_refuses_absent_meta(spark, tmp_path):
     shutil.rmtree(tmp_path / "release" / "meta")
     with pytest.raises(ValueError, match="missing or malformed"):
         dd.read_window_index(spark, path)
+    # a meta job that died after creating its output dir leaves an
+    # empty dir (no data file, no schema to infer): malformed, not
+    # absent — also where an absent meta is tolerated
+    from stock_market_etl_spark.operators import artifacts
+
+    (tmp_path / "release" / "meta" / "_temporary").mkdir(parents=True)
+    with pytest.raises(ValueError, match="missing or malformed"):
+        dd.read_window_index(spark, path)
+    with pytest.raises(ValueError, match="missing or malformed"):
+        artifacts.read_required_meta(
+            spark, path, ("k",), "window index", "write_window_index",
+            required=False,
+        )
 
 
 def test_bloom_index_release_lifecycle(spark, sf_smoke, tmp_path):
