@@ -1277,9 +1277,7 @@ def b28_embedding_ann_release_lifecycle(
     v2 = os.path.join(work, "vec_r2")
     similarity.publish_embedding_index(merged_v, v2, built_dim)
     idx2, dim2 = similarity.read_embedding_index(spark, v2)
-    r2_vecs = similarity._checked_unit_vectors(
-        eval_r2, dim2, "vec_id", "embedding"
-    )
+    r2_vecs = similarity._checked_unit_vectors(eval_r2, dim2)
     merged_b = similarity.merge_lsh_buckets(bk1, r2_vecs, params)
     b2 = os.path.join(work, "bkt_r2")
     similarity.publish_lsh_buckets(merged_b, b2, params)

@@ -725,8 +725,7 @@ def f17_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
     # persist(): the bar table feeds BOTH the span (spine source) and
     # the join — without it the tick-grain scan+aggregate runs twice
-    # (lifecycle per operators/dedup.py module docstring; bench.py
-    # clears between queries).
+    # (lifecycle per operators/dedup.py module docstring).
     daily = ev.groupBy(
         F.col("user_id"), F.to_date("ts").alias("bar_date")
     ).agg(F.max_by("value", "ts").alias("close_px")).persist()

@@ -6,9 +6,9 @@ tables (diamond-shaped plans — each table feeds 2-4 consumers and
 would otherwise recompute per consumer). Spark offers no
 release-on-last-action hook, so the entries live until the session
 LRU-evicts them or the CALLER runs `spark.catalog.clearCache()` /
-`df.unpersist()` between batches (bench.py does; long-lived services
-should too). At 100 TB the same tables are materialized to the lake
-instead, which makes the lifecycle explicit.
+`df.unpersist()` between batches (long-lived services should). At
+100 TB the same tables are materialized to the lake instead, which
+makes the lifecycle explicit.
 
 Scale design:
 - exact dedup is a single hash aggregation on a 256-bit content hash —

@@ -26,9 +26,7 @@ from stock_market_etl_spark.operators import artifacts
 from stock_market_etl_spark.operators.text import tokens
 
 
-def _gram_buckets(
-    docs: DataFrame, n_buckets: int, text_col: str, id_col: str, *extra
-) -> DataFrame:
+def _gram_buckets(docs: DataFrame, n_buckets: int) -> DataFrame:
     """Word bigrams → md5-prefix hash buckets, exploded one row per
     gram. 16^k buckets for k hex chars — md5 is byte-identical across
     engines, which is what lets a SQL oracle replay the bucketing
@@ -41,7 +39,7 @@ def _gram_buckets(
         )
     hex_chars = hex_prefix[n_buckets]
     t = docs.select(
-        F.col(id_col), *extra, tokens(F.col(text_col)).alias("__t")
+        F.col("doc_id"), tokens(F.col("text")).alias("__t")
     ).filter(F.size("__t") >= 2)
     bigrams = F.transform(
         F.sequence(F.lit(1), F.size("__t") - 1),
@@ -53,7 +51,7 @@ def _gram_buckets(
         bigrams, lambda g: F.substring(F.md5(g), 1, hex_chars)
     )
     return t.select(
-        F.col(id_col), *extra, F.explode(buckets).alias("__bucket")
+        F.col("doc_id"), F.explode(buckets).alias("__bucket")
     )
 
 
@@ -79,7 +77,7 @@ def dsir_weights(
     # discarded id slot must still union cleanly with raw's id column,
     # whatever its type (a hard-coded long cast fails unionByName on
     # string-keyed corpora)
-    tg = _gram_buckets(target, n_buckets, "text", "doc_id").select(
+    tg = _gram_buckets(target, n_buckets).select(
         F.lit(None).cast(raw.schema["doc_id"].dataType).alias("doc_id"),
         F.lit(1).alias("__is_target"),
         "__bucket",
@@ -89,7 +87,7 @@ def dsir_weights(
     # cache the tokenize+hash scan runs twice (same lifecycle
     # convention as the LSH signature tables, operators/dedup.py:4-9:
     # callers running batch loops clearCache()/unpersist between runs)
-    rg = _gram_buckets(raw, n_buckets, "text", "doc_id").select(
+    rg = _gram_buckets(raw, n_buckets).select(
         F.col("doc_id"), F.lit(0).alias("__is_target"), "__bucket"
     ).persist()
     grams = tg.unionByName(rg)

@@ -975,9 +975,7 @@ def semdedup(
 # --- kNN label propagation (auto-labeling) -------------------------------
 
 
-def _knn_vote_tail(
-    pairs: DataFrame, k: int, label_col: str
-) -> DataFrame:
+def _knn_vote_tail(pairs: DataFrame, k: int) -> DataFrame:
     """Shared tail of the kNN label-propagation forms: per-query top-k
     by cosine (ties broken by labeled id — deterministic and oracle-
     replayable), then majority vote (ties broken by smaller label —
@@ -990,18 +988,18 @@ def _knn_vote_tail(
     top = pairs.withColumn("__rn", F.row_number().over(wk)).filter(
         F.col("__rn") <= k
     )
-    votes = top.groupBy("__qid", label_col).agg(
+    votes = top.groupBy("__qid", "label").agg(
         F.count("*").cast("long").alias("votes")
     )
     ww = Window.partitionBy("__qid").orderBy(
-        F.col("votes").desc(), F.col(label_col).asc()
+        F.col("votes").desc(), F.col("label").asc()
     )
     win = (
         votes.withColumn("__wr", F.row_number().over(ww))
         .filter(F.col("__wr") == 1)
         .select(
             "__qid",
-            F.col(label_col).alias("predicted_label"),
+            F.col("label").alias("predicted_label"),
             "votes",
         )
     )
@@ -1069,7 +1067,7 @@ def knn_label_propagation(emb: DataFrame, query_cond, k: int = 5) -> DataFrame:
         "label",
         _pair_cosine_rounded(),
     )
-    return _knn_vote_tail(pairs, k, "label")
+    return _knn_vote_tail(pairs, k)
 
 
 def knn_label_propagation_lsh(
@@ -1152,7 +1150,7 @@ def knn_from_candidates(
             _pair_cosine_rounded(),
         )
     )
-    return _knn_vote_tail(pairs, k, "label")
+    return _knn_vote_tail(pairs, k)
 
 
 def bitext_margin_pairs(
@@ -1371,18 +1369,16 @@ def embedding_contamination_ann(
     return contamination_from_pairs(pairs, threshold)
 
 
-def _checked_unit_vectors(
-    df: DataFrame, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, __v double[], __n) with the vector WIDTH enforced inside
-    the plan: a row whose array length ≠ ``dim`` fails the executing
-    task with a descriptive error (`raise_error` in the projection —
-    scan-stage, zero shuffle, no extra action) instead of silently
-    zip_with-padding into null cosines and null verdicts. The
-    embedding analogue of the substring family's k guards: ``dim`` is
+def _checked_unit_vectors(df: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, __v double[], __n) from the ``embedding`` column, with
+    the vector WIDTH enforced inside the plan: a row whose array
+    length ≠ ``dim`` fails the executing task with a descriptive error
+    (`raise_error` in the projection — scan-stage, zero shuffle, no
+    extra action) instead of silently zip_with-padding into null
+    cosines and null verdicts. The embedding analogue of the substring family's k guards: ``dim`` is
     part of an embedding index's identity, and every lifecycle seam
     (build, merge, probe) routes its vectors through THIS check."""
-    v = _normed_vectors(df, id_col, vec_col)
+    v = _normed_vectors(df, "vec_id", "embedding")
     guard = F.when(
         F.size("__v") == int(dim), F.col("__v")
     ).otherwise(
@@ -1394,7 +1390,7 @@ def _checked_unit_vectors(
                 ),
                 F.size("__v").cast("string"),
                 F.lit(" at id "),
-                F.col(id_col).cast("string"),
+                F.col("vec_id").cast("string"),
             )
         )
     )
@@ -1429,7 +1425,7 @@ def write_embedding_index(eval_df: DataFrame, path: str, dim: int) -> None:
     artifacts.write_release(
         eval_df.sparkSession,
         path,
-        {"vectors": _checked_unit_vectors(eval_df, dim, "vec_id", "embedding")},
+        {"vectors": _checked_unit_vectors(eval_df, dim)},
         _EMB_INDEX_META,
         (dim,),
         "overwrite",
@@ -1499,7 +1495,7 @@ def merge_embedding_index(
             "later cosine; rebuild the index or merge at its dim"
         )
     merged = index.unionByName(
-        _checked_unit_vectors(new_eval, dim, "vec_id", "embedding").select(
+        _checked_unit_vectors(new_eval, dim).select(
             F.col("vec_id"), F.col("__v"), F.col("__n")
         )
     )
@@ -1562,7 +1558,7 @@ def embedding_contamination_incremental(
             "mismatch nulls every cosine and flags nothing"
         )
     t = _pair_side(
-        _checked_unit_vectors(train, built_dim, "vec_id", "embedding"),
+        _checked_unit_vectors(train, built_dim),
         "vec_id",
         "t",
     )
@@ -1730,7 +1726,7 @@ def embedding_contamination_ann_incremental(
     recomputation is cheaper than the cleanup plumbing (review
     r15)."""
     dim, n_planes, n_tables, seed = (int(x) for x in built_params)
-    tv = _checked_unit_vectors(train, dim, "vec_id", "embedding")
+    tv = _checked_unit_vectors(train, dim)
     if persist_train:
         tv = tv.persist()
     train_buckets = hyperplane_lsh_buckets(

@@ -607,9 +607,7 @@ def substring_gate_sink(
             built_k=built_k,
         )
 
-    return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
-    )
+    return _span_gate_sink(stream_docs, out_path, checkpoint, flag_spans)
 
 
 def _fresh_minus_landed(
@@ -632,14 +630,12 @@ def _span_gate_sink(
     out_path: str,
     checkpoint: str,
     flag_spans,
-    text_col: str,
-    id_col: str,
 ):
     """The shared flag-and-cut streaming gate (review r13 — the
     bootstrap/anti-join/cut/append algebra existed verbatim in both
     span gates; a fix to the error-class matching or the exactly-once
     seam must land ONCE): each arriving micro-batch deduplicates on
-    ``id_col``, anti-joins ids already landed (exactly-once at doc-id
+    ``doc_id``, anti-joins ids already landed (exactly-once at doc-id
     grain via `_fresh_minus_landed`, the `ivf_append_sink` algebra —
     a redelivered micro-batch lands nothing), gets its spans from
     ``flag_spans(fresh)`` (the one seam the public sinks differ in),
@@ -650,11 +646,11 @@ def _span_gate_sink(
         if batch_df.isEmpty():
             return
         fresh = _fresh_minus_landed(
-            batch_df.dropDuplicates([id_col]), out_path, id_col
+            batch_df.dropDuplicates(["doc_id"]), out_path, "doc_id"
         )
-        cut_spans(
-            fresh, flag_spans(fresh), text_col=text_col, id_col=id_col
-        ).write.mode("append").parquet(out_path)
+        cut_spans(fresh, flag_spans(fresh)).write.mode("append").parquet(
+            out_path
+        )
 
     return _drain(stream_docs.writeStream.foreachBatch(gate_batch), checkpoint)
 
@@ -706,9 +702,7 @@ def decontamination_gate_sink(
             built_k=built_k,
         )
 
-    return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
-    )
+    return _span_gate_sink(stream_docs, out_path, checkpoint, flag_spans)
 
 
 def bloom_gate_sink(
@@ -742,9 +736,7 @@ def bloom_gate_sink(
     def flag_spans(fresh: DataFrame) -> DataFrame:
         return bloom_contaminated_spans(bloom, fresh, k=bloom[4])
 
-    return _span_gate_sink(
-        stream_docs, out_path, checkpoint, flag_spans, "text", "doc_id"
-    )
+    return _span_gate_sink(stream_docs, out_path, checkpoint, flag_spans)
 
 
 def embedding_gate_sink(

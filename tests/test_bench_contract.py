@@ -1,114 +1,27 @@
-"""bench.py is driver-facing infrastructure: it must print exactly one
-JSON line with the contract keys, whatever else happens. A regression
-here costs a full driver round, so it gets its own subprocess test at
-smoke scale."""
+"""Shuffle-economy pins: each pinned catalog query's total shuffle
+bytes written at sf0.1 must stay inside a band around its pinned
+figure. Wall-clock on a shared host is too noisy to catch a plan
+regression; shuffle bytes move only with the plan."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
-from tests.conftest import REPO_ROOT, SF_SMOKE
-
-
-def test_bench_emits_contract_json():
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=SF_SMOKE,
-        SPARK_GRAFT_CPUS="4",
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO_ROOT, "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-        # 65 queries × (warm-up + 3 reps) at sf0.001. History: 420 s
-        # started flaking at 63 queries (r11) → 720 s; r15 measured
-        # the SAME code at 858–890 s wall on a slower/noisier
-        # sandbox (Firecracker co-tenancy, per-query swings up to
-        # 5×) where the r14/r15 build hosts ran it in ~6–7 min —
-        # the r15 optimizations brought the quiet reading there back
-        # to ~600 s, but 720 s left only 20 % headroom against
-        # documented host variance. 1500 s keeps the guard
-        # meaningful (a hung bench still fails fast relative to the
-        # 25-min suite) without failing the whole suite on host
-        # placement.
-        timeout=1500,
-        cwd=REPO_ROOT,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    json_lines = [
-        ln for ln in out.stdout.splitlines() if ln.startswith("{")
-    ]
-    assert len(json_lines) == 2, out.stdout[-2000:]
-    detail, payload = (json.loads(ln) for ln in json_lines)
-    assert payload["metric"] == "bench_total_wall"
-    assert payload["unit"] == "sec"
-    assert isinstance(payload["value"], (int, float))
-    assert payload["queries"] and all(
-        isinstance(v, (int, float)) for v in payload["queries"].values()
-    )
-    # the headline total is the FULL-precision sum of the measured
-    # timings (ADVICE r12: summing the 2-sig-fig per-query values put
-    # ~2.5% quantization noise into cross-round total comparisons);
-    # the rounded per-query map must still reconcile with it to within
-    # the 2-sig-fig band (≤5% relative per value, plus float noise)
-    assert (
-        abs(sum(payload["queries"].values()) - payload["value"])
-        <= 0.05 * payload["value"] + 0.002
-    )
-    assert payload["sf"] == 0.001
-    # BENCH-membership policy (VERDICT r12 task 4, decided r13): the
-    # driver's capture is EXACTLY the last 2000 chars of output
-    # (measured: len(BENCH_r12.json "tail") == 2000), and the
-    # headline is the LAST line, so it survives whole iff it fits in
-    # ~1999 chars. Contract bound: 1950 — a 50-char guard against the
-    # hard cap. Per-query values ride at 2 significant figures
-    # (bench._headline_val); at r13's 66 rows the headline measures
-    # ~1905 chars, leaving room for ~1-2 more rows. WHEN the 1950
-    # bound is reached: retire the cheapest rows whose machinery is
-    # timed by a composed row (e.g. the five sub-0.4 s dashboard
-    # queries are all sub-plans of f1_f2/f18-style composites), and
-    # record each retirement in BASELINE.md as "retired rN, covered
-    # by <row>" so the baseline sum stays comparable. Never raise the
-    # bound past 1950 — the 2000 cap is the driver's, not ours.
-    assert json_lines[-1] == json.dumps(payload, separators=(",", ":"))
-    # bench now enforces this bound AT EMIT TIME (bench._render_headline
-    # refuses past HEADLINE_BUDGET — ADVICE r13: the protection must
-    # fire on every run, not only when this test happens to run before
-    # the driver captures a clipped line); this assertion stays as the
-    # CI-visible early warning with the policy note above.
-    assert len(json_lines[-1]) < 1950, len(json_lines[-1])
-    # per-rep evidence rides the detail line: every query ships all
-    # rep times at full 3-decimal precision, and the headline number
-    # is their min through the headline rounding (noise vs regression
-    # in one glance)
-    from bench import _headline_val
-
-    assert detail["metric"] == "bench_detail"
-    assert set(detail["reps"]) == set(payload["queries"])
-    for name, rep_times in detail["reps"].items():
-        assert len(rep_times) == 3
-        assert _headline_val(min(rep_times)) == payload["queries"][name]
-
 
 # Pinned per-query shuffle bytes at sf0.1 under the test session
-# (local[8], 8 shuffle partitions). Wall-clock on this shared host
-# swings up to 5x run-to-run (BASELINE.md), so plan regressions are
-# detected on the stable signal instead: a payload slipping into a
-# shuffle moves bytes by integer factors (x6's r04 regression was
-# 0.99 -> 3.8 MB), far outside the [0.5x, 1.6x] band — which in turn
-# is wide enough for partition-count overhead (the same queries move
-# <20% between 8 and 32 shuffle partitions).
+# (local[$SPARK_GRAFT_CPUS], as many shuffle partitions). Wall-clock
+# on this shared host swings up to 5x run-to-run (BASELINE.md), so
+# plan regressions are detected on the stable signal instead: a
+# payload slipping into a shuffle moves bytes by integer factors
+# (x6's r04 regression was 0.99 -> 3.8 MB), far outside the
+# [0.5x, 1.6x] band — which in turn is wide enough for
+# partition-count overhead (the same queries move <20% between 8 and
+# 32 shuffle partitions).
 # ALL pins re-measured r09 under the stage-grain metric
-# (bench._shuffle_mb_since): the former SQL-execution-store reading
-# lost AQE-replanned exchange metrics (observed 0.0 for a query whose
-# stages wrote 40 MB) and saw only the LAST execution of multi-exec
-# queries. Stage grain counts every byte a query actually shuffled —
-# several figures moved (both directions) purely from the measurement
-# fix; the per-query rationales below are unchanged.
+# (tools.profile_query.stage_rows): the former SQL-execution-store
+# reading lost AQE-replanned exchange metrics (observed 0.0 for a
+# query whose stages wrote 40 MB) and saw only the LAST execution of
+# multi-exec queries. Stage grain counts every byte a query actually
+# shuffled — several figures moved (both directions) purely from the
+# measurement fix; the per-query rationales below are unchanged.
 SHUFFLE_MB_PINS = {
     "f1_f2_metrics_pipeline": 2.01,
     "x6_exact_dedup": 0.37,
@@ -266,94 +179,33 @@ SHUFFLE_MB_PINS = {
 }
 
 
-def test_headline_refuses_past_budget_at_emit_time():
-    """ADVICE r13: the headline-size protection must fire on every
-    bench RUN, not only when the contract test happens to run — an
-    over-budget headline is a loud SystemExit naming the retirement
-    policy, never a silently clipped driver capture; an in-budget
-    payload round-trips through the same seam byte-identically."""
-    import pytest
-
-    from bench import HEADLINE_BUDGET, _render_headline
-
-    ok = {"metric": "bench_total_wall", "value": 1.0, "queries": {}}
-    assert _render_headline(ok) == json.dumps(
-        ok, separators=(",", ":")
-    )
-    fat = {
-        "metric": "bench_total_wall",
-        "value": 1.0,
-        "queries": {f"q{i:04d}_padpadpad": 1.23 for i in range(200)},
-    }
-    assert len(json.dumps(fat, separators=(",", ":"))) > HEADLINE_BUDGET
-    with pytest.raises(SystemExit, match="retire"):
-        _render_headline(fat)
-    # the boundary agrees with this file's `len < 1950` assertion
-    # exactly (review r14): a line of EXACTLY the budget refuses too
-    edge = {"m": "a" * (HEADLINE_BUDGET - 8)}
-    assert len(json.dumps(edge, separators=(",", ":"))) == HEADLINE_BUDGET
-    with pytest.raises(SystemExit, match="retire"):
-        _render_headline(edge)
-    under = {"m": "a" * (HEADLINE_BUDGET - 9)}
-    assert _render_headline(under)
-
-
-def test_headline_prevalidates_before_timing_loop():
-    """ADVICE r14: a BENCH addition that cannot possibly fit the
-    headline budget fails BEFORE the timing loop pays for the full
-    run (and before the SystemExit would skip spark.stop()). The
-    rehearsal is a LOWER bound (1-char values) so it can never
-    falsely refuse a run the emit guard passes: the CURRENT query
-    set must prevalidate clean, a hopeless set must raise, and
-    main() must call the rehearsal ahead of the warm-up pass."""
-    import inspect
-
-    import pytest
-
-    import bench
-
-    # the real set passes (no false refusal)
-    bench._prevalidate_headline(bench.BENCH_QUERIES, 0.1)
-    # a set that cannot fit even at minimum width refuses up front
-    hopeless = [f"q{i:04d}_padpadpadpadpad" for i in range(200)]
-    with pytest.raises(SystemExit, match="retire"):
-        bench._prevalidate_headline(hopeless, 0.1)
-    # ordering: rehearsal strictly before Spark startup (pure Python
-    # refusal — no JVM paid, no un-stopped session; review r15)
-    src = inspect.getsource(bench.main)
-    assert src.index("_prevalidate_headline") < src.index(
-        "get_spark("
-    )
-
-
 def test_shuffle_bytes_hold_their_pins(spark):
-    """The shuffle-economy contract as a test, not prose: each benched
+    """The shuffle-economy contract as a test, not prose: each pinned
     query's total 'shuffle bytes written' at sf0.1 must stay inside
     [0.5x, 1.6x] of its pinned value. Catches id-only shuffles
     re-fattening with payload columns (dedup/LSH family), lost
     broadcast decisions, and lost exchange reuse — the regressions
     wall-clock noise hides."""
-    from bench import (
-        _force,
-        _shuffle_mb_since,
-        _stage_cursor,
-        _stage_frontier,
-    )
     from stock_market_etl_spark.catalog import all_queries
+    from tools.profile_query import (
+        force,
+        shuffle_mb,
+        stage_frontier,
+        stage_rows,
+    )
 
     queries = all_queries()
     failures = []
     # seed past whatever the shared test session already ran — its
     # oldest stages may be evicted from the status store, and a 0 seed
     # stops at the first evicted id, misreading every query as 0 MB
-    cursor = _stage_frontier(spark)
+    cursor = stage_frontier(spark)
     for name, pin in SHUFFLE_MB_PINS.items():
         spark.catalog.clearCache()
-        cursor = _stage_cursor(spark, cursor)
-        _force(queries[name](spark, "/root/testdata/sf0.1"))
-        mb = _shuffle_mb_since(spark, cursor)
-        if mb is None:
-            failures.append(f"{name}: shuffle metric unavailable")
-        elif not (0.5 * pin <= mb <= 1.6 * pin):
+        # floored: a momentarily-empty job list reads as frontier 0
+        cursor = max(cursor, stage_frontier(spark))
+        force(queries[name](spark, "/root/testdata/sf0.1"))
+        mb = shuffle_mb(stage_rows(spark, cursor))
+        if not (0.5 * pin <= mb <= 1.6 * pin):
             failures.append(f"{name}: {mb} MB outside [0.5, 1.6]x {pin}")
     assert not failures, failures

@@ -3899,7 +3899,7 @@ def test_embedding_ann_release_lifecycle(spark, sf_smoke, tmp_path):
     v2 = str(tmp_path / "vec_r2")
     sim.publish_embedding_index(merged_v, v2, built_dim)
     idx2, dim2 = sim.read_embedding_index(spark, v2)
-    r2_vecs = sim._checked_unit_vectors(r2, dim2, "vec_id", "embedding")
+    r2_vecs = sim._checked_unit_vectors(r2, dim2)
     merged_b = sim.merge_lsh_buckets(bk1, r2_vecs, params)
     b2 = str(tmp_path / "bkt_r2")
     sim.publish_lsh_buckets(merged_b, b2, params)
@@ -3969,7 +3969,7 @@ def test_publish_lsh_buckets_meta_failure_cleans_data(
     from stock_market_etl_spark.operators import artifacts, similarity as sim
 
     emb = load_table(spark, sf_smoke, "embeddings").limit(20)
-    idx = sim._checked_unit_vectors(emb, 64, "vec_id", "embedding")
+    idx = sim._checked_unit_vectors(emb, 64)
     bk = sim.merge_lsh_buckets(
         idx.select("vec_id", "__v").limit(0).selectExpr(
             "vec_id", "cast(null as int) lsh_table",
@@ -4015,7 +4015,7 @@ def test_publish_embedding_index_meta_failure_cleans_data(
     from stock_market_etl_spark.operators import artifacts, similarity as sim
 
     emb = load_table(spark, sf_smoke, "embeddings").limit(20)
-    idx = sim._checked_unit_vectors(emb, 64, "vec_id", "embedding")
+    idx = sim._checked_unit_vectors(emb, 64)
     path = str(tmp_path / "emb_release")
 
     def boom(spark_, path_, *a, **kw):

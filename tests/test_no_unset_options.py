@@ -1,6 +1,6 @@
 """Unset-option guard: every defaulted parameter of a public top-level
 package function must be set by at least one call site in the repo
-(the package, ``tests/``, ``perfbench/``, ``tools/``, ``bench.py``,
+(the package, ``tests/``, ``perfbench/``, ``tools/``,
 ``__spark_entry__.py``). A parameter no caller ever sets has one value
 in use, so it is a constant that doubles the configurations to cover
 without any run ever exercising the other half; write the constant.
@@ -20,7 +20,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "stock_market_etl_spark"
 CALLER_DIRS = ("stock_market_etl_spark", "tests", "perfbench", "tools")
-CALLER_FILES = ("bench.py", "__spark_entry__.py")
+CALLER_FILES = ("__spark_entry__.py",)
 
 #: (module, function, parameter) -> why it stays a parameter anyway
 EXEMPT = {

@@ -1474,9 +1474,7 @@ def test_embedding_ann_artifact_matches_inline(spark, rows):
         merged_v = sim.merge_embedding_index(idx1, r2, built_dim)
         sim.publish_embedding_index(merged_v, f"{work}/v2", built_dim)
         idx2, dim2 = sim.read_embedding_index(spark, f"{work}/v2")
-        r2_vecs = sim._checked_unit_vectors(
-            r2, dim2, "vec_id", "embedding"
-        )
+        r2_vecs = sim._checked_unit_vectors(r2, dim2)
         merged_b = sim.merge_lsh_buckets(bk1, r2_vecs, params)
         sim.publish_lsh_buckets(merged_b, f"{work}/b2", params)
         bk2, params2 = sim.read_lsh_buckets(spark, f"{work}/b2")
